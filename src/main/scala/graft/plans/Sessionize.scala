@@ -122,7 +122,7 @@ object Sessionize {
     def attrOf(name: String): Attribute = child.output.find(_.name == name)
       .getOrElse(sys.error(s"Sessionize: no column '$name' in ${child.output.map(_.name)}"))
     val sessionAttr = AttributeReference("session_idx", LongType, nullable = false)()
-    org.apache.spark.sql.graft.Bridge.ofRows(spark,
+    org.apache.spark.sql.graft.SqlBridge.ofRows(spark,
       SessionizeNode(keyCols.map(attrOf), attrOf(tsCol),
         gapMinutes * 60L * 1000000L, sessionAttr, child))
   }

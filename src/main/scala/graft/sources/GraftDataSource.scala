@@ -44,27 +44,22 @@ import graft.write.{SnapshotScanSpec, SnapshotTable}
   * for fresh tables with a non-default layout and pre-recording
   * history, and a wrong value fails loudly at parse).
   *
-  * TWO read paths, chosen per resolved snapshot:
+  * ONE read path: the format resolves the snapshot (version, tag,
+  * timestamp or branch head) and takes the scan the table's read
+  * selector chooses — the same one [[SnapshotTable.read]] and the commit
+  * paths get:
   *
-  *  - FAST (the 100 TB path): when every data dir is hive-partitioned
-  *    with one agreed schema sidecar and no merge-on-read deletes are
-  *    pending, the snapshot is served as a [[HadoopFsRelation]] over a
-  *    [[SnapshotFileIndex]] — a real `FileSourceScanExec` with
-  *    vectorized parquet, pushed data filters, AND partition pruning
-  *    evaluated against the snapshot's own file listing (exclusion
-  *    masks are applied at listing time, so a masked partition's files
-  *    are never even candidates). Where dirs carry min/max stats
-  *    indexes (commit-time or [[SnapshotTable.buildStatsIndex]]), data
-  *    filters additionally prune FILES at planning — the
-  *    [[SnapshotTable.readSkipping]] capability, reached from SQL.
-  *    `.explain` shows `PartitionFilters` / `PushedFilters` exactly as
-  *    for a plain parquet table.
-  *  - GENERAL: merge-on-read deletes, flat/clustered dirs, or
-  *    heterogeneous (evolved) sidecars fall back to a
-  *    [[PrunedFilteredScan]] over the engine's own read path
-  *    ([[SnapshotTable.readVersion]]), with source filters translated
-  *    to Columns so pushdown still reaches the inner parquet scans —
-  *    correct always, merely without the single-scan plan shape.
+  *  - a [[HadoopFsRelation]] over a [[SnapshotFileIndex]] ([[fastIndex]])
+  *    when every dir is hive-partitioned, the sidecars unify additively,
+  *    no merge-on-read deletes are pending and no column-mapping op
+  *    would change a dir — a real `FileSourceScanExec` with vectorized
+  *    parquet, pushed data filters, partition pruning against the
+  *    snapshot's own listing (masked partitions' files are never even
+  *    candidates) and, where dirs carry min/max stats indexes, FILE
+  *    pruning at planning ([[SnapshotTable.readSkipping]] from SQL);
+  *  - otherwise the per-entry fold, wrapped in [[GraftSnapshotRelation]]
+  *    with source filters translated so pushdown still reaches the
+  *    inner parquet scans — correct always, without the single scan.
   *
   * Design note — why DSv1 `RelationProvider` + `HadoopFsRelation`
   * rather than a DSv2 `TableProvider`: a DSv2 implementation must
@@ -82,9 +77,7 @@ import graft.write.{SnapshotScanSpec, SnapshotTable}
   * with `GraftExtensions` — literal SQL lowered onto the commit
   * protocol — and by read options + the Scala commit API otherwise.
   *
-  * Column order note: the fast path emits data columns first, partition
-  * columns last (the hive-read convention); select by name, not
-  * position — same contract as every hive-partitioned round-trip.
+  * Both carry [[SnapshotTable.read]]'s column order.
   * Freshness note: a table registered in the session catalog caches its
   * resolved relation like any file-based source — after an external
   * commit, `REFRESH TABLE` picks up the new version (DataFrame reads
@@ -167,7 +160,6 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
     val spark = sqlContext.sparkSession
     val root = parameters.getOrElse("path",
       sys.error("readStream.format(\"graft\") needs a path: .load(<table root>)"))
-    val partCols = GraftDataSource.resolvePartCols(spark, root, parameters)
     val t = GraftDataSource.openTable(spark, root, parameters)
     val cur = t.currentVersion.getOrElse(sys.error(
       s"no snapshot at $root — the streaming source needs an existing table"))
@@ -233,7 +225,6 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
     val spark = sqlContext.sparkSession
     val root = parameters.getOrElse("path",
       sys.error("format(\"graft\") needs a path: .save(<table root>)"))
-    val partCols = GraftDataSource.resolvePartCols(spark, root, parameters)
     require(!parameters.keySet.exists(Set("versionAsOf", "timestampAsOf",
         "tag", "metadata", "changelogFrom", "incrementalFrom")),
       "versionAsOf/timestampAsOf/tag/metadata/changelogFrom/incrementalFrom " +
@@ -275,10 +266,9 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
     val spark = sqlContext.sparkSession
     val root = parameters.getOrElse("path",
       sys.error("format(\"graft\") needs a path: .load(<table root>)"))
-    val partCols = GraftDataSource.resolvePartCols(spark, root, parameters)
     val t = GraftDataSource.openTable(spark, root, parameters)
     // metadata tables (Iceberg's tbl.history/refs idea as an option):
-    // introspection frames served through the general relation — tiny,
+    // introspection frames served through [[GraftSnapshotRelation]] — tiny,
     // driver-built, no file scan
     // ONE snapshot selector at a time, checked up front so no
     // combination silently wins over another (a changelog read with a
@@ -360,7 +350,7 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
     // CDC surfaces: the row-level changelog between two versions, or the
     // appended rows along an append-only chain (O(new data)) — the
     // format's incremental-read options, Iceberg's changelog scan /
-    // incremental read shape. Served via the general relation: both are
+    // incremental read shape. Served via [[GraftSnapshotRelation]]: both are
     // derived frames (exceptAll diff / multi-dir union), not a listing.
     def currentV = t.currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
     for (k <- Seq("changelogTo", "incrementalTo"))
@@ -375,8 +365,8 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
       return new GraftSnapshotRelation(spark, t.appendsBetween(f.trim.toInt,
         parameters.get("incrementalTo").map(_.trim.toInt).getOrElse(currentV)))
     }
-    val (spec, general) = parameters.get("branch") match {
-      case Some(b) => (t.scanSpecBranch(b), () => t.readBranch(b))
+    val scan = parameters.get("branch") match {
+      case Some(b) => t.scanBranch(b)
       case None =>
         val v = parameters.get("versionAsOf").map(_.trim.toInt)
           .orElse(parameters.get("timestampAsOf").map { raw =>
@@ -388,21 +378,9 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
             .getOrElse(sys.error(s"no tag '$tag' at $root"))))
           .getOrElse(t.currentVersion
             .getOrElse(sys.error(s"no snapshot at $root")))
-        (t.scanSpecVersion(v), () => t.readVersion(v))
+        t.scanVersion(v)
     }
-    // Nullability is reported as NULLABLE everywhere — Spark's own
-    // convention for file-based relations. Sidecars record whatever the
-    // writing frame declared (a local Seq-built frame says NOT NULL, a
-    // parquet-round-tripped rewrite says nullable), so a catalog entry
-    // pinned at CREATE time would otherwise mismatch the relation after
-    // the first copy-on-write commit and break resolution.
-    GraftDataSource.fastIndex(spark, spec, partCols) match {
-      case Some((index, dataSchema)) =>
-        HadoopFsRelation(index, GraftDataSource.nullable(index.partitionSchema),
-          GraftDataSource.nullable(dataSchema), None, new ParquetFileFormat,
-          parameters)(spark)
-      case None => new GraftSnapshotRelation(spark, general())
-    }
+    scan.fold[BaseRelation](identity, new GraftSnapshotRelation(spark, _))
   }
 }
 
@@ -412,26 +390,34 @@ object GraftDataSource {
   private[sources] def nullable(s: StructType): StructType =
     StructType(s.map(_.copy(nullable = true)))
 
-  /** Build the fast-path file index iff the snapshot qualifies: no
-    * pending deletes, sidecar schemas that unify additively (see
-    * [[unifySchemas]] — identical, or later eras strictly ADD columns),
-    * every partition column present, and strictly hive-layout dirs.
-    * Returns the index (carrying the partition schema) plus the data
-    * schema, or None → general path. */
-  private[sources] def fastIndex(spark: SparkSession, spec: SnapshotScanSpec,
-                                 partCols: Seq[String]): Option[(SnapshotFileIndex, StructType)] = {
+  /** The single-scan relation over the snapshot's file index, iff the
+    * snapshot qualifies: no pending deletes, sidecar schemas that unify
+    * additively (see [[unifySchemas]] — identical, or later eras
+    * strictly ADD columns), every partition column present, and
+    * strictly hive-layout dirs. None → the read selector folds per
+    * entry. Called only by that selector
+    * ([[graft.write.SnapshotTable]]'s `scan`).
+    *
+    * Nullability is reported as NULLABLE everywhere — Spark's own
+    * convention for file-based relations. Sidecars record whatever the
+    * writing frame declared (a local Seq-built frame says NOT NULL, a
+    * parquet-round-tripped rewrite says nullable), so a catalog entry
+    * pinned at CREATE time would otherwise mismatch the relation after
+    * the first copy-on-write commit and break resolution. */
+  private[graft] def fastIndex(spark: SparkSession, spec: SnapshotScanSpec,
+                               partCols: Seq[String]): Option[HadoopFsRelation] = {
     if (spec.hasDeletes || spec.dirs.isEmpty) return None
     val ddls = spec.dirs.map(_.schemaDdl)
     if (ddls.exists(_.isEmpty)) return None
+    val dirSchemas = ddls.map(d => StructType.fromDDL(d.get))
     // a live column-mapping op (rename/drop/widen/add) whose read-time
-    // fold would CHANGE any dir's physical schema needs the per-dir
-    // folding general path; once compaction rewrites the files under
+    // fold would CHANGE any dir's physical schema needs the per-entry
+    // fold; once compaction rewrites the files under
     // the logical names and types (and clears the history), the file
     // index serves again. The check mirrors the fold exactly: only
     // ops AFTER the dir's recorded era, each guarded on presence.
     import graft.write.SnapshotTable.{ColRename, ColDrop, ColWiden, ColAdd}
-    val foldTouches = spec.dirs.exists { d =>
-      val s = StructType.fromDDL(d.schemaDdl.get)
+    val foldTouches = spec.dirs.zip(dirSchemas).exists { case (d, s) =>
       spec.colOps.drop(d.era).exists {
         case ColRename(f, _) => s.fieldNames.contains(f)
         case ColDrop(n) => s.fieldNames.contains(n)
@@ -441,14 +427,23 @@ object GraftDataSource {
       }
     }
     if (foldTouches) return None
-    val schemas = ddls.flatten.distinct.map(StructType.fromDDL)
-    val full = unifySchemas(schemas).getOrElse(return None)
+    val full = unifySchemas(dirSchemas.distinct).getOrElse(return None)
     if (!partCols.forall(full.fieldNames.contains)) return None
-    val partitionSchema = StructType(partCols.map(c => full(full.fieldIndex(c))))
-    val dataSchema = StructType(full.filterNot(f => partCols.contains(f.name)))
-    SnapshotFileIndex.list(spark, spec, partitionSchema)
-      .map(leaves =>
-        (new SnapshotFileIndex(spark, spec, partitionSchema, leaves), dataSchema))
+    val partitionSchema = StructType(partCols.map(c => full(c)))
+    // the per-entry fold's column order: a hive dir reads as its data
+    // columns then its partition columns, and unionByName appends each
+    // later era's new columns. Partition columns followed by such a
+    // column stay IN the data schema — HadoopFsRelation serves an
+    // overlapping partition column at its data-schema position
+    val order = dirSchemas.flatMap(s =>
+      s.fieldNames.filterNot(partCols.contains) ++ partCols).distinct
+    val dataSchema = StructType(
+      (if (order.endsWith(partCols)) order.dropRight(partCols.size) else order)
+        .map(full(_)))
+    SnapshotFileIndex.list(spark, spec, partitionSchema).map(leaves =>
+      HadoopFsRelation(new SnapshotFileIndex(spark, spec, partitionSchema, leaves),
+        nullable(partitionSchema), nullable(dataSchema), None,
+        new ParquetFileFormat, Map.empty[String, String])(spark))
   }
 
   /** ADDITIVE schema unification — the common long-lived-table shape
@@ -459,7 +454,7 @@ object GraftDataSource {
     * exactly `unionByName(allowMissingColumns)`'s typed-null padding,
     * with zero footer reads. Anything non-additive (a type change, two
     * eras each carrying a column the other lacks) returns None →
-    * general path, which is always correct. */
+    * per-entry fold, which is always correct. */
   private[graft] def unifySchemas(schemas: Seq[StructType]): Option[StructType] = {
     val widest = schemas.maxBy(_.size)
     val ok = schemas.forall(_.forall(f =>
@@ -532,7 +527,7 @@ object GraftDataSource {
   }
 
   /** `org.apache.spark.sql.sources.Filter` → Column, recursively — the
-    * DSv1 pushdown bridge for the general path. Untranslatable filters
+    * DSv1 pushdown bridge for [[GraftSnapshotRelation]]. Untranslatable filters
     * return None and are simply not pushed (Spark re-applies every
     * filter on top of a DSv1 scan, so this is a performance choice,
     * never a correctness one). */
@@ -802,7 +797,7 @@ private[sources] object SnapshotFileIndex {
   /** Walk every data dir's hive tree (`partCol=value` levels, one per
     * partition column), returning the leaf listing — or None if ANY dir
     * deviates from the layout (flat/clustered commit styles), which
-    * sends the relation down the general path. Excluded partition
+    * sends the read down the per-entry fold. Excluded partition
     * tuples (dynamic-overwrite masks) are dropped here, so a masked
     * partition's files never reach the scan at all. */
   def list(spark: SparkSession, spec: SnapshotScanSpec,
@@ -877,10 +872,10 @@ private[sources] object SnapshotFileIndex {
     }
 }
 
-/** The `graft` format's GENERAL path: any snapshot the file-listing
-  * relation cannot express (merge-on-read deletes, clustered/flat dirs,
-  * evolved per-dir schemas) served through the engine's own read path,
-  * with DSv1 source filters translated back to Columns so predicate
+/** The `graft` format's relation over a derived frame: the read
+  * selector's per-entry fold (any snapshot the file-listing relation
+  * cannot express), a metadata table, a changelog or an incremental
+  * read — with DSv1 source filters translated back to Columns so predicate
   * pushdown and column pruning still reach the INNER parquet scans via
   * Catalyst. `needConversion = false` + `toRdd`: rows flow through as
   * InternalRow with zero per-row conversion. */

@@ -292,16 +292,13 @@ object GraftSqlSupport {
     val after = t.read().schema
     val extra = after.fields.filterNot(f =>
       ct.schema.fieldNames.exists(_.equalsIgnoreCase(f.name)))
-    if (extra.nonEmpty) {
-      // the relation serves DATA columns first and partition columns
-      // last, with new data columns after the existing ones — mirror
-      // that order or Spark refuses the schema as mismatched
-      val partNames = t.partitionColumns.map(_.toLowerCase).toSet
-      val (partF, dataF) = ct.schema.fields.partition(f =>
-        partNames(f.name.toLowerCase))
+    // the relation serves the table's read order, in which a later
+    // era's new columns follow every existing one — mirror that order
+    // or Spark refuses the schema as mismatched. An empty catalog
+    // schema is inferred per read and needs no sync.
+    if (extra.nonEmpty && ct.schema.nonEmpty)
       session.sessionState.catalog.alterTable(ct.copy(schema =
-        org.apache.spark.sql.types.StructType(dataF ++ extra ++ partF)))
-    }
+        org.apache.spark.sql.types.StructType(ct.schema.fields ++ extra)))
   }
 
   /** The alias/table names a MERGE clause may use to qualify a plan's

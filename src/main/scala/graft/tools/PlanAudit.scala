@@ -106,6 +106,13 @@ object PlanAudit {
     sb.append("pinned as build failures in `ScaleToolsSpec`, and `PlanAuditSpec`\n")
     sb.append("re-renders this whole document in-suite — a stale doc (any plan\n")
     sb.append("shape drifting from what is committed here) fails the build.\n")
+    // catalog tables (the bucketed join's) render their location under
+    // the session's warehouse root, which is wherever the checkout is —
+    // masked like the JVM-global IDs, so the doc is checkout-independent
+    val warehouse = {
+      val p = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
+    }
     audited.foreach { case (name, note) =>
       // the bucketed-join entry renders the AT-SCALE shape: with fixture
       // stats the planner broadcasts the small side, which hides exactly
@@ -126,7 +133,8 @@ object PlanAudit {
       // rendering, or a real plan change would hide in the diff
       val plan = normalizeIds(plan0.replaceAll(
         "\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}\\.\\d+" +
-          "(?= AS (?:loaded_at|created_at))", "<generated-at>"))
+          "(?= AS (?:loaded_at|created_at))", "<generated-at>")
+        .replace(warehouse, "<warehouse>"))
       sb.append(s"\n## $name\n\n$note\n\n```\n$plan```\n")
       graft.TransientCache.drain()
     }

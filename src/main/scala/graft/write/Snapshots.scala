@@ -414,8 +414,8 @@ class SnapshotTable(spark: SparkSession, root: String,
   // at 100 TB is millions of object-store reads per query. Dirs without
   // a sidecar (pre-sidecar history, purge twins from older binaries)
   // fall back to mergeSchema: always correct, just slower. Schema
-  // EVOLUTION still happens across dirs via unionByName, exactly as
-  // before — the sidecar only replaces within-dir inference. ----
+  // EVOLUTION across dirs is the read selector's ([[scan]]): the
+  // sidecars' additive union, or unionByName in the per-entry fold. ----
 
   /** Resolve an entry's dir token to its data location. Plain names
     * live under this table's `_data`; an ABSOLUTE URI is a BORROWED
@@ -529,18 +529,27 @@ class SnapshotTable(spark: SparkSession, root: String,
     if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
   }
 
-  private def readDir(dir: String): DataFrame = {
+  /** A dir's recorded schema sidecar DDL, if any — the one sidecar
+    * reader (scan specs and single-dir reads both come through here). */
+  private def schemaDdl(dir: String): Option[String] = {
     val sp = schemaSidecarPath(dir)
-    val dataP = dirPath(dir).toString
-    if (fs.exists(sp)) {
+    if (!fs.exists(sp)) None
+    else {
       val in = fs.open(sp)
-      val ddl =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        .parquet(dataP)
-    } else spark.read.option("mergeSchema", "true").parquet(dataP)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+      finally in.close()
+    }
   }
+
+  /** One data dir as a plain parquet scan: planned under its recorded
+    * schema (zero footer reads), or schema-merged for pre-sidecar dirs. */
+  private def scanDir(path: String, ddl: Option[String]): DataFrame =
+    ddl.fold(spark.read.option("mergeSchema", "true").parquet(path))(d =>
+      spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(d))
+        .parquet(path))
+
+  private def readDir(dir: String): DataFrame =
+    scanDir(dirPath(dir).toString, schemaDdl(dir))
 
   /** Parse the manifest a COMMIT is being computed against. A
     * concurrent count-based [[expire]] can delete the just-read head's
@@ -876,7 +885,7 @@ class SnapshotTable(spark: SparkSession, root: String,
       // prior MOR deletes carry: the rewrite materialized them only for
       // the TOUCHED partitions; untouched partitions still rely on them
       commit("merge",
-        mergePlan(readVersion(base), pm.entries, batch, keyCols, base + 1),
+        mergePlan(snapshot(pm), pm.entries, batch, keyCols, base + 1),
         base, pm.deletes, pm.predDeletes)
     }
   }
@@ -987,7 +996,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     require(clauses.nonEmpty, "commitMergeGeneral needs at least one WHEN clause")
     val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
     val pm = parseForCommit(base)
-    val cur = readVersion(base)
+    val cur = snapshot(pm)
     require(cur.columns.forall(!_.startsWith(SnapshotTable.SrcPrefix)),
       s"table columns may not start with the reserved merge prefix " +
         s"'${SnapshotTable.SrcPrefix}' (they would collide with the " +
@@ -1212,7 +1221,8 @@ class SnapshotTable(spark: SparkSession, root: String,
     * through for the untouched entries, same as [[commitMerge]]. */
   def commitDelete(condition: org.apache.spark.sql.Column): Int = {
     val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val cur = readVersion(base)
+    val pm = parseForCommit(base)
+    val cur = snapshot(pm)
     val cond = coalesce(condition, lit(false))
     // touched partitions: one column-pruned pass (the scan reads only
     // partCols + the condition's columns), driver holds partition
@@ -1229,7 +1239,6 @@ class SnapshotTable(spark: SparkSession, root: String,
     // partitions with survivors need the rewrite; fully-deleted ones
     // are metadata-only (mask, no bytes moved)
     val partial = partTuples(kept)
-    val pm = parseForCommit(base)
     val prev = pm.entries.map(e => e.copy(excluded = e.excluded ++ profile))
     val entries =
       if (partial.isEmpty) prev // whole partitions gone: zero data movement
@@ -1280,7 +1289,8 @@ class SnapshotTable(spark: SparkSession, root: String,
     require(assignments.map(_._1).distinct.size == assignments.size,
       s"duplicate SET column among (${assignments.map(_._1).mkString(", ")})")
     val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val cur = readVersion(base)
+    val pm = parseForCommit(base)
+    val cur = snapshot(pm)
     val byName = assignments.toMap
     assignments.foreach { case (c, _) =>
       require(cur.columns.contains(c),
@@ -1303,7 +1313,6 @@ class SnapshotTable(spark: SparkSession, root: String,
         .map(a => when(cond, a.cast(f.dataType)).otherwise(col(f.name)).as(f.name))
         .getOrElse(col(f.name))
     }.toIndexedSeq: _*)
-    val pm = parseForCommit(base)
     val prev = pm.entries.map(e => e.copy(excluded = e.excluded ++ profile))
     commit("update", prev :+ Entry(writeData(updated, base + 1), Set.empty),
       base, pm.deletes, pm.predDeletes)
@@ -1331,7 +1340,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     // fail-fasts (an unresolvable predicate dies here, at commit, not
     // on every future read) and yields canonical, re-parseable SQL.
     // Analysis only; nothing executes.
-    val analyzed = readVersion(base).filter(condition).queryExecution.analyzed
+    val analyzed = snapshot(m).filter(condition).queryExecution.analyzed
     val sql = analyzed.collectFirst {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.sql
     }.getOrElse(sys.error("delete predicate did not analyze to a Filter"))
@@ -1380,8 +1389,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     // recorded era (the op list only grows along a valid append chain,
     // so toV's list extends every appended dir's)
     val tm = parse(toV)
-    newDirs.map(e => applyColOps(readDir(e.dir), opsSince(tm, e.era)))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    snapshot(tm.copy(entries = newDirs, deletes = Seq.empty, predDeletes = Seq.empty))
   }
 
   /** Run a commit with bounded conflict retries — the loser's side of
@@ -1603,23 +1611,8 @@ class SnapshotTable(spark: SparkSession, root: String,
     * `v` — stats indexes live per immutable data dir, so every retained
     * version prunes with the same indexes its dirs were committed (or
     * post-hoc built) with. */
-  def readSkippingVersion(v: Int, clusterCol: String): DataFrame = {
-    val m = parse(v)
-    require(m.entries.nonEmpty, s"v$v at $root is an empty snapshot")
-    m.entries.zipWithIndex.map { case (e, i) =>
-      val dataP = dirPath(e.dir).toString
-      val sp = statsPath(e.dir, clusterCol)
-      val raw =
-        if (fs.exists(sp))
-          graft.sources.DataSkipping.read(spark, dataP, clusterCol, sp.toString)
-        else spark.read.option("mergeSchema", "true").parquet(dataP)
-      // column-mapping fold: a dir whose stats index predates a rename
-      // of clusterCol simply misses the index (reads plain, still
-      // correct); compaction rebuilds under the current names
-      val df = applyColOps(raw, opsSince(m, e.era))
-      applyDeletes(m, i, excludePred(e).fold(df)(p => df.filter(!p)))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
+  def readSkippingVersion(v: Int, clusterCol: String): DataFrame =
+    snapshot(parse(v), Some(clusterCol))
 
   /** Build the per-file min/max stats index on `column` for every data
     * dir of the CURRENT snapshot that lacks one — the post-hoc indexing
@@ -1679,10 +1672,12 @@ class SnapshotTable(spark: SparkSession, root: String,
     * plus the staged rows — what the audit step queries. Readable even
     * before any commit exists (a first-load audit). */
   def readWithStaged(stagedDir: String): DataFrame = {
-    val staged = readDir(stagedDir)
-    currentVersion.map(readVersion)
-      .map(_.unionByName(staged, allowMissingColumns = true))
-      .getOrElse(staged)
+    // the staged dir joins as the last entry, written under the current
+    // column mapping (stageAppend conforms it) and after every pending
+    // delete's scope — exactly what publishStaged would commit
+    val m = currentVersion.map(parse)
+      .getOrElse(Manifest(0, 0, "staged", Seq.empty))
+    snapshot(m.copy(entries = m.entries :+ Entry(stagedDir, Set.empty, m.colOps.size)))
   }
 
   /** Publish a staged dir as a real append commit — zero data movement
@@ -1735,7 +1730,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     val m = parseForCommit(base)
     require(!m.constraints.exists(_._1 == name),
       s"constraint '$name' already exists on $root (drop it first)")
-    val cur = readVersion(base)
+    val cur = snapshot(m)
     // canonicalize exactly as MOR predicate deletes do: analyze, take
     // the resolved Filter's condition, require single-line, re-parse
     val analyzed = cur.filter(expr(checkSql)).queryExecution.analyzed
@@ -1783,7 +1778,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     * constraints and retained MOR predicate deletes are stored as SQL
     * over the era's names and are NOT rewritten — refuse instead. */
   private def referencedByStoredSql(m: Manifest, colName: String): Boolean = {
-    val cur = readVersion(m.version)
+    val cur = snapshot(m)
     (m.constraints.map(_._2) ++ m.predDeletes.map(_.sql)).exists { sql =>
       cur.filter(expr(sql)).queryExecution.analyzed.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
@@ -1815,7 +1810,7 @@ class SnapshotTable(spark: SparkSession, root: String,
       s"column name must be [A-Za-z0-9_]+: '$n'"))
     val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
     val m = parseForCommit(base)
-    val schema = readVersion(base).columns.toSet
+    val schema = snapshot(m).columns.toSet
     require(schema.contains(from), s"no column '$from' to rename " +
       s"(have: ${schema.toSeq.sorted.mkString(", ")})")
     require(!schema.contains(to),
@@ -1836,7 +1831,7 @@ class SnapshotTable(spark: SparkSession, root: String,
       s"column name must be [A-Za-z0-9_]+: '$name'")
     val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
     val m = parseForCommit(base)
-    val schema = readVersion(base).columns.toSet
+    val schema = snapshot(m).columns.toSet
     require(schema.contains(name), s"no column '$name' to drop " +
       s"(have: ${schema.toSeq.sorted.mkString(", ")})")
     require(schema.size > 1, "cannot drop the last data column")
@@ -1871,7 +1866,7 @@ class SnapshotTable(spark: SparkSession, root: String,
       s"duplicate column among (${cols.map(_._1).mkString(", ")})")
     val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
     val m = parseForCommit(base)
-    val cur = readVersion(base)
+    val cur = snapshot(m)
     cols.foreach { case (name, _) =>
       require(!cur.columns.contains(name), s"column '$name' already exists")
     }
@@ -1947,7 +1942,7 @@ class SnapshotTable(spark: SparkSession, root: String,
       s"column name must be [A-Za-z0-9_]+: '$name'")
     val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
     val m = parseForCommit(base)
-    val cur = readVersion(base)
+    val cur = snapshot(m)
     require(cur.columns.contains(name), s"no column '$name' to widen " +
       s"(have: ${cur.columns.sorted.mkString(", ")})")
     require(!partCols.contains(name),
@@ -2131,11 +2126,11 @@ class SnapshotTable(spark: SparkSession, root: String,
   def branchHead(name: String): Option[Int] = vp.branchHead(name)
 
   /** The branch's current state. */
-  def readBranch(name: String): DataFrame = {
-    val head = branchHead(name)
-      .getOrElse(sys.error(s"no branch '$name' at $root"))
-    readManifest(parseBranch(name, head))
-  }
+  def readBranch(name: String): DataFrame = snapshot(parseBranchHead(name))
+
+  private def parseBranchHead(name: String): Manifest =
+    parseBranch(name, branchHead(name)
+      .getOrElse(sys.error(s"no branch '$name' at $root")))
 
   /** The branch commit point, shared by every branch write shape: parse
     * the head, build the next manifest's entries from it, publish with
@@ -2186,7 +2181,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     require(keyCols.nonEmpty, "commitMergeToBranch needs at least one key column")
     withUniqueKeyed(batch0, keyCols, "commitMergeToBranch") { batch =>
       commitToBranch(name, "branch_merge") { (pm, next) =>
-        mergePlan(readManifest(pm), pm.entries, batch, keyCols, next)
+        mergePlan(snapshot(pm), pm.entries, batch, keyCols, next)
       }
     }
   }
@@ -2318,23 +2313,66 @@ class SnapshotTable(spark: SparkSession, root: String,
   def read(): DataFrame =
     readVersion(currentVersion.getOrElse(sys.error(s"no snapshot at $root")))
 
-  /** Time travel: the table exactly as of version `v`. Each data dir is
-    * read with its own partition discovery; exclusion predicates sit on
-    * partition columns so they prune directories at listing time, and
-    * `unionByName(allowMissingColumns)` lets appended batches evolve the
-    * schema with typed-null padding (raw-layer contract, see
-    * [[IncrementalWriter.readMerged]]). */
-  def readVersion(v: Int): DataFrame = {
-    val m = parse(v)
-    require(m.entries.nonEmpty, s"v$v is an empty snapshot")
-    readManifest(m)
+  /** Time travel: the table exactly as of version `v`. */
+  def readVersion(v: Int): DataFrame = snapshot(parse(v))
+
+  /** THE snapshot read selector — the Scala reads, the commit paths'
+    * current-state reads and the `graft` format all resolve a manifest
+    * to its scan here, from one [[SnapshotScanSpec]]: Left is the single
+    * `FileSourceScanExec` relation [[graft.sources.GraftDataSource.fastIndex]]
+    * builds (partition and min/max file pruning against the snapshot's
+    * own listing, masks applied there); Right is the per-entry [[fold]],
+    * only where that relation declines — pending merge-on-read deletes,
+    * a column-mapping op the fold would change, flat or clustered dirs,
+    * missing or non-additive sidecars. Both carry the fold's column
+    * order: the first entry's data then partition columns, then each
+    * later era's new columns. `skipOn` is [[readSkipping]]'s column. */
+  private def scan(m: Manifest, skipOn: Option[String] = None)
+      : Either[org.apache.spark.sql.execution.datasources.HadoopFsRelation, DataFrame] = {
+    require(m.entries.nonEmpty, s"v${m.version} at $root is an empty snapshot")
+    val spec = toScanSpec(m)
+    graft.sources.GraftDataSource.fastIndex(spark, spec, partCols)
+      .toLeft(fold(m, spec, skipOn))
   }
 
-  /** Union of the manifest's entries with masks AND merge-on-read
-    * deletes applied. Each delete suppresses key matches only in the
-    * entries that PRECEDED it (`appliesTo` — newer entries carry the
-    * keys' replacement rows); the anti-joins are key-frame-sized, so
-    * AQE broadcasts them, and a compaction commit clears them all. */
+  private def snapshot(m: Manifest, skipOn: Option[String] = None): DataFrame =
+    scan(m, skipOn).fold(spark.baseRelationToDataFrame, identity)
+
+  /** One scan per data dir — plain under its recorded schema, or through
+    * its stats index on `skipOn` when it has one — with masks, the
+    * column-mapping fold and merge-on-read deletes applied, unioned by
+    * name (typed-null padding, see [[IncrementalWriter.readMerged]]).
+    * Each delete suppresses key matches only in the entries that
+    * PRECEDED it (`appliesTo` — newer entries carry the replacement
+    * rows); its key frame is built once per read and, key-frame-sized,
+    * broadcasts under AQE until a compaction clears the debt. */
+  private def fold(m: Manifest, spec: SnapshotScanSpec,
+                   skipOn: Option[String]): DataFrame = {
+    // key frames fold too: a delete committed before a rename stores
+    // its keys under the era's names; the anti-join must see them
+    // under the same logical names as the data side
+    val keyFrames = m.deletes.map(d =>
+      d -> applyColOps(readDir(d.dir), opsSince(m, d.era)))
+    m.entries.zip(spec.dirs).zipWithIndex.map { case ((e, d), i) =>
+      val raw = skipOn.flatMap(c => d.stats.find(_._1 == c)) match {
+        case Some((c, stats)) =>
+          graft.sources.DataSkipping.read(spark, d.path, c, stats)
+        case None => scanDir(d.path, d.schemaDdl)
+      }
+      val df = applyColOps(raw, opsSince(m, e.era))
+      val masked = excludePred(e).fold(df)(p => df.filter(!p))
+      val keyed = keyFrames.filter(_._1.appliesTo > i).foldLeft(masked) {
+        case (acc, (k, keys)) => acc.join(keys, k.keyCols, "left_anti")
+      }
+      // predicate deletes are pure row filters (no join, no data dir):
+      // codegen'd into the scan stage, and the NOT-coalesce keeps rows
+      // where the predicate is NULL (delete only what provably matches)
+      m.predDeletes.filter(_.appliesTo > i).foldLeft(keyed) { (acc, p) =>
+        acc.filter(!coalesce(expr(p.sql), lit(false)))
+      }
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
   /** Apply the manifest's column-mapping history to one dir's frame:
     * each rename/drop fires only when the dir's PHYSICAL schema still
     * carries the old name — dirs written after the op already use the
@@ -2360,29 +2398,6 @@ class SnapshotTable(spark: SparkSession, root: String,
     * era -1 behaves as 0 — all ops, each guarded by column presence). */
   private def opsSince(m: Manifest, era: Int): Seq[SnapshotTable.ColOp] =
     m.colOps.drop(math.max(era, 0))
-
-  private def readManifest(m: Manifest): DataFrame =
-    m.entries.zipWithIndex.map { case (e, i) =>
-      val base = applyColOps(readDir(e.dir), opsSince(m, e.era))
-      val masked = excludePred(e).fold(base)(p => base.filter(!p))
-      applyDeletes(m, i, masked)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-
-  private def applyDeletes(m: Manifest, entryIdx: Int,
-                           df: DataFrame): DataFrame = {
-    // key frames fold too: a delete committed before a rename stores
-    // its keys under the era's names; the anti-join must see them
-    // under the same logical names as the data side
-    val keyed = m.deletes.filter(_.appliesTo > entryIdx).foldLeft(df) { (acc, d) =>
-      acc.join(applyColOps(readDir(d.dir), opsSince(m, d.era)), d.keyCols, "left_anti")
-    }
-    // predicate deletes are pure row filters (no join, no data dir):
-    // codegen'd into the scan stage, and the NOT-coalesce keeps rows
-    // where the predicate is NULL (delete only what provably matches)
-    m.predDeletes.filter(_.appliesTo > entryIdx).foldLeft(keyed) { (acc, p) =>
-      acc.filter(!coalesce(expr(p.sql), lit(false)))
-    }
-  }
 
   /** An entry's partition-exclusion mask as a predicate over the data
     * frame (disjunction of per-partition conjunctions), or None for an
@@ -3346,23 +3361,13 @@ class SnapshotTable(spark: SparkSession, root: String,
     problems.toSeq
   }
 
-  // ---- read-surface introspection for the `graft` DataSource format
-  // ([[graft.sources.GraftDataSource]]): the format's FAST path serves
-  // a snapshot as a file-listing relation (FileSourceScanExec with real
-  // partition pruning), which needs the resolved dir list + masks +
-  // sidecar schemas without going through DataFrame assembly. ----
+  // ---- read-surface introspection: the resolved dir list + masks +
+  // sidecar schemas + stats indexes, what [[scan]] chooses a scan from
+  // and the `graft` format's `files` metadata table lists. ----
 
   private def toScanSpec(m: Manifest): SnapshotScanSpec =
     SnapshotScanSpec(
       m.entries.map { e =>
-        val sp = schemaSidecarPath(e.dir)
-        val ddl =
-          if (!fs.exists(sp)) None
-          else {
-            val in = fs.open(sp)
-            try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-            finally in.close()
-          }
         val dirStats = statsDirPath(e.dir)
         val stats =
           if (!fs.exists(dirStats)) Seq.empty
@@ -3370,18 +3375,19 @@ class SnapshotTable(spark: SparkSession, root: String,
             .map(st => st.getPath.getName -> st.getPath.toString)
             .sortBy(_._1).toSeq
         SnapshotScanSpec.Dir(dirPath(e.dir).toString, e.excluded,
-          ddl, stats, math.max(e.era, 0))
+          schemaDdl(e.dir), stats, math.max(e.era, 0))
       },
       m.deletes.nonEmpty || m.predDeletes.nonEmpty,
       m.colOps)
 
   private[graft] def scanSpecVersion(v: Int): SnapshotScanSpec = toScanSpec(parse(v))
 
-  private[graft] def scanSpecBranch(name: String): SnapshotScanSpec =
-    toScanSpec(parseBranch(name, branchHead(name)
-      .getOrElse(sys.error(s"no branch '$name' at $root"))))
+  /** Version `v`'s scan as [[scan]] chooses it — the `graft` format's
+    * entry to the selector. */
+  private[graft] def scanVersion(v: Int) = scan(parse(v))
 
-  private[graft] def partitionColumns: Seq[String] = partCols
+  /** The branch head's scan as [[scan]] chooses it. */
+  private[graft] def scanBranch(name: String) = scan(parseBranchHead(name))
 
   /** Crash recovery: if an orphan manifest exists past CURRENT (a
     * writer died between manifest create and pointer flip), re-point
@@ -3401,20 +3407,20 @@ class SnapshotTable(spark: SparkSession, root: String,
   }
 }
 
-/** A resolved snapshot's physical read surface, handed to the `graft`
-  * DataSource format: one entry per data dir with its exclusion mask
-  * (partition-value tuples, string-rendered) and schema sidecar DDL, plus
-  * whether merge-on-read deletes are pending (which forces the format's
-  * general path — deletes are join/filter semantics a file listing cannot
-  * express). */
+/** A resolved snapshot's physical read surface, what
+  * [[SnapshotTable]]'s read selector chooses a scan from: one entry per
+  * data dir with its exclusion mask (partition-value tuples,
+  * string-rendered) and schema sidecar DDL, plus whether merge-on-read
+  * deletes are pending (which forces the per-entry fold — deletes are
+  * join/filter semantics a file listing cannot express). */
 private[graft] case class SnapshotScanSpec(dirs: Seq[SnapshotScanSpec.Dir],
                                            hasDeletes: Boolean,
                                            // the column-mapping history:
                                            // a dir whose sidecar still
                                            // carries a retired name or a
                                            // pre-widening type needs the
-                                           // read-time fold → general
-                                           // path, not the file index
+                                           // read-time fold, not the
+                                           // file index
                                            colOps: Seq[SnapshotTable.ColOp] = Seq.empty)
 
 private[graft] object SnapshotScanSpec {

@@ -4,17 +4,17 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The two Spark-internal calls the graft SQL rules
-  * ([[graft.sql.GraftSqlSupport]]) need — both `private[sql]`, both
-  * the standard externally-used shapes (every DSv1 table format's DML
-  * lowering does exactly these two things), reached through the same
-  * namespace technique as [[StreamingBridge]]:
+/** The two Spark-internal calls graft's custom plans need — both
+  * `private[sql]`, both the standard externally-used shapes (every
+  * DSv1 table format's DML lowering does exactly these two things),
+  * reached through the same namespace technique as [[StreamingBridge]]:
   *
-  *  - `Dataset.ofRows`: turn a parsed statement's source/query
-  *    [[LogicalPlan]] back into a [[DataFrame]] so a lowered MERGE /
-  *    INSERT command can hand it to the commit API (analysis runs
-  *    inside the command's own execution, not re-entrantly inside the
-  *    analyzer rule);
+  *  - `Dataset.ofRows`: turn a [[LogicalPlan]] back into a
+  *    [[DataFrame]] — a parsed statement's source/query, so a lowered
+  *    MERGE / INSERT command ([[graft.sql.GraftSqlSupport]]) can hand it
+  *    to the commit API (analysis runs inside the command's own
+  *    execution, not re-entrantly inside the analyzer rule), and a
+  *    custom logical node ([[graft.plans.Sessionize]]);
   *  - `ExpressionUtils.column`: wrap a catalyst [[Expression]] as a
   *    public [[Column]] so DML conditions/assignments rebuilt by name
   *    re-resolve against the table's read frame.

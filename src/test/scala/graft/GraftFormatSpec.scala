@@ -66,6 +66,88 @@ class GraftFormatSpec extends AnyFunSuite {
     assert(unifySchemas(Seq(d1, d2)).isEmpty)
   }
 
+  test("one read path: Scala reads and the format agree on rows, column order and scan shape") {
+    import spark.implicits._
+    type Reads = Seq[(String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
+    def fmt(root: String, opts: (String, String)*) =
+      spark.read.format("graft").options(opts.toMap).load(root)
+    def current(root: String, t: SnapshotTable): Reads =
+      Seq(("readVersion", t.readVersion(t.currentVersion.get), fmt(root)))
+    val base = frame((1, 2024, 1, 10.0), (2, 2024, 2, 20.0), (3, 2024, 3, 30.0))
+    val hiveOrder = Seq("id", "fare", "year", "month")
+    // (shape, reads, read()'s column order, served by one file scan)
+    val shapes: Seq[(String, () => (Reads, Seq[String], Boolean))] = Seq(
+      "plain hive" -> { () =>
+        val root = freshRoot("eq_plain"); val t = new SnapshotTable(spark, root)
+        t.commitOverwrite(base)
+        t.commitAppend(frame((4, 2024, 4, 40.0)))
+        (current(root, t), hiveOrder, true)
+      },
+      "masked partitions" -> { () =>
+        val root = freshRoot("eq_mask"); val t = new SnapshotTable(spark, root)
+        t.commitOverwrite(base)
+        t.commitOverwritePartitions(frame((9, 2024, 2, 99.0)))
+        (current(root, t), hiveOrder, true)
+      },
+      "additive evolution" -> { () =>
+        val root = freshRoot("eq_evo"); val t = new SnapshotTable(spark, root)
+        t.commitOverwrite(base)
+        t.commitAppend(frame((4, 2024, 4, 40.0)).withColumn("tip", lit(2.5)))
+        (current(root, t), hiveOrder :+ "tip", true)
+      },
+      "key deletes" -> { () =>
+        val root = freshRoot("eq_mor"); val t = new SnapshotTable(spark, root)
+        t.commitOverwrite(base)
+        t.commitMergeMor(frame((2, 2024, 2, 22.0), (5, 2024, 5, 50.0)), Seq("id"))
+        (current(root, t), hiveOrder, false)
+      },
+      "predicate deletes" -> { () =>
+        val root = freshRoot("eq_pdel"); val t = new SnapshotTable(spark, root)
+        t.commitOverwrite(base)
+        t.commitDeleteMor(col("fare") > 25.0)
+        (current(root, t), hiveOrder, false)
+      },
+      "live rename" -> { () =>
+        val root = freshRoot("eq_ren"); val t = new SnapshotTable(spark, root)
+        t.commitOverwrite(base)
+        t.renameColumn("fare", "fare_amt")
+        (current(root, t), Seq("id", "fare_amt", "year", "month"), false)
+      },
+      "clustered dir with stats" -> { () =>
+        val root = freshRoot("eq_clu"); val t = new SnapshotTable(spark, root)
+        t.commitOverwriteClustered((1 to 40).map(i => (i, 2024, i % 3 + 1, i * 1.0))
+          .toDF("id", "year", "month", "fare"), "id", nFiles = 4)
+        t.commitAppend(frame((41, 2024, 4, 41.0)))
+        (current(root, t) :+ (("readSkipping", t.readSkipping("id"), fmt(root))),
+          Seq("id", "year", "month", "fare"), false)
+      },
+      "branch head and tag" -> { () =>
+        val root = freshRoot("eq_refs"); val t = new SnapshotTable(spark, root)
+        val v1 = t.commitOverwrite(base)
+        t.tag("audited", v1)
+        t.commitAppend(frame((4, 2024, 4, 40.0)))
+        t.createBranch("wip", v1)
+        t.commitAppendToBranch("wip", frame((7, 2024, 7, 70.0)))
+        (Seq(("readTag", t.readTag("audited"), fmt(root, "tag" -> "audited")),
+          ("readBranch", t.readBranch("wip"), fmt(root, "branch" -> "wip"))),
+          hiveOrder, true)
+      })
+    def rows(df: org.apache.spark.sql.DataFrame, order: Seq[String]) =
+      df.select(order.map(c => col(c)): _*).collect()
+        .map(_.toSeq.mkString("|")).sorted.toSeq
+    for ((shape, build) <- shapes) {
+      val (reads, order, oneScan) = build()
+      for ((label, viaApi, viaFmt) <- reads) {
+        assert(rows(viaApi, order) == rows(viaFmt, order), s"$shape/$label: rows diverge")
+        assert(viaApi.columns.toSeq == order && viaFmt.columns.toSeq == order,
+          s"$shape/$label: columns ${viaApi.columns.toSeq} / ${viaFmt.columns.toSeq}")
+        if (oneScan) for ((df, via) <- Seq(viaApi -> "api", viaFmt -> "format"))
+          assert(fileScans(df.queryExecution.executedPlan).size == 1,
+            s"$shape/$label via $via: not one FileSourceScanExec")
+      }
+    }
+  }
+
   test("fast path: one FileSourceScan, masks at listing, partition pruning through the relation") {
     val root = freshRoot("fmt_fast")
     val t = new SnapshotTable(spark, root)
