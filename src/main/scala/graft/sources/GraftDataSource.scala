@@ -77,7 +77,8 @@ import graft.write.{SnapshotScanSpec, SnapshotTable}
   * with `GraftExtensions` — literal SQL lowered onto the commit
   * protocol — and by read options + the Scala commit API otherwise.
   *
-  * Both carry [[SnapshotTable.read]]'s column order.
+  * Both carry [[SnapshotTable.read]]'s column order: data columns in
+  * era order, then the partition columns — the order a compaction keeps.
   * Freshness note: a table registered in the session catalog caches its
   * resolved relation like any file-based source — after an external
   * commit, `REFRESH TABLE` picks up the new version (DataFrame reads
@@ -380,7 +381,10 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
             .getOrElse(sys.error(s"no snapshot at $root")))
         t.scanVersion(v)
     }
-    scan.fold[BaseRelation](identity, new GraftSnapshotRelation(spark, _))
+    // the caller's options reach the parquet reader (rebase modes,
+    // ignoreCorruptFiles, ...); Scala reads carry none
+    scan.fold[BaseRelation](_.copy(options = parameters)(spark),
+      new GraftSnapshotRelation(spark, _))
   }
 }
 
@@ -430,16 +434,10 @@ object GraftDataSource {
     val full = unifySchemas(dirSchemas.distinct).getOrElse(return None)
     if (!partCols.forall(full.fieldNames.contains)) return None
     val partitionSchema = StructType(partCols.map(c => full(c)))
-    // the per-entry fold's column order: a hive dir reads as its data
-    // columns then its partition columns, and unionByName appends each
-    // later era's new columns. Partition columns followed by such a
-    // column stay IN the data schema — HadoopFsRelation serves an
-    // overlapping partition column at its data-schema position
-    val order = dirSchemas.flatMap(s =>
-      s.fieldNames.filterNot(partCols.contains) ++ partCols).distinct
-    val dataSchema = StructType(
-      (if (order.endsWith(partCols)) order.dropRight(partCols.size) else order)
-        .map(full(_)))
+    // the fold's column order (data columns in era order, then the
+    // partition columns), which a compaction keeps
+    val dataSchema = StructType(dirSchemas
+      .flatMap(_.fieldNames.filterNot(partCols.contains)).distinct.map(full(_)))
     SnapshotFileIndex.list(spark, spec, partitionSchema).map(leaves =>
       HadoopFsRelation(new SnapshotFileIndex(spark, spec, partitionSchema, leaves),
         nullable(partitionSchema), nullable(dataSchema), None,

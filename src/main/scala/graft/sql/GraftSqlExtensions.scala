@@ -282,23 +282,24 @@ object GraftSqlSupport {
   }
 
   /** After a commit that may have widened the schema additively (a
-    * MERGE whose source carried new columns), append the new fields to
+    * MERGE whose source carried new columns), add the new fields to
     * the CATALOG's pinned schema — Spark refuses a relation whose
     * inferred schema drifted from the catalog's, so without this the
-    * very next `spark.table(name)` read would fail. Name-keyed and
-    * append-only; metadata-sized (one manifest/sidecar read). */
+    * very next `spark.table(name)` read would fail. Name-keyed (pinned
+    * fields keep their definitions); metadata-sized (one manifest/sidecar
+    * read). */
   def syncCatalogSchema(session: SparkSession, ct: CatalogTable,
                         t: SnapshotTable): Unit = {
     val after = t.read().schema
-    val extra = after.fields.filterNot(f =>
-      ct.schema.fieldNames.exists(_.equalsIgnoreCase(f.name)))
-    // the relation serves the table's read order, in which a later
-    // era's new columns follow every existing one — mirror that order
-    // or Spark refuses the schema as mismatched. An empty catalog
-    // schema is inferred per read and needs no sync.
-    if (extra.nonEmpty && ct.schema.nonEmpty)
+    def pinned(name: String) = ct.schema.find(_.name.equalsIgnoreCase(name))
+    // the relation serves the table's read order (new data columns
+    // before the partition columns) — mirror that order or Spark
+    // refuses the schema as mismatched. An empty catalog schema is
+    // inferred per read and needs no sync.
+    if (ct.schema.nonEmpty && after.exists(f => pinned(f.name).isEmpty))
       session.sessionState.catalog.alterTable(ct.copy(schema =
-        org.apache.spark.sql.types.StructType(ct.schema.fields ++ extra)))
+        org.apache.spark.sql.types.StructType(
+          after.fields.map(f => pinned(f.name).getOrElse(f)))))
   }
 
   /** The alias/table names a MERGE clause may use to qualify a plan's

@@ -462,12 +462,7 @@ case class GraftAddColumnsCommand(nameParts: Seq[String],
   override def run(session: SparkSession): Seq[Row] = {
     val (ct, t) = GraftSqlParser.open(session, nameParts)
     val v = t.commitWithRetry()(t.addColumns(cols))
-    val newFields = ct.schema.fields.toSeq ++ cols.map { case (n, ddl) =>
-      org.apache.spark.sql.types.StructField(n,
-        org.apache.spark.sql.types.DataType.fromDDL(ddl), nullable = true)
-    }
-    session.sessionState.catalog.alterTable(
-      ct.copy(schema = StructType(newFields)))
+    GraftSqlSupport.syncCatalogSchema(session, ct, t)
     GraftSqlParser.refresh(session, ct)
     Seq(Row(v))
   }

@@ -2325,8 +2325,10 @@ class SnapshotTable(spark: SparkSession, root: String,
     * only where that relation declines — pending merge-on-read deletes,
     * a column-mapping op the fold would change, flat or clustered dirs,
     * missing or non-additive sidecars. Both carry the fold's column
-    * order: the first entry's data then partition columns, then each
-    * later era's new columns. `skipOn` is [[readSkipping]]'s column. */
+    * order: data columns in era order (the first entry's, then each
+    * later era's new ones), then the partition columns — the hive-read
+    * order a compacted table's one dir has, so compaction keeps it.
+    * `skipOn` is [[readSkipping]]'s column. */
   private def scan(m: Manifest, skipOn: Option[String] = None)
       : Either[org.apache.spark.sql.execution.datasources.HadoopFsRelation, DataFrame] = {
     require(m.entries.nonEmpty, s"v${m.version} at $root is an empty snapshot")
@@ -2341,11 +2343,12 @@ class SnapshotTable(spark: SparkSession, root: String,
   /** One scan per data dir — plain under its recorded schema, or through
     * its stats index on `skipOn` when it has one — with masks, the
     * column-mapping fold and merge-on-read deletes applied, unioned by
-    * name (typed-null padding, see [[IncrementalWriter.readMerged]]).
-    * Each delete suppresses key matches only in the entries that
-    * PRECEDED it (`appliesTo` — newer entries carry the replacement
-    * rows); its key frame is built once per read and, key-frame-sized,
-    * broadcasts under AQE until a compaction clears the debt. */
+    * name (typed-null padding, see [[IncrementalWriter.readMerged]]),
+    * partition columns last. Each delete suppresses key matches only
+    * in the entries that PRECEDED it (`appliesTo` — newer entries carry
+    * the replacement rows); its key frame is built once per read and,
+    * key-frame-sized, broadcasts under AQE until a compaction clears
+    * the debt. */
   private def fold(m: Manifest, spec: SnapshotScanSpec,
                    skipOn: Option[String]): DataFrame = {
     // key frames fold too: a delete committed before a rename stores
@@ -2353,7 +2356,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     // under the same logical names as the data side
     val keyFrames = m.deletes.map(d =>
       d -> applyColOps(readDir(d.dir), opsSince(m, d.era)))
-    m.entries.zip(spec.dirs).zipWithIndex.map { case ((e, d), i) =>
+    val folded = m.entries.zip(spec.dirs).zipWithIndex.map { case ((e, d), i) =>
       val raw = skipOn.flatMap(c => d.stats.find(_._1 == c)) match {
         case Some((c, stats)) =>
           graft.sources.DataSkipping.read(spark, d.path, c, stats)
@@ -2371,6 +2374,12 @@ class SnapshotTable(spark: SparkSession, root: String,
         acc.filter(!coalesce(expr(p.sql), lit(false)))
       }
     }.reduce(_.unionByName(_, allowMissingColumns = true))
+    // a flat dir, a later era's new column or a key anti-join can put a
+    // partition column before a data column
+    val order = folded.columns.filterNot(partCols.contains) ++
+      partCols.filter(folded.columns.contains)
+    if (order.sameElements(folded.columns)) folded
+    else folded.select(order.map(col): _*)
   }
 
   /** Apply the manifest's column-mapping history to one dir's frame:

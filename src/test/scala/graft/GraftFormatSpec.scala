@@ -93,7 +93,14 @@ class GraftFormatSpec extends AnyFunSuite {
         val root = freshRoot("eq_evo"); val t = new SnapshotTable(spark, root)
         t.commitOverwrite(base)
         t.commitAppend(frame((4, 2024, 4, 40.0)).withColumn("tip", lit(2.5)))
-        (current(root, t), hiveOrder :+ "tip", true)
+        (current(root, t), Seq("id", "fare", "tip", "year", "month"), true)
+      },
+      "additive evolution, compacted" -> { () =>
+        val root = freshRoot("eq_evoc"); val t = new SnapshotTable(spark, root)
+        t.commitOverwrite(base)
+        t.commitAppend(frame((4, 2024, 4, 40.0)).withColumn("tip", lit(2.5)))
+        t.commitCompactFiles()
+        (current(root, t), Seq("id", "fare", "tip", "year", "month"), true)
       },
       "key deletes" -> { () =>
         val root = freshRoot("eq_mor"); val t = new SnapshotTable(spark, root)
@@ -119,7 +126,7 @@ class GraftFormatSpec extends AnyFunSuite {
           .toDF("id", "year", "month", "fare"), "id", nFiles = 4)
         t.commitAppend(frame((41, 2024, 4, 41.0)))
         (current(root, t) :+ (("readSkipping", t.readSkipping("id"), fmt(root))),
-          Seq("id", "year", "month", "fare"), false)
+          hiveOrder, false)
       },
       "branch head and tag" -> { () =>
         val root = freshRoot("eq_refs"); val t = new SnapshotTable(spark, root)
@@ -146,6 +153,18 @@ class GraftFormatSpec extends AnyFunSuite {
             s"$shape/$label via $via: not one FileSourceScanExec")
       }
     }
+  }
+
+  test("fast path: the format's read options reach the parquet relation") {
+    val root = freshRoot("fmt_opts")
+    new SnapshotTable(spark, root).commitOverwrite(frame((1, 2024, 1, 10.0)))
+    val df = spark.read.format("graft").option("ignoreCorruptFiles", "true").load(root)
+    val opts = df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.collect {
+      case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation => r.options
+    }
+    assert(opts.exists(_.get("ignoreCorruptFiles").contains("true")), opts.toString)
   }
 
   test("fast path: one FileSourceScan, masks at listing, partition pruning through the relation") {

@@ -304,6 +304,42 @@ class GraftSqlSpec extends AnyFunSuite {
     }
   }
 
+  test("MERGE WITH SCHEMA EVOLUTION / ADD COLUMN then OPTIMIZE: column order survives compaction") {
+    import spark.implicits._
+    val (name, root) = ("graft_sql_mrgopt", freshRoot("mrgopt"))
+    val t = new SnapshotTable(spark, root)
+    t.commitOverwrite(frame((1, 2024, 1, 10.0), (2, 2024, 2, 20.0)))
+    t.commitAppend(frame((3, 2024, 2, 30.0)))
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+    Seq((2, 2024, 2, 99.0, 5.5)).toDF("id", "year", "month", "fare", "tip")
+      .createOrReplaceTempView("graft_sql_mrgopt_src")
+    try {
+      spark.sql(s"CREATE TABLE $name USING graft OPTIONS (path '$root')")
+      spark.sql(
+        s"""MERGE WITH SCHEMA EVOLUTION INTO $name
+           |USING graft_sql_mrgopt_src AS s ON $name.id = s.id
+           |WHEN MATCHED THEN UPDATE SET *""".stripMargin)
+      def check(stage: String, order: String*): Unit =
+        for ((via, df) <- Seq("catalog" -> spark.table(name),
+            "format" -> spark.read.format("graft").load(root)))
+          assert(df.columns.toSeq == order && df.count() == 3,
+            s"$stage/$via: ${df.columns.toSeq}")
+      check("merged", "id", "fare", "tip", "year", "month")
+      spark.sql(s"OPTIMIZE $name")
+      check("optimized", "id", "fare", "tip", "year", "month")
+      spark.sql(s"ALTER TABLE $name ADD COLUMN note STRING")
+      check("added", "id", "fare", "tip", "note", "year", "month")
+      spark.sql(s"OPTIMIZE $name")
+      check("re-optimized", "id", "fare", "tip", "note", "year", "month")
+      val rows = spark.table(name).select(col("id"), col("tip")).collect()
+        .map(r => (r.getInt(0), Option(r.get(1)))).toSet
+      assert(rows == Set((1, None), (2, Some(5.5)), (3, None)), rows.toString)
+    } finally {
+      spark.catalog.dropTempView("graft_sql_mrgopt_src")
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+    }
+  }
+
   test("MERGE WITH SCHEMA EVOLUTION: explicit SET/INSERT lists may name new columns") {
     withTable("mrgsex") { (name, t) =>
       import spark.implicits._
