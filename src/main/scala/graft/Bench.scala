@@ -13,57 +13,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_NO_EXT=1: build the session WITHOUT the graft
-    // extensions — the A/B lever for measuring what the injected
-    // parser/resolution rules cost on every query's analysis (pair it
-    // with SPARK_GRAFT_ONLY over non-SQL entries; the taxi_sql_* family
-    // needs the extensions and will fail without them by design).
-    val builder0 = SparkSession.builder()
-    val spark = (if (sys.env.contains("SPARK_GRAFT_NO_EXT")) builder0
-      else builder0.withExtensions(new graft.expr.GraftExtensions))
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.tune(spark)
-    // SPARK_GRAFT_ROWS_SIDECAR=observe|count|off: A/B lever for the
-    // per-commit row-count sidecar policy (graft.rows.sidecar conf)
-    sys.env.get("SPARK_GRAFT_ROWS_SIDECAR")
-      .foreach(m => spark.conf.set("graft.rows.sidecar", m))
-    spark.sparkContext.setLogLevel("ERROR")
-    // Warmup OUTSIDE the timed loop: populate the memoized taxi model DAG
-    // (staging/fct/daily/monthly persists — the dbt-style materialize-once
-    // cost no single query should absorb) and pay first-job JVM/codegen
-    // overhead once.
-    Seq("taxi_fct_daily", "taxi_fct_monthly").foreach { w =>
-      try graft.entries.TaxiEntries.queries(w)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warmup $w failed (continuing): ${e.getMessage}") }
-    }
-    def timed(label: String)(build: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try { build; (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $label prewarm failed (continuing): ${e.getMessage}")
-        -1.0
-      }
-    }
-    // Cross-entry fixtures built once here and REPORTED SEPARATELY
-    // below, so the alphabetically-first consumer's per-entry number
-    // reflects its operator, not a populate the whole family shares:
-    //  - fixture_s: the snapshot/CDC fixture (two full table commits +
-    //    persisted changelog/v1);
-    //  - pairs_s: the session-memoized dedup/similarity frames (n-gram
-    //    pair list, hyperplane-LSH pairs, grouped-Lloyd PQ codebooks) —
-    //    round 10's dedup_clusters read 54.7 s of which ~44 s was the
-    //    pairs populate landing on the first consumer.
-    val fixtureS = timed("fixture") {
-      graft.entries.TaxiEntries.prewarmSharedFixtures(spark, sfDir) }
-    val pairsS = timed("pairs") {
-      graft.entries.DataPipelineEntries.prewarmSharedFixtures(spark, sfDir) }
+    val spark = session()
+    val (fixtureS, pairsS) = prewarm(spark, sfDir)
     // Fixed CPU probe, run immediately before and after the entry loop:
     // a deterministic data-free job whose time depends only on machine
     // speed. The fixture canary (vs trailing history) sees a run that
@@ -80,21 +31,6 @@ object Bench {
     }
     cpuProbe() // codegen/JIT warmth paid outside the measurement
     val probeStart = cpuProbe()
-    // SPARK_GRAFT_ONLY=a,b,c restricts the run — the isolation probe for
-    // distinguishing an entry's own cost from bench-neighborhood effects
-    // in a 200+-entry shared JVM. Measured finding (round 10, sf0.1): the
-    // sub-3 s text-family drifts flagged across rounds (text_lm_score
-    // 1.67→2.57→2.85 s, text_nb_confusion 2.29→3.10→3.73 s, code
-    // unchanged) run SLOWER in isolation (3.30 / 4.08 s fresh-JVM) than
-    // mid-run — so the drift is not cache/memory contention from the
-    // growing surface but the opposite: these entries' wall time is
-    // dominated by fixed per-query overhead (JIT/codegen warmth, plan
-    // compilation, broadcast setup) whose amortization shifts as the
-    // entry set around them grows and reorders. The data-proportional
-    // part — the only part that matters at 100 TB — is unchanged, which
-    // is why the drifts never reproduce at larger relative scale.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // Mid-run probe ratios vs the start probe: a single end/start drift
     // number cannot LOCALIZE contention (the round-15 refresh runs
     // started with clean fixtures and inflated only past the first
@@ -105,9 +41,7 @@ object Bench {
     val probeEvery = 45
     val profile = scala.collection.mutable.ListBuffer.empty[Double]
     var sinceProbe = 0
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -135,12 +69,13 @@ object Bench {
     // fine, the grading signal wasn't). Any entry whose time exceeds 3×
     // its trailing median across the committed bench_history runs (and
     // a 2 s absolute floor) is re-timed SEQUENTIALLY at the end of the
-    // run — a quiet-neighborhood measurement, the automated form of the
-    // SPARK_GRAFT_ONLY probe. The clean number is reported in "queries"
-    // (the grading signal); the original lands in "contaminated" (the
-    // contamination record). min(original, retimed) guards against the
-    // probe itself being unlucky. Capped at 20 entries per run so a
-    // machine-wide slowdown (every entry 3×) cannot double the run. ----
+    // run — a quiet-neighborhood measurement, the automated form of an
+    // isolated `graft.tools.Profile` run. The clean number is reported
+    // in "queries" (the grading signal); the original lands in
+    // "contaminated" (the contamination record). min(original,
+    // retimed) guards against the probe itself being unlucky. Capped
+    // at 20 entries per run so a machine-wide slowdown (every entry 3×)
+    // cannot double the run. ----
     def historyMedians(): (Map[String, Double], Option[Double], Option[Double]) = {
       val dir = new java.io.File("bench_history")
       // anchor_r<N>.json files participate in the trailing window: a
@@ -182,11 +117,11 @@ object Bench {
         med(fixtures.toSeq), med(pairs.toSeq))
     }
     val (medians, fixtureMed, pairsMed) =
-      if (only.isEmpty) try historyMedians() catch {
+      try historyMedians() catch {
         case e: Exception =>
           System.err.println(s"[bench] history medians unavailable: ${e.getMessage}")
           (Map.empty[String, Double], None, None)
-      } else (Map.empty[String, Double], None, None)
+      }
     // ---- environment canary (policy: bench_history/README.md): the
     // per-entry re-probe below catches individual blowups, but BROAD
     // drift sails under it — the round-14 driver artifact ran ~1.21×
@@ -273,15 +208,13 @@ object Bench {
     // makes per-entry comparison across rounds impossible for the
     // entries whose names sort early. The round number is inferred from
     // the committed BENCH_r* artifacts (this run FEEDS round max+1).
-    // An SPARK_GRAFT_ONLY isolation probe must NOT overwrite the round's
-    // full history with its handful of entries.
     // A committed round artifact must never be silently replaced: the
     // round number is inferred from BENCH_r*, and the DRIVER's end-of-
     // round run computes the same number as the builder's in-round runs
     // (it ran rounds 15 and 16 clobbered the clean artifact both times).
     // An existing file is overwritten only under the explicit flag; the
     // driver's JSON still reaches it via stdout and target/bench.json.
-    if (only.isEmpty) try {
+    try {
       val dir = java.nio.file.Paths.get("bench_history")
       java.nio.file.Files.createDirectories(dir)
       val round = Option(new java.io.File(".").list()).toSeq.flatten
@@ -299,6 +232,52 @@ object Bench {
     } catch { case e: Exception =>
       System.err.println(s"[bench] could not write bench_history: ${e.getMessage}") }
     spark.stop()
+  }
+
+  /** The bench session: `GraftSession.local` at `SPARK_GRAFT_CPUS`
+    * cores (default 4), tuned, logging errors only. */
+  def session(): SparkSession = {
+    val spark = GraftSession.tune(
+      GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt))
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  /** Everything the bench runs before its timed loop; returns the two
+    * shared-fixture populate times (fixture_s, pairs_s; -1 on failure).
+    *
+    * Warmup first: populate the memoized taxi model DAG
+    * (staging/fct/daily/monthly persists — the dbt-style
+    * materialize-once cost no single query should absorb) and pay
+    * first-job JVM/codegen overhead once.
+    *
+    * Then the cross-entry fixtures, built once here and REPORTED
+    * SEPARATELY, so the alphabetically-first consumer's per-entry
+    * number reflects its operator, not a populate the whole family
+    * shares:
+    *  - fixture_s: the snapshot/CDC fixture (two full table commits +
+    *    persisted changelog/v1);
+    *  - pairs_s: the session-memoized dedup/similarity frames (n-gram
+    *    pair list, hyperplane-LSH pairs, grouped-Lloyd PQ codebooks) —
+    *    round 10's dedup_clusters read 54.7 s of which ~44 s was the
+    *    pairs populate landing on the first consumer. */
+  def prewarm(spark: SparkSession, sfDir: String): (Double, Double) = {
+    Seq("taxi_fct_daily", "taxi_fct_monthly").foreach { w =>
+      try graft.entries.TaxiEntries.queries(w)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup $w failed (continuing): ${e.getMessage}") }
+    }
+    def timed(label: String)(build: => Unit): Double = {
+      val t0 = System.nanoTime()
+      try { build; (System.nanoTime() - t0) / 1e9 }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $label prewarm failed (continuing): ${e.getMessage}")
+        -1.0
+      }
+    }
+    (timed("fixture") { graft.entries.TaxiEntries.prewarmSharedFixtures(spark, sfDir) },
+      timed("pairs") { graft.entries.DataPipelineEntries.prewarmSharedFixtures(spark, sfDir) })
   }
 
   /** The environment canary's ratio: how much slower this run's

@@ -27,7 +27,8 @@ object GraftSession {
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
 
-  /** Local session for tests / ad-hoc mains. */
+  /** Local session: the one place a graft main or test builds a
+    * session (the mains under `graft.tools`, Bench, Verify, the tests). */
   def local(cores: Int = Runtime.getRuntime.availableProcessors().min(32)): SparkSession = {
     val s = configure(
       SparkSession.builder().master(s"local[$cores]").appName("graft")
@@ -38,8 +39,8 @@ object GraftSession {
     s
   }
 
-  /** Ensure graft confs on an externally-built session (driver contract
-    * builds its own in Verify/Bench); runtime-settable confs only. */
+  /** Ensure graft confs on a session built elsewhere (an external
+    * harness's, the benchmark's); runtime-settable confs only. */
   def tune(spark: SparkSession): SparkSession = {
     graft.expr.NativeFunctions.register(spark)
     // extraOptimizations is the post-build path for optimizer rules

@@ -4741,8 +4741,9 @@ object DataPipelineEntries {
     // alpha) for RGB PNGs, and its GIF reader an IndexColorModel whose
     // getNumComponents is 3 for a palette written without transparency —
     // both stable across JDK 11–21. If a future JDK changes either color
-    // model, re-pin these VALUES from `graft.tools.ProbeMedia`, which
-    // prints the decoded metadata for exactly these generator arguments.
+    // model, re-pin these VALUES from what `Multimodal.decodeImage`,
+    // `decodeAudio` and `decodeFrames` return for exactly these
+    // generator arguments.
     "mm_real_decode" ->
       """SELECT CAST(doc_id AS BIGINT) AS doc_id, media_type, decoded,
         |  CAST(width AS INTEGER) AS width, CAST(height AS INTEGER) AS height,

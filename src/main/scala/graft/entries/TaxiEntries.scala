@@ -249,9 +249,9 @@ object TaxiEntries {
       val fct = m.fctTrips
       val path = tmpPath("daily_refresh", d, s)
       // Committer v2 was A/B'd here (freshDir on the initial
-      // materialization) and REVERTED: OptProbe3 B2 vs B3 measured
-      // 1.94 vs 2.11 s — this write's cost is the 84 per-dir parquet
-      // writer opens/footers, not the v1 rename loop (round 18).
+      // materialization) and REVERTED: B2 vs B3 in OPTIMIZATION_r18.md
+      // measured 1.94 vs 2.11 s — this write's cost is the 84 per-dir
+      // parquet writer opens/footers, not the v1 rename loop (round 18).
       IncrementalWriter.overwriteTablePartitioned(m.fctDaily.drop("created_at"), path)
       val fct2 = fct.withColumn("total_amount",
         when(col("month") === 6, col("total_amount") * 2).otherwise(col("total_amount")))
@@ -1164,7 +1164,8 @@ object TaxiEntries {
       // here; group-count-sized at any input scale), so (year, month)
       // dirs made every IVM commit write 84 one-row files and every
       // read plan over 84 dirs — measured 0.81 s vs 0.34 s per commit
-      // at 7 dirs (OptProbe C1 vs C3). Layout only: rows identical.
+      // at 7 dirs (OPTIMIZATION_r18.md, C1 vs C3). Layout only: rows
+      // identical.
       val agg = new graft.write.SnapshotTable(s, tmpPath("sivm_agg", d, s),
         partCols = Seq("year"))
       agg.commitOverwrite(snapV1(s, d).groupBy(col("year"), col("month"))

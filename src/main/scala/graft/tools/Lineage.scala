@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Generate the model-lineage document (`docs/lineage.md`) — the
   * engine's analogue of the reference's dbt docs/lineage graph
   * (`/root/reference/docs/dbt-lineage.png`, `dbt docs generate`): a
@@ -89,9 +87,7 @@ object Lineage {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("docs/lineage.md")
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(2)
     spark.sparkContext.setLogLevel("ERROR")
     val m = graft.Pipeline.buildModels(
       graft.TaxiFixturesData.rawYellow(spark),

@@ -183,7 +183,7 @@ object IncrementalWriter {
   }
 
   // (Committer v2 was A/B'd for this write's fresh-initial-load case
-  // and showed no win — OptProbe3 B2 vs B3, 1.94 vs 2.11 s: at this
+  // and showed no win — OPTIMIZATION_r18.md, B2 vs B3, 1.94 vs 2.11 s: at this
   // shape the cost is the per-dir parquet writer opens, not the v1
   // rename loop — so the raw layer keeps one committer everywhere.)
   def overwriteTablePartitioned(df: DataFrame, path: String): Unit =

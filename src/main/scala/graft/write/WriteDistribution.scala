@@ -40,7 +40,7 @@ object WriteDistribution {
     * algorithm 2, which renames task output into the destination at
     * TASK commit instead of the v1 serial per-task rename loop at JOB
     * commit on the driver — measured 1.30 → 1.00 s on the 84-dir
-    * partitioned append at sf0.1 (`OptProbe` E1 vs A2), and at the
+    * partitioned append at sf0.1 (OPTIMIZATION_r18.md, E1 vs A2), and at the
     * 10⁴–10⁵ files of a real bulk load the v1 driver loop is the
     * classic commit wall. v2's caveat — a failed JOB leaves
     * already-committed task files visible in the destination — cannot

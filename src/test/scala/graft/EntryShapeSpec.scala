@@ -49,6 +49,36 @@ class EntryShapeSpec extends AnyFunSuite {
       "even-size median averages the middle pair")
   }
 
+  test("profile: driver time is wall minus the UNION of job intervals") {
+    import graft.tools.Profile.unionLength
+    assert(unionLength(Seq.empty) == 0L)
+    assert(unionLength(Seq((0L, 10L), (20L, 25L))) == 15L, "disjoint jobs add up")
+    assert(unionLength(Seq((0L, 100L), (10L, 20L), (30L, 40L))) == 100L,
+      "nested jobs count once")
+    // a broadcast (and a subquery) running beside the scan job: summing
+    // the job times overshoots the wall, the union does not
+    val wall = 1000L
+    val overlapping = Seq((0L, 700L), (100L, 600L), (500L, 900L))
+    assert(wall - overlapping.map { case (s, e) => e - s }.sum < 0)
+    assert(unionLength(overlapping) == 900L)
+    assert(wall - unionLength(overlapping) == 100L)
+    assert(unionLength(Seq((5L, 5L), (9L, 3L))) == 0L, "empty intervals cover nothing")
+  }
+
+  test("profile smoke: one cheap entry records jobs inside its wall") {
+    assume(new java.io.File(s"$sfDir/lineitem.parquet").exists, s"$sfDir missing")
+    val r = graft.tools.Profile.run(TestSpark.spark, sfDir, "tpch_q14_promo")
+    assert(r.jobs.nonEmpty, "a noop write runs at least one job")
+    assert(r.wallMs >= r.unionMs && r.unionMs >= 0, r.toString)
+    assert(r.tasks >= r.jobs.size, r.toString)
+  }
+
+  test("flagship SparkEntry.entry returns rows") {
+    assume(new java.io.File(s"$sfDir/lineitem.parquet").exists, s"$sfDir missing")
+    assert(SparkEntry.entry(TestSpark.spark).count() > 0,
+      "SparkEntry.entry returned no rows")
+  }
+
   test("every graded entry has a DuckDB oracle and vice versa") {
     // an entry without an oracle silently downgrades to the driver's
     // weaker rows-only check; an oracle without an entry is dead SQL
