@@ -19,8 +19,11 @@ import graft.write.IncrementalWriter
   *  - metadata stamp: `year`, `month` literals + `loaded_at`
   *    current_timestamp (`:141-144`).
   *  - S5 idempotency probe / S6 overwrite (`:59-81,96-106`): `skip` mode
-  *    no-ops when the partition exists; `overwrite` replaces exactly that
-  *    partition via dynamic partition overwrite.
+  *    no-ops when the partition holds a row; `overwrite` replaces exactly
+  *    that partition via dynamic partition overwrite. The probe
+  *    ([[IncrementalWriter.partitionExists]]) reads the raw table's
+  *    directory listing and that partition's parquet footers on the
+  *    driver — no Spark job, where the reference runs a `COUNT(*)`.
   */
 object Ingest {
 

@@ -1,6 +1,7 @@
 package graft.tools
 
 import scala.collection.mutable
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -102,29 +103,37 @@ object Profile {
     }
   }
 
-  /** One rep of `entry` through the bench's `noop` sink. Wall time and
-    * job intervals share the listener's clock, so the union can never
-    * exceed the wall. */
-  def run(spark: SparkSession, sfDir: String, entry: String,
-          explain: Boolean = false): Run = {
-    val fn = SparkEntry.queries.getOrElse(entry,
-      sys.error(s"no such entry: $entry (${SparkEntry.queries.size} known)"))
-    val sc = spark.sparkContext
-    ListenerBridge.drain(sc) // earlier entries' events stay out
+  /** `body` under a job recorder: its result, and the jobs it started
+    * (its own and any other thread's) with their times, tasks and CPU.
+    * Wall time and job intervals share the listener's clock, so the
+    * union can never exceed the wall. */
+  def record[T](sc: SparkContext)(body: => T): (T, Run) = {
+    ListenerBridge.drain(sc) // earlier work's events stay out
     val rec = new Recorder
     sc.addSparkListener(rec)
     try {
       val t0 = System.currentTimeMillis
-      val df = fn(spark, sfDir)
-      df.write.format("noop").mode("overwrite").save()
+      val out = body
       val t1 = System.currentTimeMillis
-      if (explain) df.explain("formatted")
       ListenerBridge.drain(sc)
-      rec.result(t0, t1)
-    } finally {
-      sc.removeSparkListener(rec)
-      TransientCache.drain()
-    }
+      (out, rec.result(t0, t1))
+    } finally sc.removeSparkListener(rec)
+  }
+
+  /** One rep of `entry` through the bench's `noop` sink. */
+  def run(spark: SparkSession, sfDir: String, entry: String,
+          explain: Boolean = false): Run = {
+    val fn = SparkEntry.queries.getOrElse(entry,
+      sys.error(s"no such entry: $entry (${SparkEntry.queries.size} known)"))
+    try {
+      val (df, r) = record(spark.sparkContext) {
+        val df = fn(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
+        df
+      }
+      if (explain) df.explain("formatted")
+      r
+    } finally TransientCache.drain()
   }
 
   def main(args: Array[String]): Unit = {

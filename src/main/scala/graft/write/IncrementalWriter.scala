@@ -1,5 +1,10 @@
 package graft.write
 
+import scala.util.{Try, Using}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,10 +29,12 @@ import org.apache.spark.sql.functions._
   *    shuffled), and the rewrite set is pruned to the batch's
   *    (year, month) partitions so unrelated history is untouched.
   *
-  * The incremental cut predicate (P3) is [[incrementalCut]]: compute
-  * (maxYear, maxMonth) with one tiny aggregate and gate the source scan —
-  * a static partition-pruning predicate Catalyst pushes into the parquet
-  * file listing.
+  * The incremental cut predicate (P3) is [[incrementalCut]]: take
+  * (maxYear, maxMonth) from the target's `year=/month=` directory names
+  * on the driver (no Spark job) and gate the source scan — a static
+  * partition-pruning predicate Catalyst pushes into the parquet file
+  * listing. The ingest existence probe [[partitionExists]] reads the
+  * same listing.
   *
   * CONTRACT: these are IN-PLACE, NON-TRANSACTIONAL writers — the
   * reference's pre-Iceberg storage shape. A crash mid-write can leave a
@@ -202,40 +209,65 @@ object IncrementalWriter {
   }
 
   /** S5: partition existence probe (`ingest_spark_bulk.py:59-68`) —
-    * partition-pruned count, cheap because the predicate prunes to one
-    * directory. */
+    * true when the `year=/month=` partition holds at least one row.
+    * Answered on the driver from the table's directory listing and the
+    * parquet footers of that one partition's files: no schema
+    * inference, no Spark job. */
   def partitionExists(spark: SparkSession, path: String, year: Int, month: Int): Boolean = {
-    if (!tableExists(spark, path)) false
-    else spark.read.parquet(path)
-      .filter(col("year") === year && col("month") === month)
-      .limit(1).count() > 0
+    val conf = spark.sparkContext.hadoopConfiguration
+    partitionDirs(conf, path).get((year, month)).exists(_.exists(hasRows(conf, _)))
   }
 
   def tableExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && fs.listStatus(p).nonEmpty
   }
 
+  /** The table's `year=Y/month=M` directories by (year, month), read
+    * the way Spark's partition discovery reads them: each value is
+    * parsed as an int (so `month=01` is month 1, and two spellings of
+    * one month are one partition), and a directory whose value does
+    * not parse — `__HIVE_DEFAULT_PARTITION__`, Spark's NULL — is left
+    * out, since a NULL year or month equals no probe. Empty for a
+    * table that does not exist. */
+  private def partitionDirs(conf: Configuration, path: String): Map[(Int, Int), Seq[Path]] = {
+    val root = new Path(path)
+    def value(p: Path, key: String): Option[Int] =
+      Some(p.getName).filter(_.startsWith(s"$key="))
+        .flatMap(n => Try(Integer.parseInt(n.stripPrefix(s"$key="))).toOption)
+    Option(root.getFileSystem(conf).globStatus(new Path(root, "year=*/month=*"))).toSeq.flatten
+      .filter(_.isDirectory).map(_.getPath)
+      .flatMap(p => for (y <- value(p.getParent, "year"); m <- value(p, "month"))
+        yield (y, m) -> p)
+      .groupMap(_._1)(_._2)
+  }
+
+  /** Whether a partition directory holds a row: its data files (Spark's
+    * listing skips names starting with `_` or `.` — `_SUCCESS`, `.crc`
+    * checksums) read footer by footer until one counts a row. A
+    * zero-length file holds none (Spark's scan makes no split of it). */
+  private def hasRows(conf: Configuration, dir: Path): Boolean =
+    dir.getFileSystem(conf).listStatus(dir).iterator
+      .filter(st => st.isFile && st.getLen > 0 && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .exists(st => Using.resource(ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf)))(
+        _.getRecordCount > 0))
+
   /** P3: the staging incremental cut (`stg_nyc_taxi__yellow_trips.sql:13-17`):
     * keep source rows with `year > maxY OR (year = maxY AND month >= maxM)`
-    * where maxY/maxM come from the existing target. The aggregate reads
-    * only partition-column metadata; the returned filter partition-prunes
-    * the source scan. */
+    * where maxY/maxM is the target's latest partition holding a row.
+    * The target is never scanned: its partitions come from the
+    * directory listing, newest first, and only the footers of the
+    * partitions down to the first non-empty one are read — no Spark
+    * job. The returned filter partition-prunes the source scan. */
   def incrementalCut(spark: SparkSession, source: DataFrame, targetPath: String): DataFrame = {
-    if (!tableExists(spark, targetPath)) source
-    else {
-      // one action: max over the (year, month) struct (lexicographic, which
-      // is exactly the calendar order) — partition-column metadata only, no
-      // data pages, and no second listing pass over a 100 TB table.
-      val target = spark.read.parquet(targetPath)
-      val maxRow = target.agg(max(struct(col("year"), col("month")))).head()
-      if (maxRow.isNullAt(0)) source
-      else {
-        val ym = maxRow.getStruct(0)
-        val (maxY, maxM) = (ym.getInt(0), ym.getInt(1))
+    val conf = spark.sparkContext.hadoopConfiguration
+    partitionDirs(conf, targetPath).toSeq.sortBy(_._1).reverseIterator
+      .collectFirst { case (ym, dirs) if dirs.exists(hasRows(conf, _)) => ym } match {
+      case None => source
+      case Some((maxY, maxM)) =>
         source.filter(col("year") > maxY || (col("year") === maxY && col("month") >= maxM))
-      }
     }
   }
 

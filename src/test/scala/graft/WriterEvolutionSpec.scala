@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.write.IncrementalWriter
 
@@ -96,5 +97,92 @@ class WriterEvolutionSpec extends AnyFunSuite {
       .toDF("k", "year", "month")
     val cut = IncrementalWriter.incrementalCut(spark, src, path)
     assert(cut.select("k").as[String].collect().toSet == Set("y", "z"))
+  }
+
+  // The listing-only probes against the answers a scan gives: a
+  // partition-pruned count, and the max (year, month) over the rows.
+  private def scanExists(path: String, y: Int, m: Int): Boolean =
+    new java.io.File(path).exists &&
+      spark.read.parquet(path).filter($"year" === y && $"month" === m).limit(1).count() > 0
+
+  private def scanMax(path: String): Option[(Int, Int)] =
+    if (!new java.io.File(path).exists) None
+    else Option(spark.read.parquet(path).agg(max(struct($"year", $"month"))).head().getStruct(0))
+      .map(r => (r.getInt(0), r.getInt(1)))
+
+  /** The (year, month) the cut keeps from, read off its survivors over
+    * a grid of months that spans every partition of the tests. */
+  private def cutFrom(path: String): Option[(Int, Int)] = {
+    val grid = (for (y <- 2022 to 2026; m <- 1 to 12) yield (y, m)).toDF("year", "month")
+    val (kept, run) = graft.tools.Profile.record(spark.sparkContext)(
+      IncrementalWriter.incrementalCut(spark, grid, path))
+    assert(run.jobs.isEmpty, s"incrementalCut ran ${run.jobs.size} jobs")
+    val got = kept.as[(Int, Int)].collect().toSeq
+    if (got.size == grid.count()) None else Some(got.min)
+  }
+
+  private def probe(path: String, y: Int, m: Int): Boolean = {
+    val (present, run) = graft.tools.Profile.record(spark.sparkContext)(
+      IncrementalWriter.partitionExists(spark, path, y, m))
+    assert(run.jobs.isEmpty, s"partitionExists ran ${run.jobs.size} jobs")
+    present
+  }
+
+  /** A table of three months with rows, plus the partitions a scan
+    * ignores: one with only `_SUCCESS` and a checksum, one whose only
+    * file has zero rows, and a NULL year. Months 01 and 04 are spelled
+    * zero-padded. */
+  private def edgeTable(): String = {
+    val base = Files.createTempDirectory("graft_probe")
+    val path = s"$base/t"
+    Seq(("a", 2023, 12), ("b", 2024, 3)).toDF("k", "year", "month")
+      .write.partitionBy("year", "month").parquet(path)
+    def dataFile(df: org.apache.spark.sql.DataFrame, name: String): java.nio.file.Path = {
+      df.coalesce(1).write.parquet(s"$base/$name")
+      Files.list(java.nio.file.Paths.get(s"$base/$name")).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+    }
+    val one = dataFile(Seq("c").toDF("k"), "one")
+    val none = dataFile(Seq.empty[String].toDF("k"), "none")
+    def place(file: java.nio.file.Path, dir: String): Unit = {
+      val d = Files.createDirectories(java.nio.file.Paths.get(s"$path/$dir"))
+      Files.copy(file, d.resolve("part-00000.parquet"))
+    }
+    place(one, "year=2024/month=01")
+    place(one, "year=2024/month=04")
+    place(none, "year=2024/month=9")
+    place(one, "year=__HIVE_DEFAULT_PARTITION__/month=12")
+    val marks = Files.createDirectories(java.nio.file.Paths.get(s"$path/year=2025/month=1"))
+    Files.createFile(marks.resolve("_SUCCESS"))
+    Files.createFile(marks.resolve(".part-00000.parquet.crc"))
+    path
+  }
+
+  test("partitionExists matches a partition-pruned count, with no Spark job") {
+    val path = edgeTable()
+    val cases = Seq(
+      (2024, 3) -> true,   // present
+      (2024, 2) -> false,  // absent
+      (2024, 1) -> true,   // month=01
+      (2024, 4) -> true,   // month=04
+      (2025, 1) -> false,  // only _SUCCESS and a .crc
+      (2024, 9) -> false,  // only a zero-row file
+      (2023, 12) -> true,
+      (0, 12) -> false)    // only under a NULL year, which equals no year
+    cases.foreach { case ((y, m), want) =>
+      assert(scanExists(path, y, m) == want, s"scan ($y, $m)")
+      assert(probe(path, y, m) == want, s"probe ($y, $m)")
+    }
+    val missing = Files.createTempDirectory("graft_probe_none").toString + "/t"
+    assert(!scanExists(missing, 2024, 1) && !probe(missing, 2024, 1))
+  }
+
+  test("incrementalCut's cut matches max(year, month) over the rows, with no Spark job") {
+    val path = edgeTable()
+    // the zero-row 2024-09 and marker-only 2025-01 hold no row: 2024-04 is the max
+    assert(scanMax(path) == Some((2024, 4)))
+    assert(cutFrom(path) == scanMax(path))
+    val missing = Files.createTempDirectory("graft_cut_none").toString + "/t"
+    assert(scanMax(missing).isEmpty && cutFrom(missing).isEmpty)
   }
 }

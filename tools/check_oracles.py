@@ -14,14 +14,19 @@ Usage: python3 tools/check_oracles.py [sfDir] [outDir] [--run-verify] [name...]
 """
 import json
 import math
+import os
 import subprocess
 import sys
 from pathlib import Path
 
 import duckdb
 
+# the checkout this script sits in: --run-verify verifies this tree
+REPO = Path(__file__).resolve().parent.parent
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-OUT_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/verify_out"
+OUT_DIR = sys.argv[2] if len(sys.argv) > 2 else str(REPO / "target" / "verify_out")
+# absolute, since sbt runs Verify from the checkout, not the caller's directory
+SF_DIR, OUT_DIR = str(Path(SF_DIR).resolve()), str(Path(OUT_DIR).resolve())
 FLAGS = set(a for a in sys.argv[3:] if a.startswith("--"))
 ONLY = [a for a in sys.argv[3:] if not a.startswith("--")]
 
@@ -35,8 +40,10 @@ def run_verify():
     import shutil
     shutil.rmtree(OUT_DIR, ignore_errors=True)
     cmd = ["sbt", f'runMain graft.Verify {SF_DIR} {OUT_DIR}']
-    r = subprocess.run(cmd, cwd="/root/repo", capture_output=True, text=True,
-                       env={**__import__("os").environ, "SPARK_GRAFT_CPUS": "8"})
+    # cores: the caller's SPARK_GRAFT_CPUS, else every core this process may use (nproc)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    r = subprocess.run(cmd, cwd=REPO, capture_output=True, text=True,
+                       env={**os.environ, "SPARK_GRAFT_CPUS": cpus})
     sys.stdout.write(r.stdout[-3000:])
     sys.stderr.write(r.stderr[-3000:])
     if r.returncode != 0:
