@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import scala.util.{Failure, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.model.{Intermediate, Marts, Staging}
 import graft.quality.Checks
@@ -16,6 +18,13 @@ import graft.write.IncrementalWriter
   * tables). `fct_trips` is cached before the two aggregate marts since
   * both consume it (the reference materializes it as a table for the same
   * reason).
+  *
+  * Models that share no edge run side by side, as dbt does with
+  * `threads: 4` (`dbt/profiles.yml:13`): the four raw tables resolve at
+  * once, then the four staging feeds run at once, then `fct_trips_daily`
+  * and `fct_trips_monthly` at once. Each is a short chain of small Spark
+  * jobs, so overlapping them overlaps their fixed per-job driver cost;
+  * the jobs themselves are the same.
   */
 object Pipeline {
 
@@ -46,13 +55,18 @@ object Pipeline {
   }
 
   /** Full run with storage: staging incremental write, marts CTAS rebuild,
-    * then the 37 quality checks. Returns the failed check names. */
+    * then the 37 quality checks. Returns the failed check names.
+    *
+    * Every raw table resolves before anything is written, so a missing
+    * one fails the run with storage untouched. A failing feed or mart
+    * fails the run only after its siblings have finished. The caller's
+    * job group, description and scheduler pool reach every job. */
   def run(spark: SparkSession, layout: Layout): Seq[String] = {
     val feeds = Seq("yellow", "green", "fhv", "fhvhv")
-    val raws = feeds.map(f => spark.read.parquet(layout.raw(f)))
+    val raws = concurrently(feeds.map(f => () => spark.read.parquet(layout.raw(f))))
 
     // staging: incremental cut + delete+insert per feed (S10/P3)
-    val staged = feeds.zip(raws).map { case (feed, raw) =>
+    val staged = concurrently(feeds.zip(raws).map { case (feed, raw) => () =>
       val transform: DataFrame => DataFrame = feed match {
         case "yellow" => Staging.yellow
         case "green"  => Staging.green
@@ -62,7 +76,7 @@ object Pipeline {
       val cut = IncrementalWriter.incrementalCut(spark, raw, layout.staging(feed))
       IncrementalWriter.deleteInsert(spark, transform(cut), layout.staging(feed), "trip_id")
       spark.read.parquet(layout.staging(feed))
-    }
+    })
 
     val uni = Intermediate.unify(staged(0), staged(1), staged(2), staged(3))
     val enr = Intermediate.enrich(uni)
@@ -70,13 +84,36 @@ object Pipeline {
     val fct = Marts.fctTrips(cln).cache()
     try {
       IncrementalWriter.overwriteTable(fct, layout.mart("fct_trips"))
-      IncrementalWriter.overwriteTable(Marts.fctTripsDaily(fct), layout.mart("fct_trips_daily"))
-      IncrementalWriter.overwriteTable(Marts.fctTripsMonthly(fct), layout.mart("fct_trips_monthly"))
-
-      val daily = spark.read.parquet(layout.mart("fct_trips_daily"))
-      val monthly = spark.read.parquet(layout.mart("fct_trips_monthly"))
+      val Seq(daily, monthly) = concurrently(Seq(
+        "fct_trips_daily" -> Marts.fctTripsDaily _,
+        "fct_trips_monthly" -> Marts.fctTripsMonthly _).map { case (name, model) => () =>
+        IncrementalWriter.overwriteTable(model(fct), layout.mart(name))
+        spark.read.parquet(layout.mart(name))
+      })
       Checks.all(staged(0), uni, enr, cln, fct, daily, monthly)
         .filterNot(_.passed).map(_.name)
     } finally fct.unpersist()
+  }
+
+  /** Run `bodies` side by side, one thread each, and return their results
+    * in order once all have finished; if any failed, rethrow the first
+    * failure with the others attached as suppressed. The threads are new
+    * for each call, created by the caller's thread, so they inherit its
+    * `SparkContext` local properties (job group, description, scheduler
+    * pool) and a `cancelJobGroup` reaches their jobs — the long-lived
+    * threads of a shared pool carry whatever they were created with. */
+  private def concurrently[T](bodies: Seq[() => T]): Seq[T] = {
+    val pool = Executors.newFixedThreadPool(bodies.size)
+    try {
+      val outcomes = bodies
+        .map(body => pool.submit(new Callable[T] { def call(): T = body() }))
+        .map(f => Try(f.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) })
+      outcomes.collect { case Failure(e) => e } match {
+        case first +: rest =>
+          rest.filterNot(_ eq first).foreach(first.addSuppressed)
+          throw first
+        case _ => outcomes.map(_.get)
+      }
+    } finally pool.shutdownNow()
   }
 }

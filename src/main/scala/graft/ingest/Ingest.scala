@@ -56,7 +56,7 @@ object Ingest {
     // re-scan of the just-written partition.
     val obs = org.apache.spark.sql.Observation(s"ingest_${feed}_${year}_$month")
     val stamped = stamp(src, year, month).observe(obs, count(lit(1)).as("rows"))
-    if (exists) IncrementalWriter.overwritePartitions(spark, stamped, rawTablePath)
+    if (exists) IncrementalWriter.overwritePartitions(stamped, rawTablePath)
     else IncrementalWriter.appendPartitioned(stamped, rawTablePath)
     // an empty source produces a zero-task write, which reports NO
     // observed metrics at all (not a zero) — treat absence as 0 rows.

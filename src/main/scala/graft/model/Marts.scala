@@ -140,7 +140,7 @@ object Marts {
       import spark.implicits._
       val rewriteParts = rewrite.toSeq.toDF("year", "month")
       val fullPartitions = fct.join(broadcast(rewriteParts), Seq("year", "month"))
-      graft.write.IncrementalWriter.overwritePartitions(spark,
+      graft.write.IncrementalWriter.overwritePartitions(
         fctTripsDaily(fullPartitions).drop("created_at"), path)
     }
     if (emptied.nonEmpty) {

@@ -197,16 +197,15 @@ object IncrementalWriter {
     byPartition(df).write.mode(SaveMode.Overwrite).partitionBy(partCols: _*).parquet(path)
 
   /** Dynamic partition overwrite: replaces exactly the (year, month)
-    * partitions present in `df`. */
-  def overwritePartitions(spark: SparkSession, df: DataFrame, path: String): Unit = {
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try byPartition(df).write.mode(SaveMode.Overwrite).partitionBy(partCols: _*).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+    * partitions present in `df`. The mode is this write's own
+    * `partitionOverwriteMode` option, which Spark reads ahead of the
+    * session's `spark.sql.sources.partitionOverwriteMode`: the session
+    * conf is never touched, so a concurrent write elsewhere in the
+    * session cannot be turned into a static overwrite that wipes its
+    * table's other partitions. */
+  def overwritePartitions(df: DataFrame, path: String): Unit =
+    byPartition(df).write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCols: _*).parquet(path)
 
   /** S5: partition existence probe (`ingest_spark_bulk.py:59-68`) —
     * true when the `year=/month=` partition holds at least one row.
@@ -321,7 +320,7 @@ object IncrementalWriter {
       val survivors = target.filter(touchedPred)
         .join(buildSide, Seq(keyCol), "left_anti")
       val out = survivors.unionByName(batch, allowMissingColumns = true)
-      overwritePartitions(spark, out, path)
+      overwritePartitions(out, path)
     }
   }
 

@@ -185,4 +185,48 @@ class WriterEvolutionSpec extends AnyFunSuite {
     val missing = Files.createTempDirectory("graft_cut_none").toString + "/t"
     assert(scanMax(missing).isEmpty && cutFrom(missing).isEmpty)
   }
+
+  test("overwritePartitions replaces only the batch's partitions and leaves the session conf alone") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    def table(): String = {
+      val path = Files.createTempDirectory("graft_dyn").toString + "/t"
+      IncrementalWriter.overwriteTablePartitioned(
+        Seq(("a", 1.0, 2024, 1), ("b", 2.0, 2024, 2)).toDF("k", "v", "year", "month"), path)
+      path
+    }
+    def rows(path: String): Set[(String, Double, Int)] =
+      spark.read.parquet(path).select("k", "v", "month").as[(String, Double, Int)].collect().toSet
+    val batch = Seq(("b", 20.0, 2024, 2)).toDF("k", "v", "year", "month")
+    val want = Set(("a", 1.0, 1), ("b", 20.0, 2))
+    spark.conf.set(key, "static")
+    try {
+      val one = table()
+      IncrementalWriter.overwritePartitions(batch, one)
+      assert(rows(one) == want)
+      assert(spark.conf.get(key) == "static")
+      // two writers in one session, and a reader of the session conf
+      // for as long as they write: the mode is never switched under
+      // another write, not even for a moment
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration._
+      val paths = Seq(table(), table())
+      @volatile var writing = true
+      val seen = Future {
+        var modes = Set(spark.conf.get(key))
+        while (writing) { Thread.sleep(1); modes += spark.conf.get(key) }
+        modes
+      }
+      try Await.result(Future.traverse(paths)(p =>
+        Future(IncrementalWriter.overwritePartitions(batch, p))), 2.minutes)
+      finally writing = false
+      paths.foreach(p => assert(rows(p) == want, p))
+      assert(Await.result(seen, 1.minute) == Set("static"))
+      assert(spark.conf.get(key) == "static")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }
