@@ -63,7 +63,7 @@ object Pipeline {
     * job group, description and scheduler pool reach every job. */
   def run(spark: SparkSession, layout: Layout): Seq[String] = {
     val feeds = Seq("yellow", "green", "fhv", "fhvhv")
-    val raws = concurrently(feeds.map(f => () => spark.read.parquet(layout.raw(f))))
+    val raws = concurrently(feeds.map(f => () => Tables.parquet(spark, layout.raw(f))))
 
     // staging: incremental cut + delete+insert per feed (S10/P3)
     val staged = concurrently(feeds.zip(raws).map { case (feed, raw) => () =>
@@ -75,7 +75,7 @@ object Pipeline {
       }
       val cut = IncrementalWriter.incrementalCut(spark, raw, layout.staging(feed))
       IncrementalWriter.deleteInsert(spark, transform(cut), layout.staging(feed), "trip_id")
-      spark.read.parquet(layout.staging(feed))
+      Tables.parquet(spark, layout.staging(feed))
     })
 
     val uni = Intermediate.unify(staged(0), staged(1), staged(2), staged(3))
@@ -88,7 +88,7 @@ object Pipeline {
         "fct_trips_daily" -> Marts.fctTripsDaily _,
         "fct_trips_monthly" -> Marts.fctTripsMonthly _).map { case (name, model) => () =>
         IncrementalWriter.overwriteTable(model(fct), layout.mart(name))
-        spark.read.parquet(layout.mart(name))
+        Tables.parquet(spark, layout.mart(name))
       })
       Checks.all(staged(0), uni, enr, cln, fct, daily, monthly)
         .filterNot(_.passed).map(_.name)

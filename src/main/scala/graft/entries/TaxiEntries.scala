@@ -2,7 +2,7 @@ package graft.entries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{GraftSession, Pipeline}
+import graft.{GraftSession, Pipeline, Tables}
 import graft.model.Marts
 import graft.oracle.TaxiSql
 import graft.quality.Checks
@@ -138,7 +138,7 @@ object TaxiEntries {
       val batch = stg.filter(col("month").isin(6, 7))
         .withColumn("fare_amount", col("fare_amount") * 2)
       IncrementalWriter.deleteInsert(s, batch, path, "trip_id")
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .groupBy(col("year"), col("month"))
         .agg(count(lit(1)).as("n"),
           graft.expr.Functions.stableRoundedSum(col("fare_amount"), 2).as("fare_sum"))
@@ -168,7 +168,7 @@ object TaxiEntries {
         .withColumn("fare_amount", col("fare_amount") * 2)
         .write.mode("append").parquet(srcDir)
       replay()
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .groupBy(col("year"), col("month"))
         .agg(count(lit(1)).as("n"),
           graft.expr.Functions.stableRoundedSum(col("fare_amount"), 2).as("fare_sum"))
@@ -225,7 +225,7 @@ object TaxiEntries {
         retries = 0, retryDelayMs = 0L,
         workDir = java.nio.file.Paths.get(tmpPath("bulk_dl", d, s)))
       finally server.stop(0)
-      s.read.parquet(graft.ingest.BulkIngest.rawTablePath(rawBase, "yellow"))
+      Tables.parquet(s, graft.ingest.BulkIngest.rawTablePath(rawBase, "yellow"))
         .groupBy(col("year"), col("month"))
         .agg(count(lit(1)).as("n"),
           graft.expr.Functions.stableRoundedSum(col("fare_amount"), 2).as("fare_sum"))
@@ -256,7 +256,7 @@ object TaxiEntries {
       val fct2 = fct.withColumn("total_amount",
         when(col("month") === 6, col("total_amount") * 2).otherwise(col("total_amount")))
       Marts.refreshDailyPartitions(s, fct2, col("month") === 6, path)
-      s.read.parquet(path).select(
+      Tables.parquet(s, path).select(
         col("trip_date"), col("taxi_type"), col("year"), col("month"),
         col("total_trips"), col("total_revenue"))
     },
@@ -284,7 +284,7 @@ object TaxiEntries {
       }
       val (before, after) = graft.write.Maintenance.compact(s, path)
       require(after < before, s"compaction did not reduce files: $before -> $after")
-      s.read.parquet(path).groupBy(col("year"), col("month"))
+      Tables.parquet(s, path).groupBy(col("year"), col("month"))
         .agg(count(lit(1)).as("n"),
           graft.expr.Functions.stableRoundedSum(col("fare_amount"), 2).as("fare_sum"))
     },
@@ -1171,7 +1171,7 @@ object TaxiEntries {
       agg.commitOverwrite(snapV1(s, d).groupBy(col("year"), col("month"))
         .agg(count(lit(1)).as("n"),
           graft.expr.Functions.stableSum(col("fare_amount")).as("fs")))
-      val logSchema = s.read.parquet(logDir).schema
+      val logSchema = Tables.parquet(s, logDir).schema
       graft.streaming.StreamingEvents.withStreamShuffle(s) {
         graft.streaming.StreamingEvents.ivmStream(
           s.readStream.schema(logSchema).option("maxFilesPerTrigger", 1).parquet(logDir),

@@ -71,7 +71,7 @@ object TpchEntries {
       graft.write.IncrementalWriter.overwriteClustered(
         Tables.orders(s, d).select("o_orderkey", "o_totalprice", "o_orderdate"),
         dir, "o_totalprice", nFiles = 8)
-      s.read.parquet(dir).filter(col("o_totalprice") > 300000)
+      Tables.parquet(s, dir).filter(col("o_totalprice") > 300000)
     },
     // FILE-level min/max data skipping (the Delta/Iceberg stats-index
     // capability): orders clustered on o_custkey, a persisted per-file
@@ -585,7 +585,7 @@ object TpchEntries {
       graft.write.IncrementalWriter.overwriteZOrdered(
         Tables.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"),
         dir, Seq("o_custkey", "o_totalprice"), nFiles = 16)
-      s.read.parquet(dir).filter(col("o_custkey") < 200 && col("o_totalprice") > 200000)
+      Tables.parquet(s, dir).filter(col("o_custkey") < 200 && col("o_totalprice") > 200000)
     },
     // Z-ordered compaction of a VERSIONED table (Delta OPTIMIZE ZORDER
     // BY shape): orders committed as a snapshot, rewritten into one

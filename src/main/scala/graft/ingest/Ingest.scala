@@ -2,6 +2,7 @@ package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.write.IncrementalWriter
 
 /** Batch ingest of one (feed, year, month) file into the partitioned raw
@@ -15,7 +16,9 @@ import graft.write.IncrementalWriter
   *    parquet reader pulls straight from the source, unlike the
   *    reference's driver-download + object-store staging hop (S2), which
   *    at 100 TB would bottleneck on the driver NIC.
-  *  - S3 scan with schema inference (`:136-139`).
+  *  - S3 scan with schema inference (`:136-139`): [[graft.Tables.parquet]]
+  *    reads the source's schema from its first file's footer on the
+  *    driver, where `spark.read.parquet` would run a Spark job for it.
   *  - metadata stamp: `year`, `month` literals + `loaded_at`
   *    current_timestamp (`:141-144`).
   *  - S5 idempotency probe / S6 overwrite (`:59-81,96-106`): `skip` mode
@@ -44,7 +47,7 @@ object Ingest {
       return Result(feed, year, month, "skipped_existing", 0L)
 
     val src =
-      try spark.read.parquet(sourcePath)
+      try Tables.parquet(spark, sourcePath)
       catch {
         case e: Exception if e.getMessage != null &&
           (e.getMessage.contains("Path does not exist") ||

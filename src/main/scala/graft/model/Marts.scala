@@ -109,7 +109,7 @@ object Marts {
     val martSet: Set[(Int, Int)] =
       if (!graft.write.IncrementalWriter.tableExists(spark, path)) Set.empty
       else try {
-        spark.read.parquet(path).filter(touched)
+        graft.Tables.parquet(spark, path).filter(touched)
           .select(col("year"), col("month")).distinct()
           .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
       } catch {

@@ -509,7 +509,7 @@ object Dedup {
   private[graft] def readStoredIndex(spark: org.apache.spark.sql.SparkSession,
                                      table: String, batchId: Option[String],
                                      cols: String*): DataFrame = {
-    val base = spark.read.parquet(table)
+    val base = graft.Tables.parquet(spark, table)
     val ownBatchExcluded = batchId match {
       case Some(id) if base.columns.contains("batch") =>
         base.filter(col("batch") =!= id)

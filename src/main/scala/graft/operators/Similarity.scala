@@ -202,7 +202,7 @@ object Similarity {
     * root files with `batch=` subdirectories. */
   def ivfIndexAppend(spark: org.apache.spark.sql.SparkSession, newVecs: DataFrame,
                      path: String, batchId: Option[String] = None): Unit =
-    writeAssigned(ivfAssign(newVecs, spark.read.parquet(s"$path/centroids")),
+    writeAssigned(ivfAssign(newVecs, graft.Tables.parquet(spark, s"$path/centroids")),
       path, batchId)
 
   private def writeAssigned(assigned: DataFrame, path: String,
@@ -233,8 +233,8 @@ object Similarity {
   def ivfSearchStored(spark: org.apache.spark.sql.SparkSession, path: String,
                       queries: DataFrame, k: Int = 3, nProbe: Int = 2): DataFrame =
     ivfSearch(
-      spark.read.parquet(s"$path/assigned"),
-      spark.read.parquet(s"$path/centroids"), queries, k, nProbe)
+      graft.Tables.parquet(spark, s"$path/assigned"),
+      graft.Tables.parquet(spark, s"$path/centroids"), queries, k, nProbe)
 
   /** recall@k gate for an ANN variant: per query, the fraction of the
     * exact top-k (from [[knnBrute]]) the ANN result recovered —

@@ -319,7 +319,7 @@ object TextAnalysis {
     * re-read, no postings are touched. */
   def bm25IndexAppend(docs: org.apache.spark.sql.DataFrame, path: String): Unit = {
     val batchIds = docs.select(col("doc_id")).distinct()
-    val dup = docs.sparkSession.read.parquet(s"$path/doclens")
+    val dup = graft.Tables.parquet(docs.sparkSession, s"$path/doclens")
       .select(col("doc_id"))
       .join(broadcast(batchIds), Seq("doc_id"), "left_semi")
       .limit(5).collect().map(_.get(0))
@@ -355,10 +355,10 @@ object TextAnalysis {
                  queries: Seq[(Int, String)], topK: Int,
                  k1: Double = 1.2, b: Double = 0.75): org.apache.spark.sql.DataFrame = {
     val termSet = queries.flatMap(_._2.split("\\s+")).filter(_.nonEmpty).distinct
-    val tfq = spark.read.parquet(s"$indexPath/postings")
+    val tfq = graft.Tables.parquet(spark, s"$indexPath/postings")
       .filter(col("term").isin(termSet: _*))
     val dl = graft.TransientCache.register(
-      spark.read.parquet(s"$indexPath/doclens"))
+      graft.Tables.parquet(spark, s"$indexPath/doclens"))
     bm25Score(tfq, dl, queries, topK, k1, b)
   }
 
@@ -652,7 +652,7 @@ object TextAnalysis {
     val pairs = probeTris.flatMap { case (p, ts) => ts.map(t => (p, t, ts.size)) }
       .toDF("probe", "trigram", "n_tri")
     val allTris = probeTris.flatMap(_._2).distinct
-    val postings = spark.read.parquet(indexPath)
+    val postings = graft.Tables.parquet(spark, indexPath)
       .filter(col("trigram").isin(allTris: _*))
     val cands = postings.join(broadcast(pairs), Seq("trigram"))
       .groupBy(col("doc_id"), col("probe"), col("n_tri"))

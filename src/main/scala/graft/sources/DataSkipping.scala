@@ -75,7 +75,7 @@ object DataSkipping {
     * build and produce one giant file). */
   def buildStats(spark: SparkSession, dataPath: String, column: String,
                  statsPath: String): Unit = {
-    val df = spark.read.parquet(dataPath)
+    val df = graft.Tables.parquet(spark, dataPath)
     val c = statColumn(df.schema(column).dataType, col(column))
     df.groupBy(input_file_name().as("file"))
       .agg(min(c).cast("double").as("mn"), max(c).cast("double").as("mx"))
@@ -88,22 +88,23 @@ object DataSkipping {
   def read(spark: SparkSession, dataPath: String, column: String,
            statsPath: String): DataFrame = {
     val stats = loadStats(spark, statsPath)
-    val fullSchema = spark.read.parquet(dataPath).schema
     val index = new MinMaxFileIndex(spark, new Path(dataPath), column, stats)
-    // a hive-partitioned root needs the partition columns split out of
-    // the data schema (HadoopFsRelation appends them back); the two
-    // pruning layers then COMPOSE — partition predicates prune
-    // directories in the base listing, min/max stats prune the
-    // surviving files
-    val partNames = index.partitionSchema.fieldNames.toSet
-    val dataSchema = StructType(fullSchema.filterNot(f => partNames(f.name)))
-    val relation = HadoopFsRelation(index, index.partitionSchema, dataSchema,
+    // the plain read's data schema, from the index's own listing; on a
+    // hive-partitioned root the two pruning layers COMPOSE — partition
+    // predicates prune directories in the base listing, min/max stats
+    // prune the surviving files
+    val relation = HadoopFsRelation(index, index.partitionSchema, dataSchema(spark, index, dataPath),
       None, new ParquetFileFormat, Map.empty[String, String])(spark)
-    // column ORDER must match the plain read's (partition columns land
-    // where parquet inference puts them, not appended last)
     spark.baseRelationToDataFrame(relation)
-      .select(fullSchema.fieldNames.map(col).toSeq: _*)
   }
+
+  /** The data schema `spark.read.parquet(dataPath)` infers, from the
+    * footer of `index`'s listing; where that is in doubt, the plain
+    * read's schema, which [[HadoopFsRelation]] lines up with the
+    * partition columns as the plain read does. */
+  private def dataSchema(spark: SparkSession, index: InMemoryFileIndex,
+                         dataPath: String): StructType =
+    graft.Tables.footerSchema(spark, index).getOrElse(graft.Tables.parquet(spark, dataPath).schema)
 
   /** Load a persisted min/max index into its driver-side form
     * (normalized path → (min, max)) — file-count sized. Shared by
@@ -111,7 +112,7 @@ object DataSkipping {
     * ([[graft.sources.SnapshotFileIndex]]). */
   private[sources] def loadStats(spark: SparkSession,
                                  statsPath: String): Map[String, (Double, Double)] =
-    try spark.read.parquet(statsPath)
+    try graft.Tables.parquet(spark, statsPath)
       .collect()
       .flatMap { r =>
         // an all-null indexed column yields null bounds: no range to
@@ -153,7 +154,7 @@ object DataSkipping {
       s"invalid bloom sizing: items=$expectedPerFile fpp=$fpp")
     val numBits = math.ceil(
       -expectedPerFile * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    spark.read.parquet(dataPath)
+    graft.Tables.parquet(spark, dataPath)
       .groupBy(input_file_name().as("file"))
       .agg(expr(s"bloom_filter_agg(xxhash64($column), " +
         s"CAST($expectedPerFile AS BIGINT), CAST($numBits AS BIGINT))").as("bf"))
@@ -173,11 +174,10 @@ object DataSkipping {
     * between megabytes and ~100 GB at a million files. */
   def readBloom(spark: SparkSession, dataPath: String, column: String,
                 statsPath: String): DataFrame = {
-    val schema = spark.read.parquet(dataPath).schema
     val index = new BloomFileIndex(spark, new Path(dataPath), column, statsPath)
     require(index.partitionSchema.isEmpty,
       s"DataSkipping.readBloom expects an unpartitioned layout at $dataPath")
-    val relation = HadoopFsRelation(index, index.partitionSchema, schema,
+    val relation = HadoopFsRelation(index, index.partitionSchema, dataSchema(spark, index, dataPath),
       None, new ParquetFileFormat, Map.empty[String, String])(spark)
     spark.baseRelationToDataFrame(relation)
   }
@@ -194,7 +194,7 @@ object DataSkipping {
                                          conjuncts: Seq[Seq[Long]]): Set[String] = {
     import spark.implicits._
     val cj = conjuncts.map(_.toArray).toArray // plain arrays serialize lean
-    spark.read.parquet(statsPath)
+    graft.Tables.parquet(spark, statsPath)
       .selectExpr("file", "bf")
       .as[(String, Array[Byte])]
       .filter { (row: (String, Array[Byte])) =>

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
-import graft.{GraftSession, Pipeline}
+import graft.{GraftSession, Pipeline, Tables}
 import graft.ingest.Ingest
 
 /** End-to-end pipeline driver: ingest raw feeds (from parquet files laid
@@ -29,10 +29,10 @@ object RunPipeline {
     println(s"[pipeline] failed checks: ${if (failed.isEmpty) "none" else failed.mkString(", ")}")
 
     for (m <- Seq("fct_trips", "fct_trips_daily", "fct_trips_monthly")) {
-      val df = spark.read.parquet(layout.mart(m))
+      val df = Tables.parquet(spark, layout.mart(m))
       println(s"[mart] $m rows=${df.count()} cols=${df.columns.length}")
     }
-    spark.read.parquet(layout.mart("fct_trips_monthly"))
+    Tables.parquet(spark, layout.mart("fct_trips_monthly"))
       .orderBy("year", "month", "taxi_type").show(20, truncate = false)
     println(s"[done] warehouse at $root")
     spark.stop()

@@ -69,9 +69,10 @@ object IncrementalWriter {
     * different column set in the same table; reading with `mergeSchema`
     * folds every file footer into the superset schema, with columns
     * absent in older files read back as typed nulls. Plain
-    * `spark.read.parquet` picks ONE file's schema and silently hides the
-    * drifted columns — always read an append-evolved raw table through
-    * this. */
+    * `spark.read.parquet`, and [[graft.Tables.parquet]] which picks the
+    * same file, take ONE file's schema (the first in path order) and
+    * silently hide the drifted columns — always read an append-evolved
+    * raw table through this. */
   def readMerged(spark: SparkSession, path: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path)
 
@@ -217,10 +218,13 @@ object IncrementalWriter {
     partitionDirs(conf, path).get((year, month)).exists(_.exists(hasRows(conf, _)))
   }
 
+  /** True when `path` is a directory with at least one entry. A plain
+    * file at the path is not a table: listing a file returns the file. */
   def tableExists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
+    try fs.getFileStatus(p).isDirectory && fs.listStatus(p).nonEmpty
+    catch { case _: java.io.FileNotFoundException => false }
   }
 
   /** The table's `year=Y/month=M` directories by (year, month), read
@@ -285,12 +289,18 @@ object IncrementalWriter {
     * The delete-key set is a single batch's keys — small relative to the
     * target — so it is broadcast explicitly: the 100 TB target side is
     * never shuffled, each target partition anti-probes the broadcast
-    * hash table in place. */
+    * hash table in place.
+    *
+    * A plain file at `path` is refused before anything is read or
+    * written. */
   def deleteInsert(spark: SparkSession, batch: DataFrame, path: String, keyCol: String): Unit = {
+    val p = new Path(path)
+    require(!p.getFileSystem(spark.sparkContext.hadoopConfiguration).isFile(p),
+      s"deleteInsert: $path is a file, not a table directory")
     if (!tableExists(spark, path)) {
       appendPartitioned(batch, path)
     } else {
-      val target = spark.read.parquet(path)
+      val target = graft.Tables.parquet(spark, path)
       // ONE probe pass over the batch for both planning facts: the
       // touched (year, month) partition set (collect_set of the
       // partition tuple — partial aggregation keeps the executor-side
@@ -307,13 +317,16 @@ object IncrementalWriter {
       val touchedPred = touched
         .map { case (y, m) => col("year") === y && col("month") === m }
         .reduceOption(_ || _).getOrElse(lit(false))
-      val keys = batch.select(keyCol).distinct()
-      // Broadcast the delete-key set only when it is verifiably modest.
-      // Sized from the probe's row count — which upper-bounds the
-      // distinct key count. Cap keeps the explicit broadcast ≲ tens of
-      // MB of key strings; a giant backfill batch falls back to the
-      // planner's shuffled anti join, which AQE still converts to
-      // broadcast if the runtime size allows.
+      // The batch's key column as is: a left-anti join keeps the same
+      // rows whether or not its build side repeats a key, so no
+      // distinct (an aggregate shuffle, one more job) is needed.
+      val keys = batch.select(keyCol)
+      // Broadcast the delete-key set only when it is verifiably modest:
+      // the probe's row count is exactly the number of rows broadcast.
+      // Cap keeps the explicit broadcast ≲ tens of MB of key strings; a
+      // giant backfill batch falls back to the planner's shuffled anti
+      // join, which AQE still converts to broadcast if the runtime size
+      // allows.
       val maxBroadcastKeys = 1000000L
       val smallKeys = batchRows <= maxBroadcastKeys
       val buildSide = if (smallKeys) broadcast(keys) else keys

@@ -2,6 +2,7 @@ package graft.write
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import graft.Tables
 
 /** Table-maintenance operations every partitioned lakehouse needs at
   * scale, kept separate from the write path so they can run on their own
@@ -17,9 +18,8 @@ object Maintenance {
     * file listing and footer reads scale with file COUNT, not bytes.
     * Returns (filesBefore, filesAfter). */
   def compact(spark: SparkSession, path: String): (Long, Long) = {
-    def fileCount: Long = spark.read.parquet(path).inputFiles.length.toLong
-    val before = fileCount
-    val df = spark.read.parquet(path)
+    val df = Tables.parquet(spark, path)
+    val before = df.inputFiles.length.toLong
     val cols = df.columns
     // Rewrite through a staging location, then swap by renames only: the
     // live dir moves ASIDE (never deleted before the replacement is in
@@ -62,11 +62,11 @@ object Maintenance {
       require(fs.rename(pathP, oldP), s"rename $path -> $old failed")
       require(fs.rename(tmpP, pathP), s"rename $tmp -> $path failed")
       fs.delete(oldP, true)
-      val after = fileCount
       // content must be invariant; column set too
-      require(spark.read.parquet(path).columns.sorted.sameElements(cols.sorted),
+      val compacted = Tables.parquet(spark, path)
+      require(compacted.columns.sorted.sameElements(cols.sorted),
         "compaction changed the schema")
-      (before, after)
+      (before, compacted.inputFiles.length.toLong)
     } finally fs.delete(lockP, false)
   }
 
@@ -74,7 +74,7 @@ object Maintenance {
     * the planning-relevant statistics a maintenance job reports. */
   def partitionProfile(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .groupBy(col("year"), col("month"))
       .agg(count(lit(1)).as("rows"))
       .orderBy("year", "month")

@@ -478,7 +478,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     * IN TASKS, so the cost is a footer read per file spread across the
     * cluster — never a serial driver loop and never a data scan. */
   private def distributedCount(dataP: String): Option[Long] =
-    try Some(spark.read.parquet(dataP).count())
+    try Some(graft.Tables.parquet(spark, dataP).count())
     catch { case _: Exception => None }
 
   /** A dir's recorded row count, if its sidecar exists and parses. */

@@ -47,6 +47,38 @@ class WriterEvolutionSpec extends AnyFunSuite {
     assert(got.count() == 2)
   }
 
+  test("deleteInsert with a key the batch carries twice: the expected table, one job fewer") {
+    val path = Files.createTempDirectory("graft_dupkey").toString + "/t"
+    val history = Seq(("k1", 1.0, 2024, 1), ("k2", 2.0, 2024, 1), ("k3", 3.0, 2024, 2))
+    IncrementalWriter.deleteInsert(spark, history.toDF("trip_id", "fare", "year", "month"),
+      path, "trip_id")
+    // k2 twice (both rows land), k2 matching a target row, k4 new
+    val batch = Seq(("k2", 20.0, 2024, 1), ("k2", 21.0, 2024, 1), ("k4", 4.0, 2024, 1))
+    val (_, run) = graft.tools.Profile.record(spark.sparkContext)(IncrementalWriter.deleteInsert(
+      spark, batch.toDF("trip_id", "fare", "year", "month"), path, "trip_id"))
+    val keys = batch.map(_._1).toSet
+    val want = (history.filterNot(r => keys(r._1)) ++ batch).sorted
+    val got = spark.read.parquet(path).select("trip_id", "fare", "year", "month")
+      .as[(String, Double, Int, Int)].collect().toSeq.sorted
+    assert(got == want)
+    // 7 jobs while the target's schema took an inference job and the
+    // broadcast keys a distinct aggregate: the probe's 2 and the write's 3
+    assert(run.jobs.size == 5, run.jobs.map(j => s"${j.site} (${j.tasks} tasks)"))
+  }
+
+  test("deleteInsert refuses a plain file at its path, naming it, and leaves it unchanged") {
+    val path = Files.createTempDirectory("graft_notable").toString + "/t"
+    val file = java.nio.file.Paths.get(path)
+    Files.write(file, "not a table".getBytes)
+    val stamp = Files.getLastModifiedTime(file)
+    assert(!IncrementalWriter.tableExists(spark, path))
+    val e = intercept[IllegalArgumentException](IncrementalWriter.deleteInsert(spark,
+      Seq(("k1", 1.0, 2024, 1)).toDF("trip_id", "fare", "year", "month"), path, "trip_id"))
+    assert(e.getMessage.contains(path), e.getMessage)
+    assert(new String(Files.readAllBytes(file)) == "not a table")
+    assert(Files.getLastModifiedTime(file) == stamp)
+  }
+
   test("raw append tolerates schema drift across months (accept-any-schema)") {
     val base = Files.createTempDirectory("graft_drift")
     val raw = s"$base/raw"
