@@ -124,8 +124,9 @@ class SnapshotTable(spark: SparkSession, root: String,
   /** One data directory + the partitions masked out of it (a dynamic
     * partition overwrite excludes the replaced partitions from every
     * OLDER dir instead of deleting their files). Partition values render
-    * as colon-joined strings, entries as `dir|p1,p2`. */
-  /** `era` = how many column-mapping ops ([[Manifest.colOps]]) were
+    * as colon-joined strings, entries as `dir|p1,p2`.
+    *
+    * `era` = how many column-mapping ops ([[Manifest.colOps]]) were
     * already in force when this dir was WRITTEN: the read-time fold
     * applies only `colOps.drop(era)`, so a dir written after a
     * drop-then-re-add (or a rename whose source name was later reused)
@@ -325,11 +326,6 @@ class SnapshotTable(spark: SparkSession, root: String,
     * must go through the manifest, not guessed literals). */
   private[graft] def dataDirs(v: Int): Seq[String] = parse(v).entries.map(_.dir)
 
-  /** Refuse a write whose frame reuses a RETIRED column name (the
-    * `from` of a rename or a dropped column): the read-time fold would
-    * rename/hide the new column as if it were old-era data — silent
-    * corruption. Loud by design; a full-rewrite compaction clears the
-    * mapping history and frees the names. */
   /** Write-time type enforcement for live widenings: a frame still
     * carrying the PRE-widen type is cast up before it lands, so the
     * dir's bytes agree with the era it is stamped at. Without this a
@@ -349,14 +345,16 @@ class SnapshotTable(spark: SparkSession, root: String,
       case (d, _) => d
     }
 
-  /** The retired-name gate plus the widening cast, over the CURRENT
-    * manifest's op history — every fresh data write funnels through
-    * here (one manifest parse for both checks). */
-  private def conformToCurrentOps(df: DataFrame, what: String): DataFrame = {
-    // parseForCommit: this runs on the WRITE path, where the just-read
-    // head vanishing under a concurrent expire must surface as the
-    // retryable conflict, not a raw FileNotFoundException
-    val ops = currentVersion.map(parseForCommit(_).colOps).getOrElse(Seq.empty)
+  /** Conform a frame to the gating manifest's column-mapping `ops`
+    * before it lands: refuse a write whose frame reuses a RETIRED
+    * column name (the `from` of a rename or a dropped column — the
+    * read-time fold would rename/hide the new column as if it were
+    * old-era data: silent corruption; loud by design, and a
+    * full-rewrite compaction clears the mapping history and frees the
+    * names), then cast up to the live widenings ([[castToWidened]]).
+    * Every fresh data write funnels through here. */
+  private def conform(df: DataFrame, ops: Seq[SnapshotTable.ColOp],
+                      what: String): DataFrame = {
     if (ops.isEmpty) return df
     val retired = SnapshotTable.retiredNames(ops)
     val bad = df.columns.filter(retired)
@@ -390,8 +388,12 @@ class SnapshotTable(spark: SparkSession, root: String,
     if (sidecarMode == "eager")
       writeRowsSidecar(dir, distributedCount(dirPath(dir).toString))
 
-  private def writeData(df0: DataFrame, version: Int): String = {
-    val df = conformToCurrentOps(df0, "commit")
+  /** Write a fresh data dir for `version`, gated by `gate` — the
+    * manifest whose column-mapping ops and CHECK constraints the write
+    * must satisfy (the commit's own head on main; main's head for a
+    * branch write, see the CHECK constraints section). */
+  private def writeData(df0: DataFrame, version: Int, gate: Manifest): String = {
+    val df = conform(df0, gate.colOps, "commit")
     val dir = dataDirName(version)
     val dataP = new Path(dataDir, dir).toString
     // co-locate each output partition's rows: 1 file per partition, not
@@ -402,7 +404,7 @@ class SnapshotTable(spark: SparkSession, root: String,
       .partitionBy(partCols: _*).parquet(dataP)
     writeSchemaSidecar(dir, df.schema)
     eagerCount(dir)
-    enforceConstraints(dir)
+    enforceConstraints(dir, gate.constraints)
     dir
   }
 
@@ -578,54 +580,99 @@ class SnapshotTable(spark: SparkSession, root: String,
             s"currentVersion and retry (${e.getMessage})")
     }
 
+  /** A lineage with no commit yet: version 0, nothing in it. */
+  private val emptyHead = Manifest(0, 0, "empty", Seq.empty)
+
+  /** The head a commit on `branch` (None = main) is computed against,
+    * read ONCE per commit attempt: everything the commit needs of it —
+    * entries, deletes, metadata, the write gate — comes from this one
+    * manifest. Main's empty table reads as [[emptyHead]]; a missing
+    * branch refuses. */
+  private def headOf(branch: Option[String]): Manifest = branch match {
+    case None => currentVersion.fold(emptyHead)(parseForCommit)
+    case Some(b) => parseBranchHead(b)
+  }
+
+  /** Main's head for a commit that needs an existing table. */
+  private def liveHead(): Manifest =
+    parseForCommit(currentVersion.getOrElse(sys.error(s"no snapshot at $root")))
+
+  /** The manifest whose column-mapping ops and CHECK constraints gate
+    * a data write computed against `head` on `branch`: the head itself
+    * on main, MAIN's head for a branch write (the schema metadata is
+    * table-wide — see the CHECK constraints section). */
+  private def gateOf(branch: Option[String], head: Manifest): Manifest =
+    if (branch.isEmpty) head else headOf(None)
+
+  /** THE manifest builder, for every commit on main and on branches,
+    * [[createBranch]]'s fork and [[fastForward]]'s marker included:
+    * `state` (entries, deletes, constraints, column mapping,
+    * properties) as the version after `parent`, with its op, commit
+    * time and partition columns. A commit derives `state` from the head
+    * it read, so what it does not override carries forward. Fresh
+    * writes (era -1) are stamped with the op-list length they were
+    * written under; entries and deletes copied from older manifests
+    * keep their recorded era — see Entry.era. */
+  private def successor(parent: Manifest, op: String, state: Manifest): Manifest = {
+    val era = state.colOps.length
+    state.copy(version = parent.version + 1, parent = parent.version, op = op,
+      entries = state.entries.map(e => if (e.era >= 0) e else e.copy(era = era)),
+      deletes = state.deletes.map(d => if (d.era >= 0) d else d.copy(era = era)),
+      ts = System.currentTimeMillis(), partColsLine = partCols)
+  }
+
   /** The commit point, a compare-and-swap on the version number:
-    * `parent` is the version the caller's `entries` were computed
-    * AGAINST (not a re-read of CURRENT — re-reading here would let a
-    * commit that interleaved between the caller's read and this create
+    * `parent` is the head the caller's `state` was computed AGAINST
+    * (not a re-read of CURRENT — re-reading here would let a commit
+    * that interleaved between the caller's read and this create
     * silently vanish from the new manifest: a lost update that
     * create-exclusive on a RE-numbered manifest would never catch).
     * If anyone committed `parent + 1` first, the create-exclusive
-    * fails and the caller must recompute from the new current. */
-  private def commit(op: String, entries: Seq[Entry], parent: Int,
-                     deletes: Seq[DeleteRef] = Seq.empty,
-                     predDeletes: Seq[PredDelete] = Seq.empty,
-                     constraintsOverride: Option[Seq[(String, String)]] = None,
-                     colOpsOverride: Option[Seq[SnapshotTable.ColOp]] = None,
-                     propertiesOverride: Option[Seq[(String, String)]] = None): Int = {
-    val next = parent + 1
-    fs.mkdirs(manifestDir)
-    // CHECK constraints, the column-mapping history, and table
-    // properties ride every manifest and carry forward automatically
-    // (one metadata read); only their own DDL commits — and
-    // full-rewrite compactions, which clear colOps because the rewrite
-    // materializes the mapping — override the inherited sets
-    val pm = if (parent > 0) Some(parseForCommit(parent)) else None
-    val cons = constraintsOverride.getOrElse(
-      pm.map(_.constraints).getOrElse(Seq.empty))
-    val cops = colOpsOverride.getOrElse(
-      pm.map(_.colOps).getOrElse(Seq.empty))
-    val props = propertiesOverride.getOrElse(
-      pm.map(_.properties).getOrElse(Seq.empty))
-    // stamp fresh writes (era -1) with the op-list length they were
-    // written under; entries/deletes copied from older manifests keep
-    // their recorded era — see Entry.era
-    val m = Manifest(next, parent, op,
-      entries.map(e => if (e.era >= 0) e else e.copy(era = cops.length)),
-      deletes.map(d => if (d.era >= 0) d else d.copy(era = cops.length)),
-      predDeletes,
-      ts = System.currentTimeMillis(), partColsLine = partCols,
-      constraints = cons, colOps = cops, properties = props)
-    // the commit point: atomic-with-content arbitration through the
-    // version pointer — create-exclusive manifest + CURRENT flip in Fs
-    // mode, one conditional put in CAS mode. Either way the manifest
-    // appears fully written or not at all and exactly one racing writer
-    // wins.
-    if (!vp.publish(next, render(m).getBytes("UTF-8")))
-      throw new SnapshotConflictException(
-        s"commit of v$next lost the race (or an orphan manifest exists — " +
-          s"run repair()): v$next under $manifestDir")
-    next
+    * fails and the caller must recompute from the new current. The
+    * lineage decides only which publish arbitrates: main's, or the
+    * branch's own version namespace. */
+  private def commit(parent: Manifest, op: String, state: Manifest,
+                     branch: Option[String] = None): Int = {
+    val m = successor(parent, op, state)
+    val bytes = render(m).getBytes("UTF-8")
+    // atomic-with-content arbitration through the version pointer —
+    // create-exclusive manifest + CURRENT flip in Fs mode, one
+    // conditional put in CAS mode. Either way the manifest appears
+    // fully written or not at all and exactly one racing writer wins.
+    branch match {
+      case None =>
+        fs.mkdirs(manifestDir)
+        if (!vp.publish(m.version, bytes))
+          throw new SnapshotConflictException(
+            s"commit of v${m.version} lost the race (or an orphan manifest " +
+              s"exists — run repair()): v${m.version} under $manifestDir")
+      case Some(b) =>
+        if (!vp.publishBranch(b, m.version, bytes))
+          throw new SnapshotConflictException(s"branch '$b' commit of " +
+            s"@${m.version} lost the race — re-read branchHead and retry")
+    }
+    m.version
   }
+
+  /** The predicate selecting the rows of partitions `parts` (value
+    * tuples, string-rendered; non-empty): a disjunction of
+    * per-partition conjunctions over the partition columns. */
+  private def inPartitions(parts: Set[Seq[String]]): org.apache.spark.sql.Column =
+    parts.toSeq
+      .map(vals => partCols.zip(vals)
+        .map { case (c, x) => col(c).cast("string") === x }.reduce(_ && _))
+      .reduce(_ || _)
+
+  /** The copy-on-write partition rewrite, the one commit shape behind
+    * dynamic overwrite, MERGE, DELETE, UPDATE and scoped compaction:
+    * `head`'s state with `parts` masked out of every entry (their files
+    * stay for time travel) and `replacement`, the dir holding their
+    * new rows, appended. Deletes carry: a rewrite materializes pending
+    * merge-on-read deletes only for the partitions it rewrote. */
+  private def rewritePartitions(head: Manifest, parts: Set[Seq[String]],
+                                replacement: Option[String]): Manifest =
+    head.copy(entries = head.entries.map(e => e.copy(excluded = e.excluded ++ parts)) ++
+      replacement.map(Entry(_, Set.empty)))
 
   /** Full-table snapshot (CTAS / dbt `table` materialization shape).
     * `opTag` rides the manifest's op line — a caller-visible marker in
@@ -635,8 +682,10 @@ class SnapshotTable(spark: SparkSession, root: String,
   def commitOverwrite(df: DataFrame, opTag: String = "overwrite"): Int = {
     require(opTag.nonEmpty && !opTag.exists(c => c == '\n' || c == '\r'),
       s"opTag must be a non-empty single line: '$opTag'")
-    val base = currentVersion.getOrElse(0)
-    commit(opTag, Seq(Entry(writeData(df, base + 1), Set.empty)), base)
+    val pm = headOf(None)
+    commit(pm, opTag, pm.copy(
+      entries = Seq(Entry(writeData(df, pm.version + 1, pm), Set.empty)),
+      deletes = Seq.empty, predDeletes = Seq.empty))
   }
 
   /** Append snapshot: previous entries plus one new directory. `opTag`
@@ -657,22 +706,15 @@ class SnapshotTable(spark: SparkSession, root: String,
   def commitAppend(df: DataFrame, opTag: String = "append"): Int = {
     require(opTag.nonEmpty && !opTag.exists(c => c == '\n' || c == '\r'),
       s"opTag must be a non-empty single line: '$opTag'")
-    val base0 = currentVersion.getOrElse(0)
-    val pm0 = if (base0 == 0) None else Some(parseForCommit(base0))
-    val dir = writeData(df, base0 + 1)
-    val consAtWrite = pm0.map(_.constraints).getOrElse(Seq.empty)
-    val opsAtWrite = pm0.map(_.colOps).getOrElse(Seq.empty)
+    val pm0 = headOf(None)
+    val dir = writeData(df, pm0.version + 1, pm0)
     appendRaceHook() // test seam: inject a concurrent commit here
     var pm = pm0
-    var base = base0
     var attempts = 0
     while (true) {
       try {
-        return commit(opTag,
-          pm.map(_.entries).getOrElse(Seq.empty) :+
-            Entry(dir, Set.empty, era = opsAtWrite.length),
-          base, pm.map(_.deletes).getOrElse(Seq.empty),
-          pm.map(_.predDeletes).getOrElse(Seq.empty))
+        return commit(pm, opTag, pm.copy(
+          entries = pm.entries :+ Entry(dir, Set.empty, era = pm0.colOps.length)))
       } catch {
         case e: SnapshotConflictException =>
           attempts += 1
@@ -683,7 +725,7 @@ class SnapshotTable(spark: SparkSession, root: String,
             try {
               repair() // a crashed winner's un-flipped manifest blocks everyone
               val newBase = currentVersion.getOrElse(0)
-              if (attempts >= 5 || newBase <= base) None
+              if (attempts >= 5 || newBase <= pm.version) None
               else {
                 val newPm = parse(newBase)
                 // zombie/split-brain dedup: if a commit that landed
@@ -699,7 +741,7 @@ class SnapshotTable(spark: SparkSession, root: String,
                 def sameTagLanded: Boolean = opTag != "append" && {
                   var v = newBase
                   var found = false
-                  while (v > base && !found) {
+                  while (v > pm.version && !found) {
                     val m = parse(v)
                     if (m.op == opTag) found = true
                     v = m.parent
@@ -708,15 +750,12 @@ class SnapshotTable(spark: SparkSession, root: String,
                 }
                 // metadata moved under us → the dir's validation/era
                 // is stale; let the caller re-write and re-validate
-                if (newPm.constraints != consAtWrite ||
-                    newPm.colOps != opsAtWrite || sameTagLanded) None
-                else Some((newPm, newBase))
+                if (newPm.constraints != pm0.constraints ||
+                    newPm.colOps != pm0.colOps || sameTagLanded) None
+                else Some(newPm)
               }
             } catch { case _: Exception => None }
-          recovered match {
-            case Some((p, b)) => pm = Some(p); base = b
-            case None => throw e
-          }
+          pm = recovered.getOrElse(throw e)
       }
     }
     -1 // unreachable
@@ -727,13 +766,19 @@ class SnapshotTable(spark: SparkSession, root: String,
     * disk for time travel) and the new directory carries their
     * replacement — the reference's ingest overwrite mode
     * (`ingest_spark_bulk.py:71–81`) with history. */
-  def commitOverwritePartitions(df: DataFrame): Int = {
-    val base = currentVersion.getOrElse(0)
-    val pm = if (base == 0) None else Some(parseForCommit(base))
-    commit("overwrite_partitions",
-      overwritePartitionsPlan(pm.map(_.entries).getOrElse(Seq.empty), df, base + 1),
-      base, pm.map(_.deletes).getOrElse(Seq.empty),
-      pm.map(_.predDeletes).getOrElse(Seq.empty))
+  def commitOverwritePartitions(df: DataFrame): Int =
+    overwritePartitionsOn(None, df)
+
+  /** The overwrite-partitions commit on main or a branch: mask the
+    * partitions present in `df` out of every previous entry, append the
+    * replacement dir. */
+  private def overwritePartitionsOn(branch: Option[String], df: DataFrame): Int = {
+    val pm = headOf(branch)
+    val touched = partTuples(df)
+    require(touched.nonEmpty, "batch has no partitions")
+    commit(pm, branch.fold("overwrite_partitions")(_ => "branch_overwrite_partitions"),
+      rewritePartitions(pm, touched,
+        Some(writeData(df, pm.version + 1, gateOf(branch, pm)))), branch)
   }
 
   /** The distinct partition-value tuples of `df`, string-rendered — the
@@ -757,40 +802,6 @@ class SnapshotTable(spark: SparkSession, root: String,
     tuples
   }
 
-  /** The overwrite-partitions commit shape, shared by the main and
-    * BRANCH write paths: mask the partitions present in `df` out of
-    * every previous entry (their files stay for time travel), append
-    * the replacement dir. */
-  private def overwritePartitionsPlan(prev: Seq[Entry], df: DataFrame,
-                                      nextV: Int): Seq[Entry] = {
-    val touched = partTuples(df)
-    require(touched.nonEmpty, "batch has no partitions")
-    prev.map(e => e.copy(excluded = e.excluded ++ touched)) :+
-      Entry(writeData(df, nextV), Set.empty)
-  }
-
-  /** Snapshot MERGE (upsert by key) — `MERGE INTO t USING batch WHEN
-    * MATCHED THEN UPDATE WHEN NOT MATCHED THEN INSERT` as one commit
-    * (the Iceberg/Delta upsert shape; the versioned twin of
-    * [[IncrementalWriter.deleteInsert]]): current rows whose `keyCols`
-    * tuple appears in `batch` are replaced by the batch's rows,
-    * unmatched batch rows are inserted, everything else is untouched.
-    *
-    * Copy-on-write scoped to TOUCHED PARTITIONS: only partitions that
-    * receive batch rows or hold a matched key are rewritten (masked out
-    * of every older entry, exactly the dynamic-overwrite mechanism, so
-    * time travel to pre-merge versions still works); untouched
-    * partitions move zero bytes. Cost shape at 100 TB: one column-
-    * pruned key-locate pass over the current state (`keyCols` +
-    * partition columns only — a parquet scan of a few columns, and the
-    * anti/semi joins broadcast when the batch is small), plus a
-    * read+write of the touched partitions — the standard copy-on-write
-    * MERGE cost; a daily upsert touching a handful of partitions pays
-    * for those partitions, never the table. Keys that MOVE partitions
-    * are handled (the old row's partition is rewritten too). A batch
-    * carrying duplicate keys is REFUSED up front (it would silently
-    * insert both rows — the same loud contract as
-    * [[graft.operators.Merge.upsert]]). */
   /** MERGE's no-duplicate-source-keys contract, enforced INSIDE the
     * merge plan (SQL MERGE raises on multiple source matches; a silent
     * double-insert is the divergence class this engine refuses
@@ -839,10 +850,6 @@ class SnapshotTable(spark: SparkSession, root: String,
       .select(batch.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
   }
 
-  /** Translate the in-plan duplicate-key raise (fired inside whichever
-    * merge job first hashes the guarded batch) back into the eager
-    * contract callers pin: IllegalArgumentException with the refusal
-    * text, before anything committed. */
   /** The duplicate-guarded keyed batch, PERSISTED for the commit's
     * lifetime: every merge shape consumes the batch from several jobs
     * (locate pass, replacement write, insert routing), and an un-cached
@@ -859,6 +866,10 @@ class SnapshotTable(spark: SparkSession, root: String,
       try body(batch) finally { batch.unpersist(); () }
     }
 
+  /** Translate the in-plan duplicate-key raise (fired inside whichever
+    * merge job first hashes the guarded batch) back into the eager
+    * contract callers pin: IllegalArgumentException with the refusal
+    * text, before anything committed. */
   private def dupKeyTranslated[T](body: => T): T =
     try body catch {
       case e: Throwable =>
@@ -877,43 +888,55 @@ class SnapshotTable(spark: SparkSession, root: String,
         }
     }
 
-  def commitMerge(batch0: DataFrame, keyCols: Seq[String]): Int = {
-    require(keyCols.nonEmpty, "commitMerge needs at least one key column")
-    withUniqueKeyed(batch0, keyCols, "commitMerge") { batch =>
-      val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-      val pm = parseForCommit(base)
-      // prior MOR deletes carry: the rewrite materialized them only for
-      // the TOUCHED partitions; untouched partitions still rely on them
-      commit("merge",
-        mergePlan(snapshot(pm), pm.entries, batch, keyCols, base + 1),
-        base, pm.deletes, pm.predDeletes)
-    }
-  }
+  /** Snapshot MERGE (upsert by key) — `MERGE INTO t USING batch WHEN
+    * MATCHED THEN UPDATE WHEN NOT MATCHED THEN INSERT` as one commit
+    * (the Iceberg/Delta upsert shape; the versioned twin of
+    * [[IncrementalWriter.deleteInsert]]): current rows whose `keyCols`
+    * tuple appears in `batch` are replaced by the batch's rows,
+    * unmatched batch rows are inserted, everything else is untouched.
+    *
+    * Copy-on-write scoped to TOUCHED PARTITIONS: only partitions that
+    * receive batch rows or hold a matched key are rewritten (masked out
+    * of every older entry, exactly the dynamic-overwrite mechanism, so
+    * time travel to pre-merge versions still works); untouched
+    * partitions move zero bytes. Cost shape at 100 TB: one column-
+    * pruned key-locate pass over the current state (`keyCols` +
+    * partition columns only — a parquet scan of a few columns, and the
+    * anti/semi joins broadcast when the batch is small), plus a
+    * read+write of the touched partitions — the standard copy-on-write
+    * MERGE cost; a daily upsert touching a handful of partitions pays
+    * for those partitions, never the table. Keys that MOVE partitions
+    * are handled (the old row's partition is rewritten too). A batch
+    * carrying duplicate keys is REFUSED up front (it would silently
+    * insert both rows — the same loud contract as
+    * [[graft.operators.Merge.upsert]]). */
+  def commitMerge(batch0: DataFrame, keyCols: Seq[String]): Int =
+    mergeOn(None, batch0, keyCols, "commitMerge")
 
-  /** The copy-on-write MERGE commit shape, shared by the main and
-    * BRANCH write paths: `cur` is the lineage's current state (deletes
-    * applied), `prev` its entries. */
-  private def mergePlan(cur: DataFrame, prev: Seq[Entry], batch: DataFrame,
-                        keyCols: Seq[String], nextV: Int): Seq[Entry] = {
-    val keys = batch.select(keyCols.map(col): _*).distinct()
-    // partitions needing a rewrite: where batch rows land ∪ where
-    // matched (old) rows live — computed with partition cols + keys
-    // only, so the scan prunes to those columns
-    val touched = partTuples(
-      batch.select(partCols.map(col): _*)
-        .unionByName(cur.join(keys, keyCols, "leftsemi")
-          .select(partCols.map(col): _*)))
-    require(touched.nonEmpty, "merge batch is empty")
-    val inTouched = touched.toSeq
-      .map(vals => partCols.zip(vals)
-        .map { case (c, x) => col(c).cast("string") === x }.reduce(_ && _))
-      .reduce(_ || _)
-    // the touched partitions' surviving rows (matched keys dropped) +
-    // the whole batch = the replacement dir's contents
-    val kept = cur.filter(inTouched).join(keys, keyCols, "left_anti")
-    val newData = kept.unionByName(batch, allowMissingColumns = true)
-    prev.map(e => e.copy(excluded = e.excluded ++ touched)) :+
-      Entry(writeData(newData, nextV), Set.empty)
+  /** The copy-on-write MERGE commit on main or a branch. */
+  private def mergeOn(branch: Option[String], batch0: DataFrame,
+                      keyCols: Seq[String], api: String): Int = {
+    require(keyCols.nonEmpty, s"$api needs at least one key column")
+    withUniqueKeyed(batch0, keyCols, api) { batch =>
+      val pm = branch.fold(liveHead())(parseBranchHead)
+      val cur = snapshot(pm)
+      val keys = batch.select(keyCols.map(col): _*).distinct()
+      // partitions needing a rewrite: where batch rows land ∪ where
+      // matched (old) rows live — computed with partition cols + keys
+      // only, so the scan prunes to those columns
+      val touched = partTuples(
+        batch.select(partCols.map(col): _*)
+          .unionByName(cur.join(keys, keyCols, "leftsemi")
+            .select(partCols.map(col): _*)))
+      require(touched.nonEmpty, "merge batch is empty")
+      // the touched partitions' surviving rows (matched keys dropped) +
+      // the whole batch = the replacement dir's contents
+      val kept = cur.filter(inPartitions(touched)).join(keys, keyCols, "left_anti")
+      val newData = kept.unionByName(batch, allowMissingColumns = true)
+      commit(pm, branch.fold("merge")(_ => "branch_merge"),
+        rewritePartitions(pm, touched,
+          Some(writeData(newData, pm.version + 1, gateOf(branch, pm)))), branch)
+    }
   }
 
   /** MERGE-ON-READ upsert — the other side of the COW/MOR trade-off
@@ -939,9 +962,8 @@ class SnapshotTable(spark: SparkSession, root: String,
       // a no-op commit whose dirs fsck would flag as damage (same guard
       // shape as commitMerge's touched.nonEmpty)
       require(!batch.isEmpty, "merge batch is empty")
-      val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-      val m = parseForCommit(base)
-      val delDir = "del" + f"${base + 1}%05d" + "_" +
+      val m = liveHead()
+      val delDir = "del" + f"${m.version + 1}%05d" + "_" +
         java.util.UUID.randomUUID.toString.take(8)
       val keys = batch.select(keyCols.map(col): _*).distinct()
       // the key-frame write is the FIRST job to hash the guarded batch
@@ -951,11 +973,9 @@ class SnapshotTable(spark: SparkSession, root: String,
       catch { case e: Throwable =>
         fs.delete(new Path(dataDir, delDir), true); throw e }
       writeSchemaSidecar(delDir, keys.schema)
-      commit("merge_mor",
-        m.entries :+ Entry(writeData(batch, base + 1), Set.empty),
-        base,
-        m.deletes :+ DeleteRef(delDir, keyCols, m.entries.size),
-        m.predDeletes)
+      commit(m, "merge_mor", m.copy(
+        entries = m.entries :+ Entry(writeData(batch, m.version + 1, m), Set.empty),
+        deletes = m.deletes :+ DeleteRef(delDir, keyCols, m.entries.size)))
     }
   }
 
@@ -994,8 +1014,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     import SnapshotTable._
     require(keyCols.nonEmpty, "commitMergeGeneral needs at least one key column")
     require(clauses.nonEmpty, "commitMergeGeneral needs at least one WHEN clause")
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val pm = parseForCommit(base)
+    val pm = liveHead()
     val cur = snapshot(pm)
     require(cur.columns.forall(!_.startsWith(SnapshotTable.SrcPrefix)),
       s"table columns may not start with the reserved merge prefix " +
@@ -1169,11 +1188,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     val touched = partTuples(
       joined.filter(deleted || updatedFlag).select(partCols.map(col): _*)
         .unionByName(inserts.select(partCols.map(col): _*)))
-    if (touched.isEmpty) return base // nothing fired anywhere: no-op
-    val inTouched = touched.toSeq
-      .map(vals => partCols.zip(vals)
-        .map { case (c, x) => col(c).cast("string") === x }.reduce(_ && _))
-      .reduce(_ || _)
+    if (touched.isEmpty) return pm.version // nothing fired anywhere: no-op
     // WITH SCHEMA EVOLUTION: UPDATE SET * also carries NEW source
     // columns onto updated rows (non-updated survivors read them as
     // typed NULLs); without the flag, new source columns still join
@@ -1189,13 +1204,12 @@ class SnapshotTable(spark: SparkSession, root: String,
           isNewField(f.name)) // explicitly-assigned ones flow via valueOf
         .map(f => when(updateAllAny, col(pref + f.name))
           .otherwise(lit(null).cast(f.dataType)).as(f.name)).toSeq
-    val survivors = joined.filter(inTouched).filter(!deleted)
+    val survivors = joined.filter(inPartitions(touched)).filter(!deleted)
       .select(outFields.map(f => valueOf(f).as(f.name)).toSeq
         ++ evolvedCols: _*)
     val replacement = survivors.unionByName(inserts, allowMissingColumns = true)
-    val prev = pm.entries.map(e => e.copy(excluded = e.excluded ++ touched))
-    commit("merge", prev :+ Entry(writeData(replacement, base + 1), Set.empty),
-      base, pm.deletes, pm.predDeletes)
+    commit(pm, "merge", rewritePartitions(pm, touched,
+      Some(writeData(replacement, pm.version + 1, pm))))
   }
 
   /** Row-level DELETE as ONE commit — `DELETE FROM t WHERE cond` with
@@ -1220,8 +1234,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     * the history-wide erasure). Pending merge-on-read deletes carry
     * through for the untouched entries, same as [[commitMerge]]. */
   def commitDelete(condition: org.apache.spark.sql.Column): Int = {
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val pm = parseForCommit(base)
+    val pm = liveHead()
     val cur = snapshot(pm)
     val cond = coalesce(condition, lit(false))
     // touched partitions: one column-pruned pass (the scan reads only
@@ -1230,26 +1243,14 @@ class SnapshotTable(spark: SparkSession, root: String,
     // (partTuples) — a null-partition mask would silently lose the
     // partition's NON-matching rows
     val profile = partTuples(cur.filter(cond))
-    if (profile.isEmpty) return base // nothing matches: no-op, no commit
-    val inTouched = profile.toSeq
-      .map(vals => partCols.zip(vals)
-        .map { case (c, x) => col(c).cast("string") === x }.reduce(_ && _))
-      .reduce(_ || _)
-    val kept = cur.filter(inTouched).filter(!cond)
+    if (profile.isEmpty) return pm.version // nothing matches: no-op, no commit
+    val kept = cur.filter(inPartitions(profile)).filter(!cond)
     // partitions with survivors need the rewrite; fully-deleted ones
     // are metadata-only (mask, no bytes moved)
     val partial = partTuples(kept)
-    val prev = pm.entries.map(e => e.copy(excluded = e.excluded ++ profile))
-    val entries =
-      if (partial.isEmpty) prev // whole partitions gone: zero data movement
-      else {
-        val inPartial = partial.toSeq
-          .map(vals => partCols.zip(vals)
-            .map { case (c, x) => col(c).cast("string") === x }.reduce(_ && _))
-          .reduce(_ || _)
-        prev :+ Entry(writeData(kept.filter(inPartial), base + 1), Set.empty)
-      }
-    commit("delete", entries, base, pm.deletes, pm.predDeletes)
+    commit(pm, "delete", rewritePartitions(pm, profile,
+      if (partial.isEmpty) None // whole partitions gone: zero data movement
+      else Some(writeData(kept.filter(inPartitions(partial)), pm.version + 1, pm))))
   }
 
   /** Row-level UPDATE as ONE commit — `UPDATE t SET col = expr, ...
@@ -1288,8 +1289,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     require(assignments.nonEmpty, "commitUpdate needs at least one SET assignment")
     require(assignments.map(_._1).distinct.size == assignments.size,
       s"duplicate SET column among (${assignments.map(_._1).mkString(", ")})")
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val pm = parseForCommit(base)
+    val pm = liveHead()
     val cur = snapshot(pm)
     val byName = assignments.toMap
     assignments.foreach { case (c, _) =>
@@ -1299,23 +1299,18 @@ class SnapshotTable(spark: SparkSession, root: String,
     }
     val cond = coalesce(condition, lit(false))
     val profile = partTuples(cur.filter(cond))
-    if (profile.isEmpty) return base // nothing matches: no-op, no commit
-    val inTouched = profile.toSeq
-      .map(vals => partCols.zip(vals)
-        .map { case (c, x) => col(c).cast("string") === x }.reduce(_ && _))
-      .reduce(_ || _)
+    if (profile.isEmpty) return pm.version // nothing matches: no-op, no commit
     // one select over the touched rows: every assignment RHS resolves
     // against the ORIGINAL columns (pre-update row), matching rows take
     // the cast assignment, survivors pass through — column order and
     // names preserved, so the replacement dir's schema is the table's
-    val updated = cur.filter(inTouched).select(cur.schema.fields.map { f =>
+    val updated = cur.filter(inPartitions(profile)).select(cur.schema.fields.map { f =>
       byName.get(f.name)
         .map(a => when(cond, a.cast(f.dataType)).otherwise(col(f.name)).as(f.name))
         .getOrElse(col(f.name))
     }.toIndexedSeq: _*)
-    val prev = pm.entries.map(e => e.copy(excluded = e.excluded ++ profile))
-    commit("update", prev :+ Entry(writeData(updated, base + 1), Set.empty),
-      base, pm.deletes, pm.predDeletes)
+    commit(pm, "update", rewritePartitions(pm, profile,
+      Some(writeData(updated, pm.version + 1, pm))))
   }
 
   /** MERGE-ON-READ row-level DELETE — the predicate itself IS the
@@ -1333,8 +1328,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     * kept. The condition must be expressible/round-trippable as SQL
     * over the table's columns (checked at commit time, fail-fast). */
   def commitDeleteMor(condition: org.apache.spark.sql.Column): Int = {
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val m = parseForCommit(base)
+    val m = liveHead()
     // render the condition to SQL by ANALYZING it against the current
     // state and taking the resolved Filter's condition — one step both
     // fail-fasts (an unresolvable predicate dies here, at commit, not
@@ -1348,8 +1342,8 @@ class SnapshotTable(spark: SparkSession, root: String,
       s"delete predicate renders to multi-line SQL (unsupported): $sql")
     // the round trip must PARSE too (sql -> expr is the read path)
     expr(sql)
-    commit("delete_mor", m.entries, base, m.deletes,
-      m.predDeletes :+ PredDelete(sql, m.entries.size))
+    commit(m, "delete_mor",
+      m.copy(predDeletes = m.predDeletes :+ PredDelete(sql, m.entries.size)))
   }
 
   /** Append-only incremental read: the rows INSERTED between `fromV`
@@ -1437,11 +1431,11 @@ class SnapshotTable(spark: SparkSession, root: String,
     * Cost: one read+write of the live bytes — the same floor as any
     * engine's rewrite_data_files. */
   def commitCompact(clusterCol: String, nFiles: Int = 8): Int = {
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
+    val pm = liveHead()
     // full rewrite materializes the column mapping → clear the history
-    commit("compact",
-      Seq(writeClustered(readVersion(base), base + 1, clusterCol, nFiles)), base,
-      colOpsOverride = Some(Seq.empty))
+    commit(pm, "compact", pm.copy(
+      entries = Seq(writeClustered(snapshot(pm), pm.version + 1, pm, clusterCol, nFiles)),
+      deletes = Seq.empty, predDeletes = Seq.empty, colOps = Seq.empty))
   }
 
   /** Plain bin-packing compaction (Delta's clause-less `OPTIMIZE`): the
@@ -1457,14 +1451,14 @@ class SnapshotTable(spark: SparkSession, root: String,
     * [[commitCompact]]/[[commitCompactZ]] instead when reads filter on
     * non-partition columns and deserve a stats-indexed clustering. */
   def commitCompactFiles(): Int = {
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
+    val pm = liveHead()
     // full rewrite materializes the column mapping (the rewrite reads
     // the FOLDED current state, so files land under logical names) →
     // clear the history, restoring the fast path and freeing retired
     // names for reuse
-    commit("compact",
-      Seq(Entry(writeData(readVersion(base), base + 1), Set.empty)), base,
-      colOpsOverride = Some(Seq.empty))
+    commit(pm, "compact", pm.copy(
+      entries = Seq(Entry(writeData(snapshot(pm), pm.version + 1, pm), Set.empty)),
+      deletes = Seq.empty, predDeletes = Seq.empty, colOps = Seq.empty))
   }
 
   /** PARTITION-SCOPED bin-packing compaction (Delta's `OPTIMIZE ...
@@ -1482,8 +1476,8 @@ class SnapshotTable(spark: SparkSession, root: String,
     * as [[commitUpdate]]. A predicate matching no partitions is a
     * no-op (current version, no empty commit). */
   def commitCompactFilesWhere(condition: org.apache.spark.sql.Column): Int = {
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val cur = readVersion(base)
+    val pm = liveHead()
+    val cur = snapshot(pm)
     val cond = coalesce(condition, lit(false))
     val refs = cur.filter(cond).queryExecution.analyzed.collectFirst {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
@@ -1493,16 +1487,9 @@ class SnapshotTable(spark: SparkSession, root: String,
       s"scoped compaction takes a PARTITION predicate over " +
         s"(${partCols.mkString(", ")}); got columns (${refs.toSeq.sorted.mkString(", ")})")
     val profile = partTuples(cur.filter(cond))
-    if (profile.isEmpty) return base // nothing to compact: no-op
-    val inTouched = profile.toSeq
-      .map(vals => partCols.zip(vals)
-        .map { case (c, x) => col(c).cast("string") === x }.reduce(_ && _))
-      .reduce(_ || _)
-    val pm = parseForCommit(base)
-    val prev = pm.entries.map(e => e.copy(excluded = e.excluded ++ profile))
-    commit("compact",
-      prev :+ Entry(writeData(cur.filter(inTouched), base + 1), Set.empty),
-      base, pm.deletes, pm.predDeletes)
+    if (profile.isEmpty) return pm.version // nothing to compact: no-op
+    commit(pm, "compact", rewritePartitions(pm, profile,
+      Some(writeData(cur.filter(inPartitions(profile)), pm.version + 1, pm))))
   }
 
   /** Multi-dimensional snapshot compaction — Delta's `OPTIMIZE ZORDER
@@ -1517,19 +1504,19 @@ class SnapshotTable(spark: SparkSession, root: String,
     * queries filter on more than one dimension. History preserved,
     * masks folded in, same optimistic commit as [[commitCompact]]. */
   def commitCompactZ(clusterCols: Seq[String], nFiles: Int = 8): Int = {
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val dir = dataDirName(base + 1)
+    val pm = liveHead()
+    val dir = dataDirName(pm.version + 1)
     val dataP = new Path(dataDir, dir).toString
-    val cur = readVersion(base)
+    val cur = snapshot(pm)
     IncrementalWriter.overwriteZOrdered(cur, dataP, clusterCols, nFiles, freshDir = true)
     writeSchemaSidecar(dir, cur.schema)
     eagerCount(dir)
-    enforceConstraints(dir)
+    enforceConstraints(dir, pm.constraints)
     clusterCols.foreach(c => graft.sources.DataSkipping.buildStats(
       spark, dataP, c, statsPath(dir, c).toString))
     // full rewrite materializes the column mapping → clear the history
-    commit("compact_z", Seq(Entry(dir, Set.empty)), base,
-      colOpsOverride = Some(Seq.empty))
+    commit(pm, "compact_z", pm.copy(entries = Seq(Entry(dir, Set.empty)),
+      deletes = Seq.empty, predDeletes = Seq.empty, colOps = Seq.empty))
   }
 
   // ---- clustered commits with a commit-time stats index (the
@@ -1562,32 +1549,30 @@ class SnapshotTable(spark: SparkSession, root: String,
     * index, one commit. */
   def commitOverwriteClustered(df: DataFrame, clusterCol: String,
                                nFiles: Int = 8): Int = {
-    val base = currentVersion.getOrElse(0)
-    commit("overwrite_clustered",
-      Seq(writeClustered(df, base + 1, clusterCol, nFiles)), base)
+    val pm = headOf(None)
+    commit(pm, "overwrite_clustered", pm.copy(
+      entries = Seq(writeClustered(df, pm.version + 1, pm, clusterCol, nFiles)),
+      deletes = Seq.empty, predDeletes = Seq.empty))
   }
 
   /** Append a clustered data dir (its own stats index) to the current
     * snapshot's entries. */
   def commitAppendClustered(df: DataFrame, clusterCol: String,
                             nFiles: Int = 8): Int = {
-    val base = currentVersion.getOrElse(0)
-    val pm = if (base == 0) None else Some(parseForCommit(base))
-    commit("append_clustered",
-      pm.map(_.entries).getOrElse(Seq.empty) :+ writeClustered(df, base + 1, clusterCol, nFiles),
-      base, pm.map(_.deletes).getOrElse(Seq.empty),
-      pm.map(_.predDeletes).getOrElse(Seq.empty))
+    val pm = headOf(None)
+    commit(pm, "append_clustered", pm.copy(entries =
+      pm.entries :+ writeClustered(df, pm.version + 1, pm, clusterCol, nFiles)))
   }
 
-  private def writeClustered(df0: DataFrame, version: Int, clusterCol: String,
-                             nFiles: Int): Entry = {
-    val df = conformToCurrentOps(df0, "clustered commit")
+  private def writeClustered(df0: DataFrame, version: Int, gate: Manifest,
+                             clusterCol: String, nFiles: Int): Entry = {
+    val df = conform(df0, gate.colOps, "clustered commit")
     val dir = dataDirName(version)
     val dataP = new Path(dataDir, dir).toString
     IncrementalWriter.overwriteClustered(df, dataP, clusterCol, nFiles, freshDir = true)
     writeSchemaSidecar(dir, df.schema)
     eagerCount(dir)
-    enforceConstraints(dir)
+    enforceConstraints(dir, gate.constraints)
     graft.sources.DataSkipping.buildStats(spark, dataP, clusterCol,
       statsPath(dir, clusterCol).toString)
     Entry(dir, Set.empty)
@@ -1658,13 +1643,14 @@ class SnapshotTable(spark: SparkSession, root: String,
   def stageAppend(df0: DataFrame, name: String): String = {
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
       s"stage name must be [A-Za-z0-9_]+: '$name'")
-    val df = conformToCurrentOps(df0, "stage")
+    val gate = headOf(None)
+    val df = conform(df0, gate.colOps, "stage")
     val dir = s"w_$name"
     WriteDistribution.freshDir(WriteDistribution.byPartition(df, partCols))
       .partitionBy(partCols: _*).parquet(new Path(dataDir, dir).toString)
     writeSchemaSidecar(dir, df.schema)
     eagerCount(dir)
-    enforceConstraints(dir)
+    enforceConstraints(dir, gate.constraints)
     dir
   }
 
@@ -1675,24 +1661,36 @@ class SnapshotTable(spark: SparkSession, root: String,
     // the staged dir joins as the last entry, written under the current
     // column mapping (stageAppend conforms it) and after every pending
     // delete's scope — exactly what publishStaged would commit
-    val m = currentVersion.map(parse)
-      .getOrElse(Manifest(0, 0, "staged", Seq.empty))
+    val m = currentVersion.fold(emptyHead)(parse)
     snapshot(m.copy(entries = m.entries :+ Entry(stagedDir, Set.empty, m.colOps.size)))
   }
 
   /** Publish a staged dir as a real append commit — zero data movement
     * (the bytes are already in `_data`); the manifest flip is the only
-    * thing the audit gate defers. */
+    * thing the audit gate defers. The stage was gated against the head
+    * at staging time, so the head it publishes on gates it again: a
+    * rename, drop or widening since then refuses a stage whose schema
+    * sidecar still carries the retired name or the narrower type, and
+    * a CHECK added since then refuses a stage holding a violating row.
+    * A refusal writes nothing and leaves the stage pending
+    * ([[abandonStaged]] discards it). */
   def publishStaged(stagedDir: String): Int = {
     require(fs.exists(new Path(dataDir, stagedDir)),
       s"no staged dir '$stagedDir' under $dataDir (abandoned or never staged)")
-    val base = currentVersion.getOrElse(0)
-    val pm = if (base == 0) None else Some(parseForCommit(base))
-    val prev = pm.map(_.entries).getOrElse(Seq.empty)
-    require(!prev.exists(_.dir == stagedDir), s"'$stagedDir' is already published")
-    commit("publish_append", prev :+ Entry(stagedDir, Set.empty),
-      base, pm.map(_.deletes).getOrElse(Seq.empty),
-      pm.map(_.predDeletes).getOrElse(Seq.empty))
+    val pm = headOf(None)
+    require(!pm.entries.exists(_.dir == stagedDir), s"'$stagedDir' is already published")
+    if (pm.colOps.nonEmpty) {
+      val staged = readDir(stagedDir)
+      require(conform(staged, pm.colOps, "publish").schema == staged.schema,
+        s"publish refused: '$stagedDir' was staged before a widening of one " +
+          "of its columns and holds the narrower type — abandon it and " +
+          "stage the batch again")
+    }
+    violation(stagedDir, pm.constraints).foreach(v =>
+      throw new IllegalArgumentException(s"publish refused: $v — " +
+        s"'$stagedDir' stays staged (abandonStaged discards it)"))
+    commit(pm, "publish_append",
+      pm.copy(entries = pm.entries :+ Entry(stagedDir, Set.empty)))
   }
 
   // ---- CHECK constraints (Delta's table constraints, over the
@@ -1726,8 +1724,7 @@ class SnapshotTable(spark: SparkSession, root: String,
   def addConstraint(name: String, checkSql: String): Int = {
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
       s"constraint name must be [A-Za-z0-9_]+: '$name'")
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val m = parseForCommit(base)
+    val m = liveHead()
     require(!m.constraints.exists(_._1 == name),
       s"constraint '$name' already exists on $root (drop it first)")
     val cur = snapshot(m)
@@ -1744,19 +1741,18 @@ class SnapshotTable(spark: SparkSession, root: String,
     require(bad.isEmpty,
       s"cannot add constraint '$name': existing rows violate CHECK ($sql), " +
         s"e.g. ${bad.headOption.getOrElse("")}")
-    commit(s"add_constraint_$name", m.entries, base, m.deletes, m.predDeletes,
-      Some(m.constraints :+ (name -> sql)))
+    commit(m, s"add_constraint_$name",
+      m.copy(constraints = m.constraints :+ (name -> sql)))
   }
 
   /** Remove a named constraint — one commit; older versions keep it. */
   def dropConstraint(name: String): Int = {
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val m = parseForCommit(base)
+    val m = liveHead()
     require(m.constraints.exists(_._1 == name),
       s"no constraint '$name' on $root " +
         s"(have: ${m.constraints.map(_._1).mkString(", ")})")
-    commit(s"drop_constraint_$name", m.entries, base, m.deletes, m.predDeletes,
-      Some(m.constraints.filterNot(_._1 == name)))
+    commit(m, s"drop_constraint_$name",
+      m.copy(constraints = m.constraints.filterNot(_._1 == name)))
   }
 
   // ---- column mapping (Delta's RENAME/DROP COLUMN without rewrite):
@@ -1808,17 +1804,15 @@ class SnapshotTable(spark: SparkSession, root: String,
     Seq(from, to).foreach(n => require(
       n.nonEmpty && n.forall(c => c.isLetterOrDigit || c == '_'),
       s"column name must be [A-Za-z0-9_]+: '$n'"))
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val m = parseForCommit(base)
+    val m = liveHead()
     val schema = snapshot(m).columns.toSet
     require(schema.contains(from), s"no column '$from' to rename " +
       s"(have: ${schema.toSeq.sorted.mkString(", ")})")
     require(!schema.contains(to),
       s"rename target '$to' already exists")
     requireMappableColumn(m, from, "rename")
-    commit(s"rename_column_${from}_to_$to", m.entries, base, m.deletes,
-      m.predDeletes,
-      colOpsOverride = Some(m.colOps :+ SnapshotTable.ColRename(from, to)))
+    commit(m, s"rename_column_${from}_to_$to",
+      m.copy(colOps = m.colOps :+ SnapshotTable.ColRename(from, to)))
   }
 
   /** Drop a column — one metadata commit, zero data movement (Delta's
@@ -1829,15 +1823,14 @@ class SnapshotTable(spark: SparkSession, root: String,
   def dropColumn(name: String): Int = {
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
       s"column name must be [A-Za-z0-9_]+: '$name'")
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val m = parseForCommit(base)
+    val m = liveHead()
     val schema = snapshot(m).columns.toSet
     require(schema.contains(name), s"no column '$name' to drop " +
       s"(have: ${schema.toSeq.sorted.mkString(", ")})")
     require(schema.size > 1, "cannot drop the last data column")
     requireMappableColumn(m, name, "drop")
-    commit(s"drop_column_$name", m.entries, base, m.deletes, m.predDeletes,
-      colOpsOverride = Some(m.colOps :+ SnapshotTable.ColDrop(name)))
+    commit(m, s"drop_column_$name",
+      m.copy(colOps = m.colOps :+ SnapshotTable.ColDrop(name)))
   }
 
   /** Add a column explicitly — one metadata commit (`ALTER TABLE ...
@@ -1864,8 +1857,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     }
     require(cols.map(_._1.toLowerCase).distinct.size == cols.size,
       s"duplicate column among (${cols.map(_._1).mkString(", ")})")
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val m = parseForCommit(base)
+    val m = liveHead()
     val cur = snapshot(m)
     cols.foreach { case (name, _) =>
       require(!cur.columns.contains(name), s"column '$name' already exists")
@@ -1874,9 +1866,8 @@ class SnapshotTable(spark: SparkSession, root: String,
       SnapshotTable.ColAdd(name,
         org.apache.spark.sql.types.DataType.fromDDL(typeDdl).catalogString)
     }
-    commit(s"add_column_${cols.map(_._1).mkString("_")}", m.entries, base,
-      m.deletes, m.predDeletes,
-      colOpsOverride = Some(m.colOps ++ adds))
+    commit(m, s"add_column_${cols.map(_._1).mkString("_")}",
+      m.copy(colOps = m.colOps ++ adds))
   }
 
   // ---- versioned table properties (Delta's TBLPROPERTIES as commit
@@ -1898,26 +1889,23 @@ class SnapshotTable(spark: SparkSession, root: String,
       require(!v.contains('|') && !v.exists(c => c == '\n' || c == '\r'),
         s"property value for '$k' may not contain '|' or newlines")
     }
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val m = parseForCommit(base)
+    val m = liveHead()
     val merged = (m.properties.filterNot(p => kvs.exists(_._1 == p._1)) ++ kvs)
       .sortBy(_._1)
-    commit("set_properties", m.entries, base, m.deletes, m.predDeletes,
-      propertiesOverride = Some(merged))
+    commit(m, "set_properties", m.copy(properties = merged))
   }
 
   /** Remove properties — one commit; unknown keys refuse loudly. */
   def unsetProperties(keys: Seq[String]): Int = {
     require(keys.nonEmpty, "unsetProperties needs at least one key")
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val m = parseForCommit(base)
+    val m = liveHead()
     val missing = keys.filterNot(k => m.properties.exists(_._1 == k))
     require(missing.isEmpty,
       s"no such propert${if (missing.size == 1) "y" else "ies"}: " +
         s"${missing.mkString(", ")} " +
         s"(have: ${m.properties.map(_._1).mkString(", ")})")
-    commit("unset_properties", m.entries, base, m.deletes, m.predDeletes,
-      propertiesOverride = Some(m.properties.filterNot(p => keys.contains(p._1))))
+    commit(m, "unset_properties",
+      m.copy(properties = m.properties.filterNot(p => keys.contains(p._1))))
   }
 
   /** Loss-free widenings by catalog type string — the closed set a
@@ -1940,8 +1928,7 @@ class SnapshotTable(spark: SparkSession, root: String,
   def widenColumn(name: String, toDdl: String): Int = {
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
       s"column name must be [A-Za-z0-9_]+: '$name'")
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val m = parseForCommit(base)
+    val m = liveHead()
     val cur = snapshot(m)
     require(cur.columns.contains(name), s"no column '$name' to widen " +
       s"(have: ${cur.columns.sorted.mkString(", ")})")
@@ -1954,35 +1941,34 @@ class SnapshotTable(spark: SparkSession, root: String,
       s"'$fromT' -> '$toT' is not a loss-free widening " +
         s"(allowed from '$fromT': ${widenings.getOrElse(fromT, Set.empty)
           .toSeq.sorted.mkString(", ")})")
-    commit(s"widen_column_${name}_to_$toT", m.entries, base, m.deletes,
-      m.predDeletes,
-      colOpsOverride = Some(m.colOps :+ SnapshotTable.ColWiden(name, toT)))
+    commit(m, s"widen_column_${name}_to_$toT",
+      m.copy(colOps = m.colOps :+ SnapshotTable.ColWiden(name, toT)))
   }
 
-  /** Gate a just-written data dir on the current constraint set: any
-    * provably-FALSE row deletes the dir and refuses the commit before
-    * its manifest exists (nothing to roll back — the dir was invisible).
-    * Reads the written parquet back pruned to the CHECK's columns;
-    * never re-executes the writer's upstream plan. */
-  private def enforceConstraints(dir: String): Unit = {
-    // write-path fetch: translate a concurrent-expire vanish into the
-    // retryable conflict (the public `constraints` accessor keeps the
-    // read-path contract)
-    val cons = currentVersion.map(parseForCommit(_).constraints)
-      .getOrElse(Seq.empty)
-    if (cons.isEmpty) return
-    val written = readDir(dir)
-    cons.foreach { case (name, sql) =>
-      val bad = written.filter(expr(sql) === lit(false)).limit(1).collect()
-      if (bad.nonEmpty) {
-        fs.delete(new Path(dataDir, dir), true)
-        fs.delete(new Path(statsDir, dir), true)
-        throw new IllegalArgumentException(
-          s"commit refused: constraint '$name' CHECK ($sql) is violated, " +
-            s"e.g. by row ${bad.head}")
-      }
+  /** The first of `cons` that a row of data dir `dir` provably
+    * violates, described with that row. Reads the written parquet back
+    * pruned to each CHECK's columns; never re-executes the writer's
+    * upstream plan. */
+  private def violation(dir: String, cons: Seq[(String, String)]): Option[String] =
+    if (cons.isEmpty) None
+    else {
+      val written = readDir(dir)
+      cons.iterator.flatMap { case (name, sql) =>
+        written.filter(expr(sql) === lit(false)).limit(1).collect().headOption
+          .map(row => s"constraint '$name' CHECK ($sql) is violated, e.g. by row $row")
+      }.nextOption()
     }
-  }
+
+  /** Gate a just-written data dir on the gating manifest's constraints
+    * `cons`: any provably-FALSE row deletes the dir and refuses the
+    * commit before its manifest exists (nothing to roll back — the dir
+    * was invisible). */
+  private def enforceConstraints(dir: String, cons: Seq[(String, String)]): Unit =
+    violation(dir, cons).foreach { v =>
+      fs.delete(new Path(dataDir, dir), true)
+      fs.delete(new Path(statsDir, dir), true)
+      throw new IllegalArgumentException(s"commit refused: $v")
+    }
 
   /** Metadata-only table detail (Delta's `DESCRIBE DETAIL`): the
     * CURRENT version's shape — entry/file/byte counts, partition
@@ -2078,20 +2064,24 @@ class SnapshotTable(spark: SparkSession, root: String,
   // the same immutable data dirs — the complement of tags (immutable
   // pointers). A branch forks from a main version and takes its own
   // commits — append, dynamic partition overwrite, and COW merge, the
-  // full multi-batch-load write surface — in a PER-BRANCH manifest
-  // namespace (`bv_<name>_NNNNN.txt`), so branch commits get exactly
-  // the same single-winner create-exclusive CAS as main commits with
-  // zero version-number collisions against main. Main never sees branch
-  // state until [[fastForward]] publishes the branch head's entries as
-  // an ordinary main commit — zero data movement, arbitrated by main's
-  // own CAS. This is the mechanism behind branch-based WAP
-  // (`spark.wap.branch`): stage a whole multi-commit load on a branch,
-  // audit readBranch, publish or drop. Maintenance ([[expire]],
-  // [[vacuum]], [[purge]], [[fsck]]) treats branch-referenced dirs as
-  // live. Storage and arbitration live in the version pointer (same
-  // seam as tags): numbered create-exclusive files in Fs mode;
-  // attempt-unique chained manifests with a CAS'd `branch/<name>` ref
-  // in conditional-store mode. ----
+  // full multi-batch-load write surface. Main is just another ref: a
+  // branch commit runs the same code as its main twin ([[commit]],
+  // [[successor]], the shared write shapes), and the lineage decides
+  // only which head the commit reads ([[headOf]]) and which publish
+  // arbitrates it — the PER-BRANCH manifest namespace
+  // (`bv_<name>_NNNNN.txt`) gives branch commits the same single-winner
+  // CAS as main commits with zero version-number collisions against
+  // main. Data writes on a branch are gated by MAIN's head
+  // ([[gateOf]]). Main never sees branch state until [[fastForward]]
+  // publishes the branch head's entries as an ordinary main commit —
+  // zero data movement, arbitrated by main's own CAS. This is the
+  // mechanism behind branch-based WAP (`spark.wap.branch`): stage a
+  // whole multi-commit load on a branch, audit readBranch, publish or
+  // drop. Maintenance ([[expire]], [[vacuum]], [[purge]], [[fsck]])
+  // treats branch-referenced dirs as live. Storage and arbitration live
+  // in the version pointer (same seam as tags): numbered
+  // create-exclusive files in Fs mode; attempt-unique chained manifests
+  // with a CAS'd `branch/<name>` ref in conditional-store mode. ----
 
   private def branchVersions(name: String): Seq[Int] = vp.branchVersions(name)
 
@@ -2113,11 +2103,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     // dirs exactly as a main read of the fork version would — without
     // it a branch forked after a rename would surface PHYSICAL names
     if (!vp.publishBranch(name, 1,
-        render(Manifest(1, 0, s"branch_from_$fromV", m.entries, m.deletes,
-          m.predDeletes, ts = System.currentTimeMillis(),
-          partColsLine = partCols, constraints = m.constraints,
-          colOps = m.colOps, properties = m.properties))
-          .getBytes("UTF-8")))
+        render(successor(emptyHead, s"branch_from_$fromV", m)).getBytes("UTF-8")))
       throw new IllegalArgumentException(
         s"branch '$name' already exists (drop it first or pick a new name)")
   }
@@ -2132,36 +2118,14 @@ class SnapshotTable(spark: SparkSession, root: String,
     parseBranch(name, branchHead(name)
       .getOrElse(sys.error(s"no branch '$name' at $root")))
 
-  /** The branch commit point, shared by every branch write shape: parse
-    * the head, build the next manifest's entries from it, publish with
-    * the same optimistic single-winner protocol as main commits
-    * (create-exclusive on the next branch-version) — two writers on one
-    * branch produce one winner and one [[SnapshotConflictException]]. */
-  private def commitToBranch(name: String, op: String)(
-      build: (Manifest, Int) => Seq[Entry]): Int = {
-    val head = branchHead(name)
-      .getOrElse(sys.error(s"no branch '$name' at $root"))
-    val pm = parseBranch(name, head)
-    val next = head + 1
-    if (!vp.publishBranch(name, next,
-        render(Manifest(next, head, op,
-          build(pm, next).map(e =>
-            if (e.era >= 0) e else e.copy(era = pm.colOps.length)),
-          pm.deletes, pm.predDeletes, ts = System.currentTimeMillis(),
-          partColsLine = partCols, constraints = pm.constraints,
-          colOps = pm.colOps, properties = pm.properties))
-          .getBytes("UTF-8")))
-      throw new SnapshotConflictException(
-        s"branch '$name' commit of @$next lost the race — re-read branchHead and retry")
-    next
-  }
-
   /** Append a batch to a branch — main is untouched; the branch head
     * advances. */
-  def commitAppendToBranch(name: String, df: DataFrame): Int =
-    commitToBranch(name, "branch_append") { (pm, next) =>
-      pm.entries :+ Entry(writeData(df, next), Set.empty)
-    }
+  def commitAppendToBranch(name: String, df: DataFrame): Int = {
+    val branch = Some(name)
+    val pm = headOf(branch)
+    commit(pm, "branch_append", pm.copy(entries = pm.entries :+
+      Entry(writeData(df, pm.version + 1, gateOf(branch, pm)), Set.empty)), branch)
+  }
 
   /** Dynamic partition overwrite ON A BRANCH — the write shape a
     * branch-based WAP load actually needs when a partition re-arrives
@@ -2169,22 +2133,14 @@ class SnapshotTable(spark: SparkSession, root: String,
     * [[commitOverwritePartitions]], scoped to the branch lineage; main
     * never sees it until [[fastForward]]). */
   def commitOverwritePartitionsToBranch(name: String, df: DataFrame): Int =
-    commitToBranch(name, "branch_overwrite_partitions") { (pm, next) =>
-      overwritePartitionsPlan(pm.entries, df, next)
-    }
+    overwritePartitionsOn(Some(name), df)
 
   /** Copy-on-write MERGE (upsert by key) ON A BRANCH — completes the
     * branch write surface ([[commitMerge]] semantics against the
     * branch's state; same duplicate-key refusal). */
   def commitMergeToBranch(name: String, batch0: DataFrame,
-                          keyCols: Seq[String]): Int = {
-    require(keyCols.nonEmpty, "commitMergeToBranch needs at least one key column")
-    withUniqueKeyed(batch0, keyCols, "commitMergeToBranch") { batch =>
-      commitToBranch(name, "branch_merge") { (pm, next) =>
-        mergePlan(snapshot(pm), pm.entries, batch, keyCols, next)
-      }
-    }
-  }
+                          keyCols: Seq[String]): Int =
+    mergeOn(Some(name), batch0, keyCols, "commitMergeToBranch")
 
   /** Race-injection seam for the check→publish window of strict
     * [[fastForward]] — a no-op in production; tests override it to
@@ -2230,49 +2186,38 @@ class SnapshotTable(spark: SparkSession, root: String,
     * skipped — the fork point stays put and the next strict publish
     * refuses conservatively; never unsafe.) */
   def fastForward(name: String, strict: Boolean = true): Int = {
-    val head = branchHead(name)
-      .getOrElse(sys.error(s"no branch '$name' at $root"))
+    val bm = parseBranchHead(name)
     // STRICT mode's CAS base is the CHECKED fork version, never a
     // re-read of CURRENT: commit()'s own contract says `parent` is the
-    // version the entries were computed against, and a re-read here
-    // would let a main commit that interleaves between this check and
-    // the publish become the base — the publish would then land on top
-    // of it and silently roll it out of CURRENT state, the exact
-    // outcome strict mode exists to refuse. With `fork` as the base,
-    // the create-exclusive on fork+1 itself catches the interleaver
+    // head the state was computed against, and a re-read here would let
+    // a main commit that interleaves between this check and the publish
+    // become the base — the publish would then land on top of it and
+    // silently roll it out of CURRENT state, the exact outcome strict
+    // mode exists to refuse. With the checked head as the base, the
+    // create-exclusive on fork+1 itself catches the interleaver
     // (SnapshotConflictException), closing the check→publish window.
-    val base =
-      if (strict) {
-        val fork = branchForkPoint(name)
-        val cur = currentVersion.getOrElse(0)
-        require(cur == fork,
-          s"fast-forward of '$name' refused: main moved v$fork -> v$cur since " +
-            "the fork; rebase the branch or publish with strict = false " +
-            "(rollback semantics for main's newer commits)")
-        raceWindowHook()
-        fork
-      } else currentVersion.getOrElse(0)
-    val bm = parseBranch(name, head)
-    // publish with the BRANCH's schema metadata: its entries' op eras
-    // index into its colOps list, and the published state must read on
-    // main exactly as it read on the branch (in strict mode this
-    // equals the fork's = main's metadata anyway; under FORCE the
+    val main = headOf(None)
+    if (strict) {
+      val fork = branchForkPoint(name)
+      require(main.version == fork,
+        s"fast-forward of '$name' refused: main moved v$fork -> v${main.version} " +
+          "since the fork; rebase the branch or publish with strict = false " +
+          "(rollback semantics for main's newer commits)")
+      raceWindowHook()
+    }
+    // publish the BRANCH's state with its schema metadata: its entries'
+    // op eras index into its colOps list, and the published state must
+    // read on main exactly as it read on the branch (in strict mode
+    // this equals the fork's = main's metadata anyway; under FORCE the
     // branch's wins, consistent with its rollback semantics)
-    val newMain = commit(s"fast_forward_$name", bm.entries,
-      base, bm.deletes, bm.predDeletes,
-      constraintsOverride = Some(bm.constraints),
-      colOpsOverride = Some(bm.colOps),
-      propertiesOverride = Some(bm.properties))
-    // advance the fork point: same entries, marker op — a reader of the
+    val newMain = commit(main, s"fast_forward_$name", bm)
+    // advance the fork point: same state, marker op — a reader of the
     // branch sees identical state, and the marker's single-winner
     // publish is best-effort (a concurrent branch commit winning the
     // slot leaves the old fork point, which only REFUSES more — the
     // racing commit's rows were not in what main just received)
-    vp.publishBranch(name, head + 1,
-      render(Manifest(head + 1, head, s"rebased_to_$newMain", bm.entries,
-        bm.deletes, bm.predDeletes, ts = System.currentTimeMillis(),
-        partColsLine = partCols, constraints = bm.constraints,
-        colOps = bm.colOps, properties = bm.properties)).getBytes("UTF-8"))
+    vp.publishBranch(name, bm.version + 1,
+      render(successor(bm, s"rebased_to_$newMain", bm)).getBytes("UTF-8"))
     newMain
   }
 
@@ -2300,11 +2245,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     // metadata instead would show the restored rows under a schema
     // they never had (and readVersion of the new head would disagree
     // with readVersion of the restore target).
-    commit(s"rollback_to_$v", m.entries, currentVersion.getOrElse(0),
-      m.deletes, m.predDeletes,
-      constraintsOverride = Some(m.constraints),
-      colOpsOverride = Some(m.colOps),
-      propertiesOverride = Some(m.properties))
+    commit(headOf(None), s"rollback_to_$v", m)
   }
 
   // ---- reads ----
@@ -3044,8 +2985,9 @@ class SnapshotTable(spark: SparkSession, root: String,
     * likewise swept once it is older than the orphan-age window with
     * no published manifest behind it, no manual cleanup needed). The
     * clone's [[fsck]] still names a missing borrowed dir after
-    * out-of-band damage. */
-  /** `destPointer` selects the CLONE's arbitration mode, independent of
+    * out-of-band damage.
+    *
+    * `destPointer` selects the CLONE's arbitration mode, independent of
     * the source's (a clone starts its own lineage, so no pointer state
     * transfers — unlike [[deepClone]], which copies history and must
     * keep the mode): None = filesystem arbitration (the constructor's
@@ -3055,8 +2997,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     * an object store — the Fs form cannot exist there at all. */
   def shallowClone(destRoot: String,
                    destPointer: Option[ConditionalStore] = None): SnapshotTable = {
-    val base = currentVersion.getOrElse(sys.error(s"no snapshot at $root"))
-    val m = parseForCommit(base)
+    val m = liveHead()
     val dst = new Path(destRoot)
     val dfs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(!dfs.exists(dst) || dfs.listStatus(dst).isEmpty,
@@ -3069,12 +3010,9 @@ class SnapshotTable(spark: SparkSession, root: String,
         s"cannot shallow-clone: source dir path not manifest-safe: $q")
       q
     }
-    val cm = Manifest(1, 0, s"shallow_clone_v$base",
-      m.entries.map(e => e.copy(dir = borrow(e.dir))),
-      m.deletes.map(d => d.copy(dir = borrow(d.dir))),
-      m.predDeletes, ts = System.currentTimeMillis(),
-      partColsLine = partCols, constraints = m.constraints,
-      colOps = m.colOps, properties = m.properties)
+    val cm = successor(emptyHead, s"shallow_clone_v${m.version}", m.copy(
+      entries = m.entries.map(e => e.copy(dir = borrow(e.dir))),
+      deletes = m.deletes.map(d => d.copy(dir = borrow(d.dir)))))
     // lease registration order: the clone's `_manifests` dir FIRST (the
     // owner's stale-lease probe keys on its existence — registering
     // before it exists would let a concurrent owner vacuum sweep the

@@ -1,8 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
@@ -10,19 +9,6 @@ import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.tools.Profile
 import graft.write.IncrementalWriter
-
-/** Driver-side `listStatus` calls, counted; executor tasks are left out. */
-class ListingCountingFs extends LocalFileSystem {
-  override def listStatus(f: Path): Array[FileStatus] = {
-    if (!Thread.currentThread.getName.startsWith("Executor task launch"))
-      ListingCountingFs.lists.incrementAndGet()
-    super.listStatus(f)
-  }
-}
-
-object ListingCountingFs {
-  val lists = new AtomicLong
-}
 
 /** `Tables.parquet` against `spark.read.parquet`, shape by shape: the same
   * relation, schema and rows, no Spark job and no extra listing; where
@@ -33,20 +19,7 @@ class ParquetReadSpec extends AnyFunSuite {
 
   private def tmp(name: String): String = Files.createTempDirectory(name).toString
 
-  /** `body`'s result and the driver listings it made. */
-  private def listings[T](body: => T): (T, Long) = {
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("fs.file.impl", classOf[ListingCountingFs].getName)
-    hc.setBoolean("fs.file.impl.disable.cache", true)
-    val before = ListingCountingFs.lists.get
-    try {
-      val out = body
-      (out, ListingCountingFs.lists.get - before)
-    } finally {
-      hc.unset("fs.file.impl")
-      hc.unset("fs.file.impl.disable.cache")
-    }
-  }
+  private def listings[T](body: => T): (T, Long) = ListingCountingFs.listings(spark)(body)
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
