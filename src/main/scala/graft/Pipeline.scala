@@ -5,6 +5,7 @@ import scala.util.{Failure, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.model.{Intermediate, Marts, Staging}
 import graft.quality.Checks
+import graft.quality.Checks.Layer
 import graft.write.IncrementalWriter
 
 /** In-process DAG runner — replaces the reference's Airflow + dbt `ref()`
@@ -18,6 +19,9 @@ import graft.write.IncrementalWriter
   * tables). `fct_trips` is cached before the two aggregate marts since
   * both consume it (the reference materializes it as a table for the same
   * reason).
+  *
+  * The 37 dbt tests are counted on the mart writes as they run (see
+  * [[run]]).
   *
   * Models that share no edge run side by side, as dbt does with
   * `threads: 4` (`dbt/profiles.yml:13`): the four raw tables resolve at
@@ -54,8 +58,16 @@ object Pipeline {
       Marts.fctTripsDaily(fct), Marts.fctTripsMonthly(fct))
   }
 
-  /** Full run with storage: staging incremental write, marts CTAS rebuild,
-    * then the 37 quality checks. Returns the failed check names.
+  /** Full run with storage: staging incremental write, marts CTAS rebuild
+    * and the 37 quality checks. Returns the failed check names, in
+    * [[Checks.all]]'s order.
+    *
+    * The checks run no Spark job of their own: their failure counts are
+    * observed on the three mart writes ([[Checks.Observer]]). The
+    * `fct_trips` write evaluates every row of `stg_yellow`, the unified,
+    * enriched and cleaned models and `fct_trips` itself, in one stage;
+    * each aggregate-mart write evaluates every row of its mart. The
+    * counts are read once all three writes have returned.
     *
     * Every raw table resolves before anything is written, so a missing
     * one fails the run with storage untouched. A failing feed or mart
@@ -78,20 +90,22 @@ object Pipeline {
       Tables.parquet(spark, layout.staging(feed))
     })
 
-    val uni = Intermediate.unify(staged(0), staged(1), staged(2), staged(3))
-    val enr = Intermediate.enrich(uni)
-    val cln = Intermediate.clean(enr)
-    val fct = Marts.fctTrips(cln).cache()
+    // each model is tapped for its checks below the write that evaluates it
+    val checks = Checks.observer()
+    val uni = checks.tap(Layer.Unified, Intermediate.unify(
+      checks.tap(Layer.StgYellow, staged(0)), staged(1), staged(2), staged(3)))
+    val enr = checks.tap(Layer.Enriched, Intermediate.enrich(uni))
+    val cln = checks.tap(Layer.Cleaned, Intermediate.clean(enr))
+    val fct = checks.tap(Layer.Fct, Marts.fctTrips(cln)).cache()
     try {
       IncrementalWriter.overwriteTable(fct, layout.mart("fct_trips"))
-      val Seq(daily, monthly) = concurrently(Seq(
-        "fct_trips_daily" -> Marts.fctTripsDaily _,
-        "fct_trips_monthly" -> Marts.fctTripsMonthly _).map { case (name, model) => () =>
-        IncrementalWriter.overwriteTable(model(fct), layout.mart(name))
-        Tables.parquet(spark, layout.mart(name))
+      concurrently(Seq(
+        ("fct_trips_daily", Layer.Daily, Marts.fctTripsDaily _),
+        ("fct_trips_monthly", Layer.Monthly, Marts.fctTripsMonthly _)).map {
+        case (name, layer, model) => () =>
+          IncrementalWriter.overwriteTable(checks.tap(layer, model(fct)), layout.mart(name))
       })
-      Checks.all(staged(0), uni, enr, cln, fct, daily, monthly)
-        .filterNot(_.passed).map(_.name)
+      checks.failed()
     } finally fct.unpersist()
   }
 

@@ -27,6 +27,11 @@ import graft.write.IncrementalWriter
   *    ([[IncrementalWriter.partitionExists]]) reads the raw table's
   *    directory listing and that partition's parquet footers on the
   *    driver — no Spark job, where the reference runs a `COUNT(*)`.
+  *    The probe asks the reference's question, "does the partition hold
+  *    a row?", so a month whose source holds no row is never skipped: its
+  *    write lands no `year=/month=` directory, and every later `Skip`
+  *    ingest of it reads the source again and reports `appended` with 0
+  *    rows, as the reference's `COUNT(*) > 0` probe does.
   */
 object Ingest {
 

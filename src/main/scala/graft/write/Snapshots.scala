@@ -390,8 +390,7 @@ class SnapshotTable(spark: SparkSession, root: String,
 
   /** Write a fresh data dir for `version`, gated by `gate` — the
     * manifest whose column-mapping ops and CHECK constraints the write
-    * must satisfy (the commit's own head on main; main's head for a
-    * branch write, see the CHECK constraints section). */
+    * must satisfy ([[gateOf]]). */
   private def writeData(df0: DataFrame, version: Int, gate: Manifest): String = {
     val df = conform(df0, gate.colOps, "commit")
     val dir = dataDirName(version)
@@ -598,11 +597,14 @@ class SnapshotTable(spark: SparkSession, root: String,
     parseForCommit(currentVersion.getOrElse(sys.error(s"no snapshot at $root")))
 
   /** The manifest whose column-mapping ops and CHECK constraints gate
-    * a data write computed against `head` on `branch`: the head itself
-    * on main, MAIN's head for a branch write (the schema metadata is
-    * table-wide — see the CHECK constraints section). */
+    * a data write computed against `head` on `branch`. The column
+    * mapping is always the head's own: the commit stamps the new dir
+    * with the head's era and reads it under the head's mapping. The
+    * CHECK constraints are the head's on main and MAIN's current set
+    * for a branch write (table-wide — see the CHECK constraints
+    * section). */
   private def gateOf(branch: Option[String], head: Manifest): Manifest =
-    if (branch.isEmpty) head else headOf(None)
+    if (branch.isEmpty) head else head.copy(constraints = headOf(None).constraints)
 
   /** THE manifest builder, for every commit on main and on branches,
     * [[createBranch]]'s fork and [[fastForward]]'s marker included:
@@ -2071,9 +2073,10 @@ class SnapshotTable(spark: SparkSession, root: String,
   // arbitrates it — the PER-BRANCH manifest namespace
   // (`bv_<name>_NNNNN.txt`) gives branch commits the same single-winner
   // CAS as main commits with zero version-number collisions against
-  // main. Data writes on a branch are gated by MAIN's head
-  // ([[gateOf]]). Main never sees branch state until [[fastForward]]
-  // publishes the branch head's entries as an ordinary main commit —
+  // main. Data writes on a branch conform to the branch head's column
+  // mapping and are gated by MAIN's CHECK constraints ([[gateOf]]).
+  // Main never sees branch state until [[fastForward]] publishes the
+  // branch head's entries as an ordinary main commit —
   // zero data movement, arbitrated by main's own CAS. This is the
   // mechanism behind branch-based WAP (`spark.wap.branch`): stage a
   // whole multi-commit load on a branch, audit readBranch, publish or

@@ -307,6 +307,23 @@ class ColumnMappingSpec extends AnyFunSuite {
     assert(t.read().agg(sum(col("fare_amt"))).head().getDouble(0) == 30.0)
   }
 
+  test("a branch forked before a main rename writes under its own column names") {
+    val t = new SnapshotTable(spark, freshRoot("brfork"))
+    t.commitOverwrite(frame((1, 2024, 1, 10.0)))
+    t.createBranch("wip", t.currentVersion.get)
+    t.renameColumn("fare", "amount")
+    // the branch never saw the rename: `fare` is its live name
+    t.commitAppendToBranch("wip", frame((2, 2024, 2, 20.0)))
+    t.commitOverwritePartitionsToBranch("wip", frame((3, 2024, 3, 30.0)))
+    t.commitMergeToBranch("wip", frame((1, 2024, 1, 11.0)), Seq("id"))
+    val branch = t.readBranch("wip")
+    assert(branch.columns.toSet == Set("id", "year", "month", "fare"))
+    assert(branch.agg(sum(col("fare"))).head().getDouble(0) == 61.0)
+    // main keeps its own mapping
+    assert(t.read().columns.toSet == Set("id", "year", "month", "amount"))
+    assert(t.read().agg(sum(col("amount"))).head().getDouble(0) == 10.0)
+  }
+
   test("rollback restores the target era's schema metadata, not the head's") {
     val t = new SnapshotTable(spark, freshRoot("rb"))
     t.commitOverwrite(frame((1, 2024, 1, 10.0)))           // v1: fare

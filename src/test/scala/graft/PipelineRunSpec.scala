@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
@@ -9,12 +11,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ListenerBridge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ingest.Ingest
+import graft.model.{Intermediate, Marts, Staging}
 import graft.quality.Checks
+import graft.tools.Profile
 
 /** `Pipeline.run` against storage: refreshes over ingested fixture feeds
-  * leave the marts a from-scratch build would, and the steps it runs
-  * side by side fail, finish and carry the caller's job group as one
-  * serial run would. */
+  * leave the marts a from-scratch build would, their observed check
+  * verdicts equal the checks action's over the stored tables, and the
+  * steps it runs side by side fail, finish and carry the caller's job
+  * group as one serial run would. */
 class PipelineRunSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -94,6 +99,79 @@ class PipelineRunSpec extends AnyFunSuite {
       assert(failed.isEmpty, s"failed checks: $failed")
       assertMatchesScratch(layout, failed)
     }
+  }
+
+  /** The 37 checks' failed names by the action, over the stored staging
+    * tables and aggregate marts. */
+  private def scratchChecks(layout: Pipeline.Layout): Seq[String] = {
+    val staged = feeds.map(f => spark.read.parquet(layout.staging(f)))
+    val uni = Intermediate.unify(staged(0), staged(1), staged(2), staged(3))
+    val enr = Intermediate.enrich(uni)
+    val cln = Intermediate.clean(enr)
+    Checks.all(staged(0), uni, enr, cln, Marts.fctTrips(cln),
+      spark.read.parquet(layout.mart("fct_trips_daily")),
+      spark.read.parquet(layout.mart("fct_trips_monthly"))).filterNot(_.passed).map(_.name)
+  }
+
+  /** Append one copy of a stored staging row, edited, to the feed's
+    * staging table in 2023-12, a month no cut reaches. */
+  private def seedStaging(layout: Pipeline.Layout, feed: String)
+                         (edit: DataFrame => DataFrame): Unit = {
+    val path = layout.staging(feed)
+    val stored = spark.read.parquet(path)
+    val row = stored.limit(1).collect()
+    edit(spark.createDataFrame(java.util.Arrays.asList(row: _*), stored.schema))
+      .withColumn("year", lit(2023)).withColumn("month", lit(12))
+      .write.mode("append").partitionBy("year", "month").parquet(path)
+  }
+
+  test("seeded faults: the observed verdicts equal the action's, and no checks job runs") {
+    val layout = newLayout("graft_run_faults")
+    deliver(layout, 1, Ingest.Skip)
+    assert(Pipeline.run(spark, layout).isEmpty)
+    def ts(s: String) = lit(java.sql.Timestamp.valueOf(s))
+    // stg_yellow: a NULL dropoff zone
+    seedStaging(layout, "yellow")(_.withColumn("dropoff_location_id", lit(null).cast("long")))
+    // unified and enriched only: a NULL trip_id at 3,000 mph, which clean drops
+    seedStaging(layout, "green")(_.withColumn("trip_id", lit(null).cast("string"))
+      .withColumn("pickup_datetime", ts("2023-12-01 10:00:00"))
+      .withColumn("dropoff_datetime", ts("2023-12-01 10:01:00"))
+      .withColumn("trip_distance_miles", lit(50.0)))
+    // through to the daily mart: a NULL pickup time
+    seedStaging(layout, "fhvhv")(_.withColumn("pickup_datetime", lit(null).cast("timestamp")))
+    val (failed, run) = Profile.record(spark.sparkContext)(Pipeline.run(spark, layout))
+    assert(failed == Seq(
+      "stg_yellow.dropoff_location_id.not_null",
+      "int_unified.trip_id.not_null",
+      "int_unified.pickup_datetime.not_null",
+      "int_enriched.trip_id.not_null",
+      "fct_trips.pickup_datetime.not_null",
+      "fct_daily.trip_date.not_null"))
+    assert(failed == scratchChecks(layout))
+    assert(run.jobs.nonEmpty)
+    assert(!run.jobs.exists(_.site.contains("at Checks.scala")),
+      run.jobs.map(_.site).mkString("\n"))
+    // cleaned and fct: a NULL trip_id with no speed, which clean keeps
+    seedStaging(layout, "fhv")(_.withColumn("trip_id", lit(null).cast("string")))
+    val more = Pipeline.run(spark, layout)
+    assert(more.diff(failed) == Seq("int_cleaned.trip_id.not_null", "fct_trips.trip_id.not_null"))
+    assert(more == scratchChecks(layout))
+  }
+
+  test("over tables that hold no rows the run returns the action's verdicts") {
+    val layout = newLayout("graft_run_empty")
+    val staging: Map[String, DataFrame => DataFrame] = Map("yellow" -> Staging.yellow,
+      "green" -> Staging.green, "fhv" -> Staging.fhv, "fhvhv" -> Staging.fhvhv)
+    feeds.foreach { feed =>
+      val none = fixture(feed).limit(0)
+      none.write.parquet(layout.raw(feed))
+      staging(feed)(none).write.parquet(layout.staging(feed))
+    }
+    val failed = Await.result(Future(Pipeline.run(spark, layout))(ExecutionContext.global),
+      5.minutes)
+    assert(spark.read.parquet(layout.mart("fct_trips")).isEmpty)
+    assert(failed.isEmpty)
+    assert(failed == scratchChecks(layout))
   }
 
   test("a missing raw table fails the run before anything is written") {

@@ -287,4 +287,18 @@ class PipelineSpec extends AnyFunSuite {
     val r4 = Ingest.ingestMonth(spark, s"$dir/nope.parquet", tbl, "yellow", 2024, 3)
     assert(r4.action == "skipped_missing_source")
   }
+
+  test("ingest: a zero-row month leaves no partition, so every skip re-appends it") {
+    import graft.ingest.Ingest
+    val dir = Files.createTempDirectory("graft_ing_empty").toString
+    val src = s"$dir/src.parquet"
+    val tbl = s"$dir/raw_yellow"
+    TaxiFixturesData.rawYellow(spark).drop("year", "month", "loaded_at").limit(0)
+      .write.parquet(src)
+    Seq(1, 2).foreach { _ =>
+      assert(Ingest.ingestMonth(spark, src, tbl, "yellow", 2024, 1) ==
+        Ingest.Result("yellow", 2024, 1, "appended", 0L))
+      assert(!IncrementalWriter.partitionExists(spark, tbl, 2024, 1))
+    }
+  }
 }
