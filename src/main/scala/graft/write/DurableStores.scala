@@ -139,11 +139,7 @@ class FileConditionalStore(fs: FileSystem, dir: Path,
     }.sorted
 
   private def readGen(g: Long): Option[String] =
-    try {
-      val in = rfs.open(genPath(g))
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    } catch { case _: java.io.FileNotFoundException => None }
+    SnapshotTable.readTextIfExists(rfs, genPath(g))
 
   /** Highest (generation, value), re-listing if a GC raced the read —
     * each retry means `KeepGenerations` commits landed inside one

@@ -33,7 +33,9 @@ import org.apache.spark.sql.functions._
   *    zero bytes, and the rollback is visible in [[history]].
   *  - Named refs: immutable [[tag]]s and movable branch lineages
   *    ([[createBranch]]/[[fastForward]]), both retained through
-  *    [[expire]].
+  *    [[expire]]. Main is one lineage among them: every commit, head
+  *    read and maintenance walk takes a lineage ([[Branch]]) and runs
+  *    the same code for main and for a branch.
   *
   * Commit protocol (optimistic, single-winner CAS): data dir first
   * (invisible until referenced), then the manifest for version
@@ -121,6 +123,8 @@ class SnapshotTable(spark: SparkSession, root: String,
       spark.sparkContext.hadoopConfiguration, manifestDir)
   }
 
+  import Branch.{Main, Named}
+
   /** One data directory + the partitions masked out of it (a dynamic
     * partition overwrite excludes the replaced partitions from every
     * OLDER dir instead of deleting their files). Partition values render
@@ -176,8 +180,6 @@ class SnapshotTable(spark: SparkSession, root: String,
   // parseable with zero dependencies; values are ints, dir names, and
   // partition-value tuples, none of which need escaping) ----
 
-  private def manifestPath(v: Int): Path = vp.manifestPath(v)
-
   private def render(m: Manifest): String = {
     val lines = Seq(s"version=${m.version}", s"parent=${m.parent}", s"op=${m.op}") ++
       m.entries.map(e =>
@@ -214,11 +216,10 @@ class SnapshotTable(spark: SparkSession, root: String,
     lines.mkString("", "\n", "\n")
   }
 
-  private def parse(v: Int): Manifest = parseAt(manifestPath(v), s"v$v")
-
-  private def parseAt(p: Path, label: String): Manifest = {
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  /** Version `v` of lineage `b` — the one manifest parser. */
+  private def parse(v: Int, b: Branch = Main): Manifest = {
+    val label = b.label(v)
+    val text = SnapshotTable.readText(fs, vp.manifestPath(b, v))
     val kv = text.linesIterator.filter(_.nonEmpty).toSeq.map { l =>
       val i = l.indexOf('='); (l.substring(0, i), l.substring(i + 1))
     }
@@ -298,7 +299,7 @@ class SnapshotTable(spark: SparkSession, root: String,
   // ---- pointer (delegated to the arbitration seam, [[VersionPointer]]) ----
 
   /** The live version, if the table exists. */
-  def currentVersion: Option[Int] = vp.currentVersion()
+  def currentVersion: Option[Int] = vp.head(Main)
 
   /** Diagnostics (CAS mode): full parentfile-chain walks performed by
     * this handle — each is O(retained versions) metadata reads, so the
@@ -367,27 +368,6 @@ class SnapshotTable(spark: SparkSession, root: String,
     castToWidened(df, ops)
   }
 
-  /** `graft.rows.sidecar` session conf: when a data dir earns its
-    * row-count sidecar. `lazy` (default): commits pay NOTHING — the
-    * first [[countFast]] that needs a missing count runs one
-    * distributed footer job per uncounted dir and persists the sidecar
-    * (measured: write-time counting, whether by observation metrics or
-    * a post-write count job, added ~40% to commit-heavy workloads —
-    * both serialize a per-commit wait the commit path doesn't need).
-    * `eager`: count at commit time (one distributed footer job per
-    * write — for tables whose readers must stay strictly
-    * metadata-only). `off`: never count; countFast serves recorded
-    * sidecars only and declines otherwise. */
-  private def sidecarMode: String =
-    spark.conf.get("graft.rows.sidecar", "lazy")
-
-  /** The eager-mode hook: count-and-record after a write, nothing
-    * otherwise (lazy mode materializes on first use; see
-    * [[countFast]]). */
-  private def eagerCount(dir: String): Unit =
-    if (sidecarMode == "eager")
-      writeRowsSidecar(dir, distributedCount(dirPath(dir).toString))
-
   /** Write a fresh data dir for `version`, gated by `gate` — the
     * manifest whose column-mapping ops and CHECK constraints the write
     * must satisfy ([[gateOf]]). */
@@ -402,7 +382,6 @@ class SnapshotTable(spark: SparkSession, root: String,
     WriteDistribution.freshDir(WriteDistribution.byPartition(df, partCols))
       .partitionBy(partCols: _*).parquet(dataP)
     writeSchemaSidecar(dir, df.schema)
-    eagerCount(dir)
     enforceConstraints(dir, gate.constraints)
     dir
   }
@@ -454,9 +433,7 @@ class SnapshotTable(spark: SparkSession, root: String,
   // object store), and the first round-14 cut counted at write time
   // (observation metrics / a post-write job), which measured ~40%
   // overhead on commit-heavy workloads — a per-commit synchronous wait
-  // the commit path doesn't need for BEST-EFFORT metadata. `eager`
-  // mode restores write-time counting for strictly-metadata-only
-  // readers; `off` disables even the lazy fill. ----
+  // the commit path doesn't need for BEST-EFFORT metadata. ----
 
   private def rowsSidecarPath(dir: String) =
     new Path(dirPath(dir), "_graft_rows")
@@ -483,16 +460,8 @@ class SnapshotTable(spark: SparkSession, root: String,
     catch { case _: Exception => None }
 
   /** A dir's recorded row count, if its sidecar exists and parses. */
-  private def dirRows(dir: String): Option[Long] = {
-    val p = rowsSidecarPath(dir)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      s.toLongOption
-    }
-  }
+  private def dirRows(dir: String): Option[Long] =
+    SnapshotTable.readTextIfExists(fs, rowsSidecarPath(dir)).flatMap(_.trim.toLongOption)
 
   /** `count(*)` from metadata — O(entries) sidecar reads once counts
     * are recorded, never a data scan, exact or absent: `None` whenever
@@ -510,8 +479,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     * in tasks; no data decode) — and the sidecar is persisted
     * best-effort so later calls are pure metadata reads. Borrowed
     * (shallow-clone) dirs are counted but never written into (they
-    * belong to the source table); `graft.rows.sidecar=off` disables
-    * the lazy fill (strict recorded-only reads). At 100 TB this is the
+    * belong to the source table). At 100 TB this is the
     * difference between a dashboard's `count(*)` being a metadata read
     * and a full scan. */
   def countFast: Option[Long] = {
@@ -520,8 +488,7 @@ class SnapshotTable(spark: SparkSession, root: String,
         m.entries.exists(_.excluded.nonEmpty)) return None
     val counts = m.entries.map { e =>
       dirRows(e.dir).orElse {
-        if (sidecarMode == "off") None
-        else distributedCount(dirPath(e.dir).toString).map { n =>
+        distributedCount(dirPath(e.dir).toString).map { n =>
           if (!isBorrowed(e.dir)) writeRowsSidecar(e.dir, Some(n))
           n
         }
@@ -532,15 +499,8 @@ class SnapshotTable(spark: SparkSession, root: String,
 
   /** A dir's recorded schema sidecar DDL, if any — the one sidecar
     * reader (scan specs and single-dir reads both come through here). */
-  private def schemaDdl(dir: String): Option[String] = {
-    val sp = schemaSidecarPath(dir)
-    if (!fs.exists(sp)) None
-    else {
-      val in = fs.open(sp)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    }
-  }
+  private def schemaDdl(dir: String): Option[String] =
+    SnapshotTable.readTextIfExists(fs, schemaSidecarPath(dir))
 
   /** One data dir as a plain parquet scan: planned under its recorded
     * schema (zero footer reads), or schema-merged for pre-sidecar dirs. */
@@ -552,17 +512,24 @@ class SnapshotTable(spark: SparkSession, root: String,
   private def readDir(dir: String): DataFrame =
     scanDir(dirPath(dir).toString, schemaDdl(dir))
 
-  /** Parse the manifest a COMMIT is being computed against. A
-    * concurrent count-based [[expire]] can delete the just-read head's
-    * manifest between the caller's `currentVersion` read and this
-    * parse — a retention/commit interleaving, not a damaged table — so
-    * a vanished file surfaces as the retryable
-    * [[SnapshotConflictException]] (recompute from the new current)
+  /** A lineage with no commit yet: version 0, nothing in it. */
+  private val emptyHead = Manifest(0, 0, "empty", Seq.empty)
+
+  /** The head a commit on lineage `b` is computed against, read ONCE
+    * per commit attempt: everything the commit needs of it — entries,
+    * deletes, metadata, the write gate — comes from this one manifest.
+    * Main's empty table reads as [[emptyHead]]; a missing branch
+    * refuses. A concurrent count-based [[expire]] (or a branch drop)
+    * can delete the just-read head's manifest between the head read and
+    * this parse — a retention/commit interleaving, not a damaged table —
+    * so a vanished file surfaces as the retryable
+    * [[SnapshotConflictException]] (recompute from the new head)
     * instead of a raw FileNotFoundException. Read paths keep
     * [[parse]]: for a reader, a vanished version IS "expired". */
-  private def parseForCommit(v: Int): Manifest =
-    try parse(v)
-    catch {
+  private def headOf(b: Branch): Manifest = (vp.head(b), b) match {
+    case (None, Main) => emptyHead
+    case (None, Named(name)) => sys.error(s"no branch '$name' at $root")
+    case (Some(v), _) => try parse(v, b) catch {
       case e: java.io.FileNotFoundException =>
         // the just-read head vanished: a concurrent expire retired it
         // (head moved on), or a delayed CURRENT flip regressed the
@@ -574,37 +541,33 @@ class SnapshotTable(spark: SparkSession, root: String,
         // forever.
         try repair() catch { case _: Exception => () }
         throw new SnapshotConflictException(
-          s"manifest v$v expired under a concurrent retention while a " +
-            "commit was being computed against it — re-read " +
-            s"currentVersion and retry (${e.getMessage})")
+          s"manifest ${b.label(v)} vanished under a concurrent retention " +
+            "while a commit was being computed against it — re-read the " +
+            s"head and retry (${e.getMessage})")
     }
-
-  /** A lineage with no commit yet: version 0, nothing in it. */
-  private val emptyHead = Manifest(0, 0, "empty", Seq.empty)
-
-  /** The head a commit on `branch` (None = main) is computed against,
-    * read ONCE per commit attempt: everything the commit needs of it —
-    * entries, deletes, metadata, the write gate — comes from this one
-    * manifest. Main's empty table reads as [[emptyHead]]; a missing
-    * branch refuses. */
-  private def headOf(branch: Option[String]): Manifest = branch match {
-    case None => currentVersion.fold(emptyHead)(parseForCommit)
-    case Some(b) => parseBranchHead(b)
   }
 
-  /** Main's head for a commit that needs an existing table. */
-  private def liveHead(): Manifest =
-    parseForCommit(currentVersion.getOrElse(sys.error(s"no snapshot at $root")))
+  /** Lineage `b`'s head for a commit that needs existing state. */
+  private def liveHead(b: Branch = Main): Manifest = {
+    val m = headOf(b)
+    if (m eq emptyHead) sys.error(s"no snapshot at $root")
+    m
+  }
 
   /** The manifest whose column-mapping ops and CHECK constraints gate
-    * a data write computed against `head` on `branch`. The column
+    * a data write computed against `head` on lineage `b`. The column
     * mapping is always the head's own: the commit stamps the new dir
     * with the head's era and reads it under the head's mapping. The
     * CHECK constraints are the head's on main and MAIN's current set
     * for a branch write (table-wide — see the CHECK constraints
     * section). */
-  private def gateOf(branch: Option[String], head: Manifest): Manifest =
-    if (branch.isEmpty) head else head.copy(constraints = headOf(None).constraints)
+  private def gateOf(b: Branch, head: Manifest): Manifest =
+    if (b == Main) head else head.copy(constraints = headOf(Main).constraints)
+
+  /** A commit's op tag on lineage `b`: `op` on main, `branch_<op>` on a
+    * branch. */
+  private def opOn(b: Branch, op: String): String =
+    if (b == Main) op else s"branch_$op"
 
   /** THE manifest builder, for every commit on main and on branches,
     * [[createBranch]]'s fork and [[fastForward]]'s marker included:
@@ -623,36 +586,26 @@ class SnapshotTable(spark: SparkSession, root: String,
       ts = System.currentTimeMillis(), partColsLine = partCols)
   }
 
-  /** The commit point, a compare-and-swap on the version number:
-    * `parent` is the head the caller's `state` was computed AGAINST
-    * (not a re-read of CURRENT — re-reading here would let a commit
-    * that interleaved between the caller's read and this create
-    * silently vanish from the new manifest: a lost update that
-    * create-exclusive on a RE-numbered manifest would never catch).
-    * If anyone committed `parent + 1` first, the create-exclusive
-    * fails and the caller must recompute from the new current. The
-    * lineage decides only which publish arbitrates: main's, or the
-    * branch's own version namespace. */
+  /** The commit point, a compare-and-swap on lineage `b`'s version
+    * number: `parent` is the head the caller's `state` was computed
+    * AGAINST (not a re-read of the head — re-reading here would let a
+    * commit that interleaved between the caller's read and this publish
+    * silently vanish from the new manifest: a lost update that a
+    * RE-numbered publish would never catch). If anyone committed
+    * `parent + 1` first, the publish refuses and the caller must
+    * recompute from the new head. Atomic-with-content arbitration
+    * through the version pointer — create-exclusive manifest (+ the
+    * CURRENT flip on main) in Fs mode, one conditional put in CAS mode:
+    * either way the manifest appears fully written or not at all and
+    * exactly one racing writer wins. */
   private def commit(parent: Manifest, op: String, state: Manifest,
-                     branch: Option[String] = None): Int = {
+                     b: Branch = Main): Int = {
     val m = successor(parent, op, state)
-    val bytes = render(m).getBytes("UTF-8")
-    // atomic-with-content arbitration through the version pointer —
-    // create-exclusive manifest + CURRENT flip in Fs mode, one
-    // conditional put in CAS mode. Either way the manifest appears
-    // fully written or not at all and exactly one racing writer wins.
-    branch match {
-      case None =>
-        fs.mkdirs(manifestDir)
-        if (!vp.publish(m.version, bytes))
-          throw new SnapshotConflictException(
-            s"commit of v${m.version} lost the race (or an orphan manifest " +
-              s"exists — run repair()): v${m.version} under $manifestDir")
-      case Some(b) =>
-        if (!vp.publishBranch(b, m.version, bytes))
-          throw new SnapshotConflictException(s"branch '$b' commit of " +
-            s"@${m.version} lost the race — re-read branchHead and retry")
-    }
+    if (!vp.publish(b, m.version, render(m).getBytes("UTF-8")))
+      throw new SnapshotConflictException(
+        s"commit of ${b.label(m.version)} under $manifestDir lost the race " +
+          "(or an orphan manifest exists — run repair()) — re-read the head " +
+          "and retry")
     m.version
   }
 
@@ -684,7 +637,7 @@ class SnapshotTable(spark: SparkSession, root: String,
   def commitOverwrite(df: DataFrame, opTag: String = "overwrite"): Int = {
     require(opTag.nonEmpty && !opTag.exists(c => c == '\n' || c == '\r'),
       s"opTag must be a non-empty single line: '$opTag'")
-    val pm = headOf(None)
+    val pm = headOf(Main)
     commit(pm, opTag, pm.copy(
       entries = Seq(Entry(writeData(df, pm.version + 1, pm), Set.empty)),
       deletes = Seq.empty, predDeletes = Seq.empty))
@@ -708,7 +661,7 @@ class SnapshotTable(spark: SparkSession, root: String,
   def commitAppend(df: DataFrame, opTag: String = "append"): Int = {
     require(opTag.nonEmpty && !opTag.exists(c => c == '\n' || c == '\r'),
       s"opTag must be a non-empty single line: '$opTag'")
-    val pm0 = headOf(None)
+    val pm0 = headOf(Main)
     val dir = writeData(df, pm0.version + 1, pm0)
     appendRaceHook() // test seam: inject a concurrent commit here
     var pm = pm0
@@ -769,18 +722,17 @@ class SnapshotTable(spark: SparkSession, root: String,
     * replacement — the reference's ingest overwrite mode
     * (`ingest_spark_bulk.py:71–81`) with history. */
   def commitOverwritePartitions(df: DataFrame): Int =
-    overwritePartitionsOn(None, df)
+    overwritePartitionsOn(Main, df)
 
   /** The overwrite-partitions commit on main or a branch: mask the
     * partitions present in `df` out of every previous entry, append the
     * replacement dir. */
-  private def overwritePartitionsOn(branch: Option[String], df: DataFrame): Int = {
-    val pm = headOf(branch)
+  private def overwritePartitionsOn(b: Branch, df: DataFrame): Int = {
+    val pm = headOf(b)
     val touched = partTuples(df)
     require(touched.nonEmpty, "batch has no partitions")
-    commit(pm, branch.fold("overwrite_partitions")(_ => "branch_overwrite_partitions"),
-      rewritePartitions(pm, touched,
-        Some(writeData(df, pm.version + 1, gateOf(branch, pm)))), branch)
+    commit(pm, opOn(b, "overwrite_partitions"), rewritePartitions(pm, touched,
+      Some(writeData(df, pm.version + 1, gateOf(b, pm)))), b)
   }
 
   /** The distinct partition-value tuples of `df`, string-rendered — the
@@ -913,14 +865,14 @@ class SnapshotTable(spark: SparkSession, root: String,
     * insert both rows — the same loud contract as
     * [[graft.operators.Merge.upsert]]). */
   def commitMerge(batch0: DataFrame, keyCols: Seq[String]): Int =
-    mergeOn(None, batch0, keyCols, "commitMerge")
+    mergeOn(Main, batch0, keyCols, "commitMerge")
 
   /** The copy-on-write MERGE commit on main or a branch. */
-  private def mergeOn(branch: Option[String], batch0: DataFrame,
+  private def mergeOn(b: Branch, batch0: DataFrame,
                       keyCols: Seq[String], api: String): Int = {
     require(keyCols.nonEmpty, s"$api needs at least one key column")
     withUniqueKeyed(batch0, keyCols, api) { batch =>
-      val pm = branch.fold(liveHead())(parseBranchHead)
+      val pm = liveHead(b)
       val cur = snapshot(pm)
       val keys = batch.select(keyCols.map(col): _*).distinct()
       // partitions needing a rewrite: where batch rows land ∪ where
@@ -935,9 +887,8 @@ class SnapshotTable(spark: SparkSession, root: String,
       // the whole batch = the replacement dir's contents
       val kept = cur.filter(inPartitions(touched)).join(keys, keyCols, "left_anti")
       val newData = kept.unionByName(batch, allowMissingColumns = true)
-      commit(pm, branch.fold("merge")(_ => "branch_merge"),
-        rewritePartitions(pm, touched,
-          Some(writeData(newData, pm.version + 1, gateOf(branch, pm)))), branch)
+      commit(pm, opOn(b, "merge"), rewritePartitions(pm, touched,
+        Some(writeData(newData, pm.version + 1, gateOf(b, pm)))), b)
     }
   }
 
@@ -1512,7 +1463,6 @@ class SnapshotTable(spark: SparkSession, root: String,
     val cur = snapshot(pm)
     IncrementalWriter.overwriteZOrdered(cur, dataP, clusterCols, nFiles, freshDir = true)
     writeSchemaSidecar(dir, cur.schema)
-    eagerCount(dir)
     enforceConstraints(dir, pm.constraints)
     clusterCols.foreach(c => graft.sources.DataSkipping.buildStats(
       spark, dataP, c, statsPath(dir, c).toString))
@@ -1551,7 +1501,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     * index, one commit. */
   def commitOverwriteClustered(df: DataFrame, clusterCol: String,
                                nFiles: Int = 8): Int = {
-    val pm = headOf(None)
+    val pm = headOf(Main)
     commit(pm, "overwrite_clustered", pm.copy(
       entries = Seq(writeClustered(df, pm.version + 1, pm, clusterCol, nFiles)),
       deletes = Seq.empty, predDeletes = Seq.empty))
@@ -1561,7 +1511,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     * snapshot's entries. */
   def commitAppendClustered(df: DataFrame, clusterCol: String,
                             nFiles: Int = 8): Int = {
-    val pm = headOf(None)
+    val pm = headOf(Main)
     commit(pm, "append_clustered", pm.copy(entries =
       pm.entries :+ writeClustered(df, pm.version + 1, pm, clusterCol, nFiles)))
   }
@@ -1573,7 +1523,6 @@ class SnapshotTable(spark: SparkSession, root: String,
     val dataP = new Path(dataDir, dir).toString
     IncrementalWriter.overwriteClustered(df, dataP, clusterCol, nFiles, freshDir = true)
     writeSchemaSidecar(dir, df.schema)
-    eagerCount(dir)
     enforceConstraints(dir, gate.constraints)
     graft.sources.DataSkipping.buildStats(spark, dataP, clusterCol,
       statsPath(dir, clusterCol).toString)
@@ -1645,13 +1594,12 @@ class SnapshotTable(spark: SparkSession, root: String,
   def stageAppend(df0: DataFrame, name: String): String = {
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
       s"stage name must be [A-Za-z0-9_]+: '$name'")
-    val gate = headOf(None)
+    val gate = headOf(Main)
     val df = conform(df0, gate.colOps, "stage")
     val dir = s"w_$name"
     WriteDistribution.freshDir(WriteDistribution.byPartition(df, partCols))
       .partitionBy(partCols: _*).parquet(new Path(dataDir, dir).toString)
     writeSchemaSidecar(dir, df.schema)
-    eagerCount(dir)
     enforceConstraints(dir, gate.constraints)
     dir
   }
@@ -1663,7 +1611,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     // the staged dir joins as the last entry, written under the current
     // column mapping (stageAppend conforms it) and after every pending
     // delete's scope — exactly what publishStaged would commit
-    val m = currentVersion.fold(emptyHead)(parse)
+    val m = currentVersion.fold(emptyHead)(parse(_))
     snapshot(m.copy(entries = m.entries :+ Entry(stagedDir, Set.empty, m.colOps.size)))
   }
 
@@ -1679,7 +1627,7 @@ class SnapshotTable(spark: SparkSession, root: String,
   def publishStaged(stagedDir: String): Int = {
     require(fs.exists(new Path(dataDir, stagedDir)),
       s"no staged dir '$stagedDir' under $dataDir (abandoned or never staged)")
-    val pm = headOf(None)
+    val pm = headOf(Main)
     require(!pm.entries.exists(_.dir == stagedDir), s"'$stagedDir' is already published")
     if (pm.colOps.nonEmpty) {
       val staged = readDir(stagedDir)
@@ -2066,30 +2014,27 @@ class SnapshotTable(spark: SparkSession, root: String,
   // the same immutable data dirs — the complement of tags (immutable
   // pointers). A branch forks from a main version and takes its own
   // commits — append, dynamic partition overwrite, and COW merge, the
-  // full multi-batch-load write surface. Main is just another ref: a
-  // branch commit runs the same code as its main twin ([[commit]],
-  // [[successor]], the shared write shapes), and the lineage decides
-  // only which head the commit reads ([[headOf]]) and which publish
-  // arbitrates it — the PER-BRANCH manifest namespace
-  // (`bv_<name>_NNNNN.txt`) gives branch commits the same single-winner
-  // CAS as main commits with zero version-number collisions against
-  // main. Data writes on a branch conform to the branch head's column
-  // mapping and are gated by MAIN's CHECK constraints ([[gateOf]]).
-  // Main never sees branch state until [[fastForward]] publishes the
-  // branch head's entries as an ordinary main commit —
-  // zero data movement, arbitrated by main's own CAS. This is the
-  // mechanism behind branch-based WAP (`spark.wap.branch`): stage a
-  // whole multi-commit load on a branch, audit readBranch, publish or
-  // drop. Maintenance ([[expire]], [[vacuum]], [[purge]], [[fsck]])
-  // treats branch-referenced dirs as live. Storage and arbitration live
-  // in the version pointer (same seam as tags): numbered
-  // create-exclusive files in Fs mode; attempt-unique chained manifests
-  // with a CAS'd `branch/<name>` ref in conditional-store mode. ----
-
-  private def branchVersions(name: String): Seq[Int] = vp.branchVersions(name)
-
-  private def parseBranch(name: String, bv: Int): Manifest =
-    parseAt(vp.branchManifestPath(name, bv), s"$name@$bv")
+  // full multi-batch-load write surface. Main is just another ref
+  // ([[Branch]]: `Main` or `Named(name)`): a branch commit runs the same
+  // code as its main twin ([[commit]], [[successor]], the shared write
+  // shapes), and the lineage it passes decides only which head the
+  // commit reads ([[headOf]]) and which version namespace the pointer's
+  // one publish arbitrates — the PER-BRANCH namespace gives branch
+  // commits the same single-winner CAS as main commits with zero
+  // version-number collisions against main. Data writes on a branch
+  // conform to the branch head's column mapping and are gated by MAIN's
+  // CHECK constraints ([[gateOf]]). Main never sees branch state until
+  // [[fastForward]] publishes the branch head's entries as an ordinary
+  // main commit — zero data movement, arbitrated by main's own CAS.
+  // This is the mechanism behind branch-based WAP (`spark.wap.branch`):
+  // stage a whole multi-commit load on a branch, audit readBranch,
+  // publish or drop. Maintenance ([[expire]], [[vacuum]], [[purge]],
+  // [[fsck]]) walks main and every branch through one retained-manifest
+  // walk ([[retained]]), so branch-referenced dirs are live. Storage and
+  // arbitration live in the version pointer (same seam as tags):
+  // numbered create-exclusive files in Fs mode; attempt-unique chained
+  // manifests with a CAS'd `branch/<name>` ref in conditional-store
+  // mode. ----
 
   /** All branches, (name, head branch-version), sorted by name. */
   def branches: Seq[(String, Int)] =
@@ -2105,29 +2050,25 @@ class SnapshotTable(spark: SparkSession, root: String,
     // mapping, constraints, properties), so a branch read folds old
     // dirs exactly as a main read of the fork version would — without
     // it a branch forked after a rename would surface PHYSICAL names
-    if (!vp.publishBranch(name, 1,
+    if (!vp.publish(Named(name), 1,
         render(successor(emptyHead, s"branch_from_$fromV", m)).getBytes("UTF-8")))
       throw new IllegalArgumentException(
         s"branch '$name' already exists (drop it first or pick a new name)")
   }
 
   /** The branch's head (its newest branch-version), if it exists. */
-  def branchHead(name: String): Option[Int] = vp.branchHead(name)
+  def branchHead(name: String): Option[Int] = vp.head(Named(name))
 
   /** The branch's current state. */
-  def readBranch(name: String): DataFrame = snapshot(parseBranchHead(name))
-
-  private def parseBranchHead(name: String): Manifest =
-    parseBranch(name, branchHead(name)
-      .getOrElse(sys.error(s"no branch '$name' at $root")))
+  def readBranch(name: String): DataFrame = snapshot(headOf(Named(name)))
 
   /** Append a batch to a branch — main is untouched; the branch head
     * advances. */
   def commitAppendToBranch(name: String, df: DataFrame): Int = {
-    val branch = Some(name)
-    val pm = headOf(branch)
-    commit(pm, "branch_append", pm.copy(entries = pm.entries :+
-      Entry(writeData(df, pm.version + 1, gateOf(branch, pm)), Set.empty)), branch)
+    val b = Named(name)
+    val pm = headOf(b)
+    commit(pm, opOn(b, "append"), pm.copy(entries = pm.entries :+
+      Entry(writeData(df, pm.version + 1, gateOf(b, pm)), Set.empty)), b)
   }
 
   /** Dynamic partition overwrite ON A BRANCH — the write shape a
@@ -2136,14 +2077,14 @@ class SnapshotTable(spark: SparkSession, root: String,
     * [[commitOverwritePartitions]], scoped to the branch lineage; main
     * never sees it until [[fastForward]]). */
   def commitOverwritePartitionsToBranch(name: String, df: DataFrame): Int =
-    overwritePartitionsOn(Some(name), df)
+    overwritePartitionsOn(Named(name), df)
 
   /** Copy-on-write MERGE (upsert by key) ON A BRANCH — completes the
     * branch write surface ([[commitMerge]] semantics against the
     * branch's state; same duplicate-key refusal). */
   def commitMergeToBranch(name: String, batch0: DataFrame,
                           keyCols: Seq[String]): Int =
-    mergeOn(Some(name), batch0, keyCols, "commitMergeToBranch")
+    mergeOn(Named(name), batch0, keyCols, "commitMergeToBranch")
 
   /** Race-injection seam for the check→publish window of strict
     * [[fastForward]] — a no-op in production; tests override it to
@@ -2163,8 +2104,8 @@ class SnapshotTable(spark: SparkSession, root: String,
     * sync cycles on a KEPT branch check strictness against the version
     * they last synced to, not the original fork. */
   private def branchForkPoint(name: String): Int =
-    branchVersions(name).sorted(Ordering[Int].reverse).iterator
-      .map(bv => parseBranch(name, bv).op)
+    vp.versions(Named(name)).reverseIterator
+      .map(parse(_, Named(name)).op)
       .collectFirst {
         case op if op.startsWith("branch_from_") =>
           op.stripPrefix("branch_from_").toInt
@@ -2189,7 +2130,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     * skipped — the fork point stays put and the next strict publish
     * refuses conservatively; never unsafe.) */
   def fastForward(name: String, strict: Boolean = true): Int = {
-    val bm = parseBranchHead(name)
+    val bm = headOf(Named(name))
     // STRICT mode's CAS base is the CHECKED fork version, never a
     // re-read of CURRENT: commit()'s own contract says `parent` is the
     // head the state was computed against, and a re-read here would let
@@ -2199,7 +2140,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     // mode exists to refuse. With the checked head as the base, the
     // create-exclusive on fork+1 itself catches the interleaver
     // (SnapshotConflictException), closing the check→publish window.
-    val main = headOf(None)
+    val main = headOf(Main)
     if (strict) {
       val fork = branchForkPoint(name)
       require(main.version == fork,
@@ -2219,7 +2160,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     // publish is best-effort (a concurrent branch commit winning the
     // slot leaves the old fork point, which only REFUSES more — the
     // racing commit's rows were not in what main just received)
-    vp.publishBranch(name, bm.version + 1,
+    vp.publish(Named(name), bm.version + 1,
       render(successor(bm, s"rebased_to_$newMain", bm)).getBytes("UTF-8"))
     newMain
   }
@@ -2228,15 +2169,26 @@ class SnapshotTable(spark: SparkSession, root: String,
     * unreferenced debris that [[vacuum]] collects. */
   def dropBranch(name: String): Unit = vp.dropBranch(name)
 
-  /** Every data dir referenced by any branch manifest — maintenance
-    * must treat these as live. */
-  private def branchReferencedDirs: Set[String] =
-    branches.flatMap { case (n, _) =>
-      branchVersions(n).flatMap { bv =>
-        val m = parseBranch(n, bv)
-        m.entries.map(_.dir) ++ m.deletes.map(_.dir)
-      }
-    }.toSet
+  /** Main and every branch: the lineages maintenance walks. */
+  private def lineages: Seq[Branch] = Main +: vp.branchList().map(Named(_))
+
+  /** THE retained-manifest walk: lineage `b`'s retained manifests,
+    * oldest first, each parsed once per call. Every maintenance op reads
+    * main and each branch through it — a branch is a promise its state
+    * stays readable until dropped, so its dirs are as live as main's. */
+  private def retained(b: Branch): Seq[Manifest] = vp.versions(b).map(parse(_, b))
+
+  /** Every lineage's retained manifests, main's first. */
+  private def allRetained(): Seq[Manifest] = lineages.flatMap(retained)
+
+  /** The data dirs a manifest references: entries and MOR key-delete
+    * frames. */
+  private def dirsOf(m: Manifest): Seq[String] =
+    m.entries.map(_.dir) ++ m.deletes.map(_.dir)
+
+  /** Whether a manifest references a dir borrowed from a shallow-clone
+    * source. */
+  private def borrows(m: Manifest): Boolean = dirsOf(m).exists(isBorrowed)
 
   /** Re-point the table at snapshot `v`'s state — a NEW commit with
     * `v`'s entries, zero data movement, history preserved. */
@@ -2248,7 +2200,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     // metadata instead would show the restored rows under a schema
     // they never had (and readVersion of the new head would disagree
     // with readVersion of the restore target).
-    commit(headOf(None), s"rollback_to_$v", m)
+    commit(headOf(Main), s"rollback_to_$v", m)
   }
 
   // ---- reads ----
@@ -2398,7 +2350,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     * best-effort (a purge rewrite refreshes it). None if the table has
     * no commit that old. O(retained versions) metadata reads. */
   def versionAt(tsMillis: Long): Option[Int] =
-    history.map(_._1).filter(commitTimeOf(_) <= tsMillis).maxOption
+    retained(Main).filter(commitTimeOf(_) <= tsMillis).map(_.version).maxOption
 
   /** Time travel by wall-clock: the table as of `tsMillis`. */
   def readAsOf(tsMillis: Long): DataFrame =
@@ -2454,7 +2406,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     * O(retained versions) metadata reads, no data scan. */
   def describeHistory(): DataFrame = {
     import spark.implicits._
-    history.map(_._1).map(parse)
+    retained(Main)
       .map(m => (m.version, m.op, m.parent, m.entries.size,
         m.deletes.size + m.predDeletes.size))
       .toDF("version", "op", "parent", "n_entries", "n_deletes")
@@ -2462,7 +2414,7 @@ class SnapshotTable(spark: SparkSession, root: String,
 
   /** (version, op, parent) for every retained snapshot, oldest first. */
   def history: Seq[(Int, String, Int)] =
-    vp.versions().map { v => val m = parse(v); (m.version, m.op, m.parent) }
+    retained(Main).map(m => (m.version, m.op, m.parent))
 
   /** Expire history: keep the newest `keepLast` snapshots, delete older
     * manifests and any data directory no retained snapshot references —
@@ -2484,19 +2436,15 @@ class SnapshotTable(spark: SparkSession, root: String,
   def expire(keepLast: Int,
              olderThanMs: Long = SnapshotTable.DefaultOrphanAgeMs): Unit = {
     require(keepLast >= 1, "keepLast must be >= 1")
-    val versions = history.map(_._1)
-    val cur = currentVersion.getOrElse(return)
-    expireTo(versions.sorted.takeRight(keepLast).toSet + cur, olderThanMs)
+    expireTo(olderThanMs)(_.map(_.version).takeRight(keepLast).toSet)
   }
 
-  /** A version's commit wall-clock: the manifest's `ts` stamp, or its
-    * file modification time for pre-stamp history (best-effort — a
-    * purge rewrite refreshes mtime; stamped ts survives). */
-  private def commitTimeOf(v: Int): Long = {
-    val m = parse(v)
+  /** A manifest's commit wall-clock: its `ts` stamp, or its file
+    * modification time for pre-stamp history (best-effort — a purge
+    * rewrite refreshes mtime; stamped ts survives). */
+  private def commitTimeOf(m: Manifest): Long =
     if (m.ts > 0) m.ts
-    else fs.getFileStatus(manifestPath(v)).getModificationTime
-  }
+    else fs.getFileStatus(vp.manifestPath(Main, m.version)).getModificationTime
 
   /** Age-based retention — Iceberg's `expire_snapshots(older_than)`:
     * expire every snapshot committed at or before `tsMillis`, keeping
@@ -2506,39 +2454,41 @@ class SnapshotTable(spark: SparkSession, root: String,
     * days of time travel" is one call with `now - 7d`, independent of
     * commit frequency. Same orphan-dir age guard. */
   def expireOlderThan(tsMillis: Long,
-                      olderThanMs: Long = SnapshotTable.DefaultOrphanAgeMs): Unit = {
-    val versions = history.map(_._1)
-    if (currentVersion.isEmpty) return
-    expireTo(versions.filter(commitTimeOf(_) > tsMillis).toSet, olderThanMs)
-  }
+                      olderThanMs: Long = SnapshotTable.DefaultOrphanAgeMs): Unit =
+    expireTo(olderThanMs)(_.filter(commitTimeOf(_) > tsMillis).map(_.version).toSet)
 
-  private def expireTo(keepBase: Set[Int], olderThanMs: Long): Unit = {
+  /** The retention core: `keepBase` picks the versions to keep from
+    * main's retained manifests (oldest first); the live version, tagged
+    * versions and the head frontier are kept on top. One walk of every
+    * lineage's retained manifests serves the whole call. */
+  private def expireTo(olderThanMs: Long)(keepBase: Seq[Manifest] => Set[Int]): Unit = {
     require(olderThanMs >= 0, "olderThanMs must be >= 0")
-    var versions = history.map(_._1)
+    var ms = retained(Main)
     var cur = currentVersion.getOrElse(return)
-    if (!versions.contains(cur)) {
+    if (!ms.exists(_.version == cur)) {
       // CURRENT points at a version with no manifest: a delayed flip
       // regressed the pointer onto an expired slot (stress-fuzz
       // finding). Heal first — retention must never compute against a
       // phantom head (parsing it crashes; guessing around it could
       // delete live state).
       repair()
-      versions = history.map(_._1)
+      ms = retained(Main)
       cur = currentVersion.getOrElse(return)
-      require(versions.contains(cur),
+      require(ms.exists(_.version == cur),
         s"CURRENT v$cur has no manifest even after repair() at $root — " +
           "inspect fsck() before running retention")
     }
+    val versions = ms.map(_.version)
     // keepBase/tag entries can reference phantoms too (a caller's cur
     // read raced the same window); keep decisions only over versions
     // that exist
-    val keepR = (keepBase + cur ++ tags.map(_._2)).filter(versions.contains)
+    val keepR = (keepBase(ms) + cur ++ tags.map(_._2)).filter(versions.contains)
     // THE HEAD FRONTIER IS NEVER EXPIRABLE: a manifest numbered above
     // every kept version is either an in-flight commit inside its
     // create→flip window or a crashed winner awaiting repair()'s
     // promote — both look like "newest manifest, CURRENT still behind".
-    // The caller computed keepBase from an earlier listing, so treating
-    // frontier versions as dead would delete a LIVE commit's manifest:
+    // keepBase need not name them (an age cut stops below them), so
+    // treating frontier versions as dead would delete a LIVE commit's manifest:
     // the publisher's flip then lands CURRENT on a phantom and every
     // subsequent commit fails parsing it (stress-fuzz finding).
     val keep0 = keepR ++ versions.filter(_ > keepR.max)
@@ -2555,21 +2505,17 @@ class SnapshotTable(spark: SparkSession, root: String,
       if (pointer.isDefined && keep0.nonEmpty)
         keep0 ++ versions.filter(_ >= keep0.min)
       else keep0
-    val dead = versions.filterNot(keep)
-    // branch-referenced dirs are LIVE regardless of main retention — a
-    // branch is a promise its state stays readable until dropped
-    // dirs a live shallow clone borrows are LIVE regardless of this
-    // table's own retention — the lease back-pointer is the clone's
-    // promise-of-need, held until it localizes or is dropped
-    val referenced = keep.toSeq.flatMap { v =>
-      val m = parse(v); m.entries.map(_.dir) ++ m.deletes.map(_.dir)
-    }.toSet ++ branchReferencedDirs ++ borrowedProtectedDirs()
+    val (kept, dead) = ms.partition(m => keep(m.version))
+    // branch-referenced dirs are LIVE regardless of main retention, and
+    // so are dirs a live shallow clone borrows — the lease back-pointer
+    // is the clone's promise-of-need, held until it localizes or is
+    // dropped
+    val live = kept ++ vp.branchList().flatMap(n => retained(Named(n)))
+    val referenced = live.flatMap(dirsOf).toSet ++ borrowedProtectedDirs()
     // committed-then-expired dirs: reclaimable with no age check — their
     // manifests prove no writer is mid-commit on them
-    val deadReferenced = dead.flatMap { v =>
-      val m = parse(v); m.entries.map(_.dir) ++ m.deletes.map(_.dir)
-    }.toSet -- referenced
-    dead.foreach(vp.delete)
+    val deadReferenced = dead.flatMap(dirsOf).toSet -- referenced
+    dead.foreach(m => vp.delete(m.version))
     val cutoff = System.currentTimeMillis() - olderThanMs
     if (fs.exists(dataDir))
       fs.listStatus(dataDir).foreach { st =>
@@ -2588,7 +2534,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     // if THIS table is a clone and this expire just retired its last
     // borrowing manifest (the localize recipe: commitCompactFiles +
     // expire), hand the borrowed dirs back to their owner's retention
-    releaseBorrowLeasesIfLocalized()
+    releaseIfLocalized(live)
   }
 
   /** Remove ORPHAN data directories — `_data/d*` dirs referenced by no
@@ -2616,7 +2562,12 @@ class SnapshotTable(spark: SparkSession, root: String,
     * the removed dir names. */
   def vacuum(olderThanMs: Long = SnapshotTable.DefaultOrphanAgeMs): Seq[String] = {
     require(olderThanMs >= 0, "olderThanMs must be >= 0")
-    val cutoff = System.currentTimeMillis() - olderThanMs
+    sweep(System.currentTimeMillis() - olderThanMs, allRetained())
+  }
+
+  /** [[vacuum]]'s sweep below `cutoff`, against the retained manifests
+    * `live` of every lineage. */
+  private def sweep(cutoff: Long, live: Seq[Manifest]): Seq[String] = {
     // crash debris from the atomic-publish protocol: a writer that died
     // between staging its `.…tmp` and the link/rename leaves the temp
     // behind. An IN-FLIGHT publish's temp is milliseconds old, so only
@@ -2638,7 +2589,7 @@ class SnapshotTable(spark: SparkSession, root: String,
         fs.delete(p, false) }
       catch { case _: java.io.FileNotFoundException => () } // raced away
     }
-    val orphans = orphanDirs(cutoff, sweepStaleLeases = true)
+    val orphans = orphanDirs(cutoff, sweepStaleLeases = true, live)
     orphans.foreach { p =>
       fs.delete(p, true)
       fs.delete(new Path(statsDir, p.getName), true)
@@ -2656,18 +2607,18 @@ class SnapshotTable(spark: SparkSession, root: String,
     // lease debris (a preview run concurrent with maintenance stays
     // correct; a lease swept here is benign but breaks the promise)
     orphanDirs(System.currentTimeMillis() - olderThanMs,
-      sweepStaleLeases = false).map(_.getName)
+      sweepStaleLeases = false, allRetained()).map(_.getName)
   }
 
-  /** The never-referenced `_data` dirs older than `cutoff` — candidates
-    * for [[vacuum]]'s sweep and [[vacuumPreview]]'s report.
+  /** The `_data` dirs older than `cutoff` that no manifest of `live`
+    * (every lineage's retained manifests) references — candidates for
+    * [[vacuum]]'s sweep and [[vacuumPreview]]'s report.
     * `sweepStaleLeases` follows the caller's mutability contract. */
-  private def orphanDirs(cutoff: Long, sweepStaleLeases: Boolean): Seq[Path] = {
+  private def orphanDirs(cutoff: Long, sweepStaleLeases: Boolean,
+                         live: Seq[Manifest]): Seq[Path] = {
     if (!fs.exists(dataDir)) return Seq.empty
-    val referenced = history.map(_._1)
-      .flatMap { v => val m = parse(v)
-        m.entries.map(_.dir) ++ m.deletes.map(_.dir) }.toSet ++
-      branchReferencedDirs ++ borrowedProtectedDirs(sweepStaleLeases)
+    val referenced = live.flatMap(dirsOf).toSet ++
+      borrowedProtectedDirs(sweepStaleLeases)
     fs.listStatus(dataDir)
       .filter(st => !referenced(st.getPath.getName) &&
         !st.getPath.getName.startsWith("w_") &&
@@ -2676,9 +2627,11 @@ class SnapshotTable(spark: SparkSession, root: String,
   }
 
   /** All pending staged (write–audit–publish) dir names, sorted. */
-  def stagedDirs: Seq[String] = {
-    val published = history.map(_._1)
-      .flatMap(v => parse(v).entries.map(_.dir)).toSet
+  def stagedDirs: Seq[String] = stagedIn(allRetained())
+
+  /** The `w_*` dirs no manifest of `live` publishes, sorted. */
+  private def stagedIn(live: Seq[Manifest]): Seq[String] = {
+    val published = live.flatMap(_.entries.map(_.dir)).toSet
     if (!fs.exists(dataDir)) Seq.empty
     else fs.listStatus(dataDir).map(_.getPath.getName)
       .filter(n => n.startsWith("w_") && !published(n)).sorted.toSeq
@@ -2691,9 +2644,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     * refuses to delete a PUBLISHED stage's dir (it is table data now). */
   def abandonStaged(stagedDir: String): Unit = {
     require(stagedDir.startsWith("w_"), s"not a staged dir name: '$stagedDir'")
-    val published = history.map(_._1)
-      .flatMap(v => parse(v).entries.map(_.dir)).toSet
-    require(!published(stagedDir),
+    require(!allRetained().exists(_.entries.exists(_.dir == stagedDir)),
       s"'$stagedDir' is published — its files are table data (expire/rollback " +
         "manage committed history)")
     fs.delete(new Path(dataDir, stagedDir), true)
@@ -2794,14 +2745,13 @@ class SnapshotTable(spark: SparkSession, root: String,
     * reclaim). Safe to call any time: a no-op unless this table was
     * created by [[shallowClone]] and every retained manifest (main and
     * branch) references only owned dirs. */
-  def releaseBorrowLeasesIfLocalized(): Unit = {
+  def releaseBorrowLeasesIfLocalized(): Unit = releaseIfLocalized(allRetained())
+
+  /** The release, against `live` — every lineage's retained manifests,
+    * walked only when this table holds a lease marker. */
+  private def releaseIfLocalized(live: => Seq[Manifest]): Unit = {
     if (!fs.exists(borrowMarkerPath)) return
-    def borrows(m: Manifest): Boolean =
-      (m.entries.map(_.dir) ++ m.deletes.map(_.dir)).exists(isBorrowed)
-    val stillBorrows = history.map(_._1).exists(v => borrows(parse(v))) ||
-      branches.exists { case (n, _) =>
-        branchVersions(n).exists(bv => borrows(parseBranch(n, bv))) }
-    if (stillBorrows) return
+    if (live.exists(borrows)) return
     val conf = spark.sparkContext.hadoopConfiguration
     SnapshotTable.readSmall(fs, borrowMarkerPath).foreach {
       _.linesIterator.map(_.trim).filter(_.nonEmpty).foreach { s =>
@@ -2825,12 +2775,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     * history (expire keeps tagged versions — the tag's promise wins;
     * drop it first). A no-op on a table that borrows nothing. */
   def localize(olderThanMs: Long = SnapshotTable.DefaultOrphanAgeMs): Unit = {
-    def borrows(m: Manifest): Boolean =
-      (m.entries.map(_.dir) ++ m.deletes.map(_.dir)).exists(isBorrowed)
-    def borrowsNow: Boolean =
-      history.map(_._1).exists(v => borrows(parse(v))) ||
-        branches.exists { case (n, _) =>
-          branchVersions(n).exists(bv => borrows(parseBranch(n, bv))) }
+    def borrowsNow: Boolean = allRetained().exists(borrows)
     // keyed on the MANIFESTS, not the lease marker: a borrowing clone
     // without a marker (created by a pre-lease build, or the marker
     // lost out of band) must still localize — purge's refusal names
@@ -2845,11 +2790,10 @@ class SnapshotTable(spark: SparkSession, root: String,
       // tag on any still-retained borrowing version (CAS contiguity
       // can retain untagged borrowers above a pin — the tag below is
       // still the one to drop), and any branch whose lineage borrows
-      val retained = history.map(_._1).toSet
-      val pinTags = tags.collect {
-        case (n, v) if retained(v) && borrows(parse(v)) => n }.sorted
-      val pinBranches = branches.map(_._1).filter { n =>
-        branchVersions(n).exists(bv => borrows(parseBranch(n, bv))) }.sorted
+      val borrowing = retained(Main).filter(borrows).map(_.version).toSet
+      val pinTags = tags.collect { case (n, v) if borrowing(v) => n }.sorted
+      val pinBranches = vp.branchList()
+        .filter(n => retained(Named(n)).exists(borrows)).sorted
       val pinNames = pinTags.map("tag '" + _ + "'") ++
         pinBranches.map("branch '" + _ + "'")
       val pins = if (pinNames.nonEmpty) pinNames.mkString(", ")
@@ -2941,12 +2885,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     * shallow-clone path, where the copied manifests still point into
     * the original owner's `_data`. No-op on a fully-owned table. */
   private def adoptBorrowLeases(): Unit = {
-    def dirsOf(m: Manifest): Seq[String] =
-      m.entries.map(_.dir) ++ m.deletes.map(_.dir)
-    val borrowed = (history.map(_._1).flatMap(v => dirsOf(parse(v))) ++
-      branches.flatMap { case (n, _) =>
-        branchVersions(n).flatMap(bv => dirsOf(parseBranch(n, bv))) })
-      .filter(isBorrowed).distinct
+    val borrowed = allRetained().flatMap(dirsOf).filter(isBorrowed).distinct
     if (borrowed.nonEmpty) {
       registerCloneLeases(
         fs.makeQualified(new Path(root)).toString, fs, borrowed)
@@ -3028,56 +2967,29 @@ class SnapshotTable(spark: SparkSession, root: String,
       .filter(isBorrowed).distinct
     val leaseWrites = registerCloneLeases(
       dfs.makeQualified(dst).toString, dfs, borrowedUris)
-    // rollback guard: two clones racing to the SAME destination share
-    // one lease file (ids are destRoot hashes), so the loser must not
-    // delete the winner's protection — roll back only when no live
-    // clone materialized at this destination.
-    def rollbackLeases(winnerExists: => Boolean): Unit = {
-      val skip = try winnerExists catch { case _: Exception => false }
-      if (!skip) leaseWrites.foreach { p =>
+    // v1 publishes through the clone's own pointer — create-exclusive +
+    // CURRENT flip, or one CAS from the empty store cell: the same
+    // commit point every later write on the clone uses. A refusal means
+    // the destination holds a lineage already. Two clones racing to the
+    // SAME destination share one lease file (ids are destRoot hashes),
+    // so the loser must not delete the winner's protection: if the
+    // clone's own v1 manifest exists under its `_manifests`, a racer
+    // won and the lease stays; otherwise (the store points at some
+    // other table) no clone exists here and the lease rolls back.
+    val cloned = new SnapshotTable(spark, destRoot, partCols, destPointer)
+    if (!cloned.vp.publish(Main, 1, render(cm).getBytes("UTF-8"))) {
+      val winnerExists =
+        try dfs.exists(cloned.vp.manifestPath(Main, 1))
+        catch { case _: Exception => false }
+      if (!winnerExists) leaseWrites.foreach { p =>
         try { p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .delete(p, false); () }
         catch { case _: Exception => () }
       }
+      sys.error(s"shallow clone destination is not empty — it already holds " +
+        s"a table, and publishing v1 over it would orphan that lineage ($destRoot)")
     }
-    destPointer match {
-      case Some(_) =>
-        // CAS-mode clone: v1 publishes through the destination store
-        // (attempt-unique manifest + one CAS from the empty cell) —
-        // the same commit point every later write on the clone uses
-        val cloned = new SnapshotTable(spark, destRoot, partCols, destPointer)
-        if (!cloned.vp.publish(1, render(cm).getBytes("UTF-8"))) {
-          // store non-empty: if its head's manifest FILE lives inside
-          // this dest's manifest dir, a same-destination racer won
-          // (keep the lease); if the head belongs to some other table,
-          // no clone exists here and the lease rolls back. The head
-          // value's first line is "<version>|<manifestFile>".
-          rollbackLeases(destPointer.get.get().exists { v =>
-            val line = v.takeWhile(_ != '\n')
-            val bar = line.indexOf('|')
-            bar > 0 &&
-              dfs.exists(new Path(cloneManifests, line.substring(bar + 1)))
-          })
-          sys.error(s"shallow clone destination store is not empty — " +
-            s"publishing v1 over a live pointer would orphan the table " +
-            s"it already points at ($destRoot)")
-        }
-        cloned
-      case None =>
-        if (!graft.util.AtomicFlip.publishExclusive(dfs,
-          new Path(cloneManifests, f"v${1}%05d.txt"),
-          render(cm).getBytes("UTF-8"))) {
-          // v1 exists: the destination was empty at entry, so a racing
-          // clone to the same root created it — its table is live and
-          // the shared lease file is ITS protection; never delete it
-          rollbackLeases(winnerExists = true)
-          sys.error(s"shallow clone destination already has a manifest: $destRoot")
-        }
-        graft.util.AtomicFlip.writeAtomic(dfs,
-          spark.sparkContext.hadoopConfiguration,
-          new Path(cloneManifests, "CURRENT"), "1".getBytes("UTF-8"))
-        new SnapshotTable(spark, destRoot, partCols)
-    }
+    cloned
   }
 
   /** Right-to-be-forgotten erasure: rewrite EVERY retained version so
@@ -3103,8 +3015,11 @@ class SnapshotTable(spark: SparkSession, root: String,
     * actually schedule, which is why sharing rewritten dirs across
     * versions matters. Returns the number of data dirs rewritten. */
   def purge(condition: org.apache.spark.sql.Column): Int = {
-    val versions = history.map(_._1)
-    require(versions.nonEmpty, s"no snapshots at $root")
+    // one walk serves the whole purge: the steps below sweep dirs and
+    // stages but never touch a retained manifest until the rewrite
+    val walk = lineages.map(b => b -> retained(b))
+    val live = walk.flatMap(_._2)
+    require(walk.head._2.nonEmpty, s"no snapshots at $root")
     // live shallow clones read this table's dirs in place — the
     // rewrite-and-delete below would yank bytes out from under them
     // (and the erasure would NOT reach the clones' own lineages, so it
@@ -3127,9 +3042,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     // count, so their positional scopes stay valid — matching rows are
     // physically erased from the dirs while the predicates keep
     // filtering reads exactly as before.
-    require(versions.map(parse).forall(_.deletes.isEmpty) &&
-        branches.forall { case (n, _) =>
-          branchVersions(n).forall(bv => parseBranch(n, bv).deletes.isEmpty) },
+    require(live.forall(_.deletes.isEmpty),
       "purge over merge-on-read deletes is not supported: " +
         "commitCompact to materialize the debt, expire() the " +
         "delete-carrying history, and fast-forward or drop branches — " +
@@ -3140,15 +3053,11 @@ class SnapshotTable(spark: SparkSession, root: String,
     // for maintenance, but a deletion request outranks a pending stage:
     // drop them explicitly here. Age window 0: purge is single-writer/
     // offline by contract, so no in-flight dir exists to protect.
-    vacuum(olderThanMs = 0L)
-    stagedDirs.foreach(abandonStaged)
-    val manifests = versions.map(parse)
+    sweep(System.currentTimeMillis(), live)
+    stagedIn(live).foreach(d => fs.delete(new Path(dataDir, d), true))
     // branch manifests reference dirs too — erasure must cover every
     // lineage, not just main's
-    val branchMs = branches.flatMap { case (n, _) =>
-      branchVersions(n).map(bv => (n, bv, parseBranch(n, bv))) }
-    val dirs = (manifests.flatMap(_.entries.map(_.dir)) ++
-      branchMs.flatMap(_._3.entries.map(_.dir))).distinct
+    val dirs = live.flatMap(_.entries.map(_.dir)).distinct
     // borrowed (shallow-clone) dirs belong to the SOURCE table:
     // rewriting-and-deleting them here would erase rows from a table
     // this handle does not own. Localize first, then purge.
@@ -3161,8 +3070,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     // schemas; with a live column mapping the logical names the caller
     // uses would not resolve (or worse, resolve wrongly) on old-era
     // dirs — materialize the mapping first
-    require(manifests.forall(_.colOps.isEmpty) &&
-        branchMs.forall(_._3.colOps.isEmpty),
+    require(live.forall(_.colOps.isEmpty),
       "purge over a live column rename/drop history is not supported: " +
         "commitCompactFiles() to materialize the mapping, expire() the " +
         "mapped history, then purge")
@@ -3196,7 +3104,6 @@ class SnapshotTable(spark: SparkSession, root: String,
       if (!hasData)
         kept.limit(0).coalesce(1).write.mode("overwrite").parquet(dst.toString)
       writeSchemaSidecar(purged, kept.schema)
-      eagerCount(purged)
       if (statCols.nonEmpty && hasData)
         statCols.foreach(c => graft.sources.DataSkipping.buildStats(
           spark, dst.toString, c, statsPath(purged, c).toString))
@@ -3213,9 +3120,8 @@ class SnapshotTable(spark: SparkSession, root: String,
     def swapDirs(m: Manifest): Array[Byte] =
       render(m.copy(entries = m.entries.map(e => e.copy(dir = mapping(e.dir)))))
         .getBytes("UTF-8")
-    vp.rewriteAll(manifests.map(m => m.version -> swapDirs(m)).toMap)
-    branchMs.groupBy(_._1).foreach { case (n, ms) =>
-      vp.rewriteBranchAll(n, ms.map { case (_, bv, m) => bv -> swapDirs(m) }.toMap)
+    walk.foreach { case (b, ms) =>
+      if (ms.nonEmpty) vp.rewriteAll(b, ms.map(m => m.version -> swapDirs(m)).toMap)
     }
     dirs.foreach { d =>
       fs.delete(new Path(dataDir, d), true)
@@ -3239,23 +3145,19 @@ class SnapshotTable(spark: SparkSession, root: String,
     * 100 TB table. */
   def fsck(): Seq[String] = {
     val problems = scala.collection.mutable.ListBuffer.empty[String]
-    val versions = vp.versions()
-    val parsed = versions.flatMap { v =>
-      try {
-        val m = parse(v)
-        if (m.version != v)
-          problems += s"manifest v$v declares version=${m.version}"
-        Some(m)
-      } catch { case e: Exception =>
-        problems += s"manifest v$v unreadable: ${e.getMessage}"
-        None
-      }
-    }
-    val branchParsed = branches.flatMap { case (n, _) =>
-      branchVersions(n).flatMap { bv =>
-        try Some(parseBranch(n, bv))
-        catch { case e: Exception =>
-          problems += s"branch manifest $n@$bv unreadable: ${e.getMessage}"
+    // the retained-manifest walk, each parse caught so one damaged
+    // manifest is reported rather than ending the audit
+    val walk = lineages.map(b => b -> vp.versions(b))
+    val versions = walk.head._2
+    val parsed = walk.flatMap { case (b, vs) =>
+      vs.flatMap { v =>
+        try {
+          val m = parse(v, b)
+          if (m.version != v)
+            problems += s"manifest ${b.label(v)} declares version=${m.version}"
+          Some(m)
+        } catch { case e: Exception =>
+          problems += s"manifest ${b.label(v)} unreadable: ${e.getMessage}"
           None
         }
       }
@@ -3264,7 +3166,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     // breaks every read of its version, so it is structural damage
     // (parse check only: analysis needs a data schema, and fsck's
     // contract is metadata-only)
-    (parsed ++ branchParsed).foreach { m =>
+    parsed.foreach { m =>
       m.predDeletes.foreach { p =>
         try { expr(p.sql); () }
         catch { case e: Exception =>
@@ -3273,8 +3175,7 @@ class SnapshotTable(spark: SparkSession, root: String,
         }
       }
     }
-    val referenced = (parsed ++ branchParsed)
-      .flatMap(m => m.entries.map(_.dir) ++ m.deletes.map(_.dir)).toSet
+    val referenced = parsed.flatMap(dirsOf).toSet
     referenced.toSeq.sorted.foreach { d =>
       val p = dirPath(d)
       // a missing BORROWED dir means the shallow-clone source
@@ -3337,18 +3238,18 @@ class SnapshotTable(spark: SparkSession, root: String,
   private[graft] def scanVersion(v: Int) = scan(parse(v))
 
   /** The branch head's scan as [[scan]] chooses it. */
-  private[graft] def scanBranch(name: String) = scan(parseBranchHead(name))
+  private[graft] def scanBranch(name: String) = scan(headOf(Named(name)))
 
   /** Crash recovery: if an orphan manifest exists past CURRENT (a
     * writer died between manifest create and pointer flip), re-point
     * CURRENT at the newest manifest — the write WAS durable, finish it. */
   def repair(): Unit = {
-    // `history` PARSES every retained manifest, so a torn or foreign
+    // the walk PARSES every retained manifest, so a torn or foreign
     // file (an empty create-exclusive husk) throws here instead of
     // being promoted — only a fully-written, durable commit may become
     // CURRENT (publishExclusive is atomic-with-content, so a real
     // winner's manifest always parses)
-    val latest = history.map(_._1).maxOption
+    val latest = retained(Main).map(_.version).maxOption
     (latest, currentVersion) match {
       case (Some(l), Some(c)) if l > c => vp.promote(l)
       case (Some(l), None) => vp.promote(l)
@@ -3548,13 +3449,6 @@ object SnapshotTable {
     val manifestDir = new Path(root, "_manifests")
     val fs = new Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readAll(p: Path): Option[String] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-        finally in.close()
-      }
     val headManifest: Option[String] = store match {
       case Some(st) =>
         // CAS pointer value's first line is "<version>|<manifestFile>"
@@ -3563,12 +3457,12 @@ object SnapshotTable {
           if (bar > 0) Some(line.substring(bar + 1)) else None
         }
       case None =>
-        readAll(new Path(manifestDir, "CURRENT")).map(_.trim.toInt)
+        readTextIfExists(fs, new Path(manifestDir, "CURRENT")).map(_.trim.toInt)
           .map(cur => f"v$cur%05d.txt")
     }
     for {
       name <- headManifest
-      text <- readAll(new Path(manifestDir, name))
+      text <- readTextIfExists(fs, new Path(manifestDir, name))
       line <- text.linesIterator.find(_.startsWith("partcols="))
     } yield line.stripPrefix("partcols=")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
@@ -3653,15 +3547,24 @@ object SnapshotTable {
       }
   }
 
+  /** A metadata file's text (manifest, pointer, tag, sidecar) — the
+    * one metadata reader; every failure propagates, a missing file as
+    * FileNotFoundException. */
+  private[write] def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  /** [[readText]] where a missing file is an answer: one open, with
+    * only FileNotFoundException mapped to None. */
+  private[write] def readTextIfExists(fs: FileSystem, p: Path): Option[String] =
+    try Some(readText(fs, p))
+    catch { case _: java.io.FileNotFoundException => None }
+
   /** Best-effort small-file read (None on any failure — lease parsing
     * must never make maintenance throw on debris). */
-  private[write] def readSmall(fs: org.apache.hadoop.fs.FileSystem,
-                               p: Path): Option[String] =
-    try {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    } catch { case _: Exception => None }
+  private[write] def readSmall(fs: FileSystem, p: Path): Option[String] =
+    try Some(readText(fs, p)) catch { case _: Exception => None }
 
   /** Default retention window for the orphan-dir sweeps ([[SnapshotTable.vacuum]],
     * [[SnapshotTable.expire]]): an unreferenced `_data` dir younger than this is

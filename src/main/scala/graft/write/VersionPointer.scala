@@ -2,20 +2,47 @@ package graft.write
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
+/** A lineage of commits: main, or a named branch. As in Iceberg, main
+  * is just the default branch ref — every lineage has one head, one
+  * version namespace and one single-winner publish, so
+  * [[VersionPointer]] and [[SnapshotTable]] take a lineage rather than
+  * a main call and a branch twin of it. */
+private[write] sealed trait Branch {
+  /** Version `v`'s label in messages: `v7` on main, `dev@7` on a branch. */
+  def label(v: Int): String
+}
+
+private[write] object Branch {
+  case object Main extends Branch {
+    def label(v: Int): String = s"v$v"
+  }
+  final case class Named(name: String) extends Branch {
+    require(Named.valid(name), s"branch name must be [A-Za-z0-9_]+: '$name'")
+    def label(v: Int): String = s"$name@$v"
+  }
+  object Named {
+    def valid(name: String): Boolean =
+      name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_')
+  }
+}
+
 /** The COMMIT-ARBITRATION seam of [[SnapshotTable]]: who decides, among
-  * N racing writers of version v, which one's manifest becomes v — and
-  * where the "current version" pointer, the named refs (tags), and the
-  * branch lineages live.
+  * N racing writers of version v of a lineage ([[Branch]]: main or a
+  * named branch), which one's manifest becomes v — and where each
+  * lineage's head and the named refs (tags) live. Every lineage
+  * operation takes the lineage: one head read, one manifest-path
+  * resolution, one version listing, one publish and one history
+  * rewrite per arbitration mode.
   *
   * Two deployments exist (the same pair Iceberg supports):
   *
   *  - [[FsVersionPointer]] (default): the FILESYSTEM arbitrates.
-  *    Create-exclusive on a fixed manifest name (`v00007.txt`) is the
-  *    commit point; an atomic overwrite-rename keeps the CURRENT
-  *    pointer file fresh; tags are create-exclusive `TAG_<name>` files
-  *    and branch manifests create-exclusive `bv_<name>_NNNNN.txt`
-  *    files. Requires atomic create/rename — HDFS, local, POSIX. This
-  *    is the round-1..13 protocol, unchanged.
+  *    Create-exclusive on a fixed manifest name (`v00007.txt` on main,
+  *    `bv_<name>_00007.txt` on a branch) is the commit point; main's
+  *    head is the `CURRENT` file, kept fresh by an atomic
+  *    overwrite-rename, and a branch's head is its newest manifest in
+  *    the listing; tags are create-exclusive `TAG_<name>` files.
+  *    Requires atomic create/rename — HDFS, local, POSIX.
   *
   *  - [[CasVersionPointer]]: a CONDITIONAL-WRITE STORE arbitrates (the
   *    Iceberg HMS/REST-catalog shape — the deployment the reference
@@ -23,50 +50,50 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    catalog with compare-and-swap,
   *    `/root/reference/trino/catalog/iceberg.properties:13-14`,
   *    `dbt/profiles.yml:4-13`). Manifests are written under
-  *    attempt-unique names (`v00007_<uuid>.txt` — plain creates, safe
-  *    on S3 because no two writers share a name), and the commit point
-  *    is ONE compare-and-swap of the pointer value. The value's FIRST
-  *    line is `"<version>|<manifestFile>"`; every named ref (tag pins,
-  *    branch heads) rides the SAME value as `ref=<name>|<value>` lines,
-  *    so ref creation/drop and branch commits are each one CAS against
-  *    the same single arbiter — nothing ref-shaped is ever
-  *    create-exclusive on the filesystem (the round-14 gap: a CAS
-  *    deployment exists precisely because the store lacks atomic
-  *    create-exclusive, so refs must arbitrate through the catalog too,
-  *    exactly where Iceberg keeps them). Branch manifests are
-  *    attempt-unique files chained by `parentfile=` lines like main's,
-  *    with the head recorded in the branch's ref. Version →
-  *    manifest-file resolution walks the `parentfile=` chain ONCE per
-  *    head value and memoizes (O(retained) metadata reads per head
-  *    move, not per call).
+  *    attempt-unique names (`v00007_<uuid>.txt`, `bv_<name>_00007_<uuid>.txt`
+  *    — plain creates, safe on S3 because no two writers share a name)
+  *    chained by `parentfile=` lines, and the commit point is ONE
+  *    compare-and-swap of the pointer value. The value's FIRST line is
+  *    main's head `"<version>|<manifestFile>"`; every named ref (tag
+  *    pins, branch heads) rides the SAME value as `ref=<name>|<value>`
+  *    lines, so ref creation/drop and commits on any lineage are each
+  *    one CAS against the same single arbiter — nothing ref-shaped is
+  *    ever create-exclusive on the filesystem (a CAS deployment exists
+  *    precisely because the store lacks atomic create-exclusive, so refs
+  *    must arbitrate through the catalog too, exactly where Iceberg
+  *    keeps them). Version → manifest-file resolution walks a lineage's
+  *    `parentfile=` chain ONCE per head move and memoizes (O(retained)
+  *    metadata reads per head move, not per call).
   *
   * A table is created and lives in ONE mode; the modes' manifest names
   * are disjoint by construction (fixed vs uuid-suffixed), so opening a
   * table in the wrong mode fails loudly rather than misreading.
   */
 private[write] trait VersionPointer {
-  /** The live version, if the table exists. */
-  def currentVersion(): Option[Int]
-  /** Canonical manifest path for a retained version. */
-  def manifestPath(v: Int): Path
-  /** Publish `content` as version `v`'s manifest (parent `v - 1`).
-    * Exactly one racing writer returns true; on true the pointer serves
-    * `v`. False = lost the race (or an orphan blocks — see repair). */
-  def publish(v: Int, content: Array[Byte]): Boolean
-  /** Retained versions, ascending. */
-  def versions(): Seq[Int]
-  /** Remove version `v`'s manifest (expire path). */
-  def delete(v: Int): Unit
-  /** Replace the RETAINED manifests' contents preserving every
-    * version's identity in the chain (the purge path — callers pass
-    * the full retained set). Fs mode: one atomic overwrite-rename per
-    * manifest. CAS mode: the whole chain is rebuilt COPY-ON-WRITE
-    * under fresh attempt-unique names and swapped in with ONE CAS of
-    * the head pointer — an in-place overwrite has no atomic primitive
-    * on the object stores CAS mode exists for (a racing reader could
+  /** The lineage's head version: main's live version if the table
+    * exists, a branch's newest version if the branch exists. */
+  def head(b: Branch): Option[Int]
+  /** Canonical manifest path for a retained version of the lineage. */
+  def manifestPath(b: Branch, v: Int): Path
+  /** The lineage's retained versions, ascending. */
+  def versions(b: Branch): Seq[Int]
+  /** Publish `content` as version `v` of the lineage, computed against
+    * head `v - 1` (`v = 1` creates a branch). Exactly one racing writer
+    * returns true; on true the lineage's head is `v`. False = lost the
+    * race, or a guard refused the slot (see each mode). */
+  def publish(b: Branch, v: Int, content: Array[Byte]): Boolean
+  /** Replace the lineage's RETAINED manifests' contents preserving every
+    * version's identity in the chain (the purge path — callers pass the
+    * full retained set). Fs mode: one atomic overwrite-rename per
+    * manifest. CAS mode: the whole chain is rebuilt COPY-ON-WRITE under
+    * fresh attempt-unique names and swapped in with ONE CAS of the
+    * lineage's head — an in-place overwrite has no atomic primitive on
+    * the object stores CAS mode exists for (a racing reader could
     * observe a missing manifest; a crash mid-write could lose it). */
-  def rewriteAll(contents: Map[Int, Array[Byte]]): Unit
-  /** Point the pointer at version `v` (crash repair — the CALLER has
+  def rewriteAll(b: Branch, contents: Map[Int, Array[Byte]]): Unit
+  /** Remove main's version `v` manifest (expire path). */
+  def delete(v: Int): Unit
+  /** Point main's head at version `v` (crash repair — the CALLER has
     * already validated that v's manifest parses as a durable commit; a
     * torn or foreign manifest file must never be promoted). No-op in
     * modes without a created-but-unflipped window. */
@@ -77,6 +104,11 @@ private[write] trait VersionPointer {
     * create-exclusive refuses them). The vacuum sweep collects these
     * past the retention window. */
   def orphanManifests(): Seq[Path]
+  /** All branch names. */
+  def branchList(): Seq[String]
+  /** Remove the whole branch (its manifests and, in CAS mode, its
+    * ref). Idempotent. */
+  def dropBranch(name: String): Unit
 
   // ---- named refs (tags): immutable single-line values arbitrated by
   // the SAME authority as the commit point. Names are namespaced by
@@ -91,62 +123,86 @@ private[write] trait VersionPointer {
   def refDrop(name: String): Unit
   /** All refs, (name, value), unordered. */
   def refList(): Seq[(String, String)]
-
-  // ---- branch lineages: per-name manifest chains with their own
-  // single-winner commit point, arbitrated by the same authority. ----
-
-  /** The branch's head branch-version, if the branch exists. */
-  def branchHead(name: String): Option[Int]
-  /** All branch names. */
-  def branchList(): Seq[String]
-  /** Manifest path for a retained branch version. */
-  def branchManifestPath(name: String, bv: Int): Path
-  /** Retained branch versions, ascending. */
-  def branchVersions(name: String): Seq[Int]
-  /** Publish `content` as branch `name`'s version `bv` (bv = 1
-    * creates the branch; bv > 1 extends head bv-1). Exactly one racing
-    * writer returns true. */
-  def publishBranch(name: String, bv: Int, content: Array[Byte]): Boolean
-  /** Remove the whole branch (its manifests and, in CAS mode, its
-    * ref). Idempotent. */
-  def dropBranch(name: String): Unit
-  /** [[rewriteAll]] for one branch's retained manifests (purge). */
-  def rewriteBranchAll(name: String, contents: Map[Int, Array[Byte]]): Unit
 }
 
 /** Filesystem arbitration — the default protocol, exactly as documented
   * on [[SnapshotTable]]: create-exclusive commit point on a fixed
-  * manifest name, atomic-rename CURRENT pointer, repair() finishes a
-  * crashed winner's flip. Tags are `TAG_<name>` files; branch
-  * manifests are `bv_<name>_NNNNN.txt` files, both create-exclusive. */
+  * manifest name, atomic-rename CURRENT pointer for main, repair()
+  * finishes a crashed winner's flip. Tags are `TAG_<name>` files;
+  * branch manifests are `bv_<name>_NNNNN.txt` files, create-exclusive
+  * like main's, and a branch's head is its newest one. */
 private[write] class FsVersionPointer(fs: FileSystem,
                                       conf: org.apache.hadoop.conf.Configuration,
                                       manifestDir: Path) extends VersionPointer {
 
   private val currentPath = new Path(manifestDir, "CURRENT")
 
-  override def currentVersion(): Option[Int] =
-    if (!fs.exists(currentPath)) {
-      // a table with CAS-style manifests (uuid-suffixed names) but no
-      // CURRENT file was created under a conditional-write pointer —
-      // reading it in Fs mode would silently serve "no table"; refuse
-      // with the fix named instead. Only the cold no-CURRENT path pays
-      // the listing.
-      val casManifests = fs.exists(manifestDir) &&
-        fs.listStatus(manifestDir).exists(
-          _.getPath.getName.matches("v\\d+_[0-9a-f]{8}\\.txt"))
-      if (casManifests) sys.error(
-        s"table at $manifestDir was committed under a conditional-write " +
-          "pointer (CAS mode): open it with its ConditionalStore " +
-          "(new SnapshotTable(spark, root, partCols, Some(store)))")
-      None
-    } else {
-      val in = fs.open(currentPath)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt)
-      finally in.close()
+  override def head(b: Branch): Option[Int] = b match {
+    case Branch.Main => currentVersion()
+    case _ => versions(b).maxOption
+  }
+
+  private def currentVersion(): Option[Int] =
+    SnapshotTable.readTextIfExists(fs, currentPath) match {
+      case Some(text) => Some(text.trim.toInt)
+      case None =>
+        // a table with CAS-style manifests (uuid-suffixed names) but no
+        // CURRENT file was created under a conditional-write pointer —
+        // reading it in Fs mode would silently serve "no table"; refuse
+        // with the fix named instead. Only the cold no-CURRENT path pays
+        // the listing.
+        val casManifests = fs.exists(manifestDir) &&
+          fs.listStatus(manifestDir).exists(
+            _.getPath.getName.matches("v\\d+_[0-9a-f]{8}\\.txt"))
+        if (casManifests) sys.error(
+          s"table at $manifestDir was committed under a conditional-write " +
+            "pointer (CAS mode): open it with its ConditionalStore " +
+            "(new SnapshotTable(spark, root, partCols, Some(store)))")
+        None
     }
 
-  override def manifestPath(v: Int): Path = new Path(manifestDir, f"v$v%05d.txt")
+  override def manifestPath(b: Branch, v: Int): Path = new Path(manifestDir, b match {
+    case Branch.Main => f"v$v%05d.txt"
+    case Branch.Named(name) => f"bv_${name}_$v%05d.txt"
+  })
+
+  /** The lineage and version a manifest file name belongs to — the one
+    * name parser behind [[versions]] and [[branchList]]. A branch
+    * manifest's name is everything between `bv_` and the LAST `_`, and
+    * its version the all-digit token after it: branch names allow
+    * digits and underscores, so `bv_daily_` is a string-prefix of
+    * `bv_daily_v2_`'s manifests, and a prefix match would hand branch
+    * `daily` the token `v2_00001` and throw from every maintenance op on
+    * the table (vacuum/expire/purge/fsck all walk every branch). The
+    * last-underscore split makes prefix-related names coexist. `>= 5`
+    * digits (not `== 5`) because `f"%05d"` PADS to five digits but
+    * renders six at version 100000 — an exact-5 parse would publish
+    * that manifest and then never see it again, wedging the branch head
+    * at 99999 with every later commit hitting the existing 100000 file.
+    * Names outside both shapes (CAS attempt files, tags, CURRENT,
+    * temps) belong to no lineage. */
+  private def lineageOf(fileName: String): Option[(Branch, Int)] =
+    if (fileName.matches("v\\d+\\.txt"))
+      Some(Branch.Main -> fileName.stripPrefix("v").stripSuffix(".txt").toInt)
+    else if (!(fileName.startsWith("bv_") && fileName.endsWith(".txt"))) None
+    else {
+      val rest = fileName.stripPrefix("bv_").stripSuffix(".txt")
+      val i = rest.lastIndexOf('_')
+      val (name, digits) = (rest.take(math.max(i, 0)), rest.drop(i + 1))
+      if (i <= 0 || digits.length < 5 || !digits.forall(_.isDigit) ||
+          !Branch.Named.valid(name)) None
+      else Some(Branch.Named(name) -> digits.toInt)
+    }
+
+  private def listing(): Seq[(Branch, Int)] =
+    if (!fs.exists(manifestDir)) Seq.empty
+    else fs.listStatus(manifestDir).toSeq.flatMap(st => lineageOf(st.getPath.getName))
+
+  override def versions(b: Branch): Seq[Int] =
+    listing().collect { case (`b`, v) => v }.sorted
+
+  override def branchList(): Seq[String] =
+    listing().collect { case (Branch.Named(name), _) => name }.distinct.sorted
 
   private def flipCurrent(v: Int): Unit = {
     // monotonic guard: a DELAYED flip (a writer descheduled between its
@@ -166,59 +222,70 @@ private[write] class FsVersionPointer(fs: FileSystem,
     // writing, re-list: a newer manifest means our write may have
     // regressed a newer flip — re-flip forward. Each pass strictly
     // advances, so the recursion is bounded by the racer count.
-    val newest = versions().maxOption
+    val newest = versions(Branch.Main).maxOption
     if (newest.exists(_ > v)) newest.foreach(flipCurrent)
   }
 
-  override def publish(v: Int, content: Array[Byte]): Boolean = {
-    // recreated-slot guard (the Fs-mode analog of the conditional
-    // store's recreated-generation guards): a count-based expire
-    // DELETES old manifest files, freeing their names — a writer
-    // stalled past the retention window could then win
-    // create-exclusive on a freed slot and "commit" into history's
-    // past: CURRENT never points at it (flipCurrent's monotonic guard
-    // skips the flip), so the commit would be silently lost while
-    // reporting success, and the orphan file would serve WRONG rows to
-    // time travel of the expired version. Pre-check: CURRENT >= v
-    // before our create is definitive loss — CURRENT can only reach v
-    // through this slot's own manifest, which nobody has created yet —
-    // so refuse as an ordinary conflict (the caller recomputes against
-    // the new current and retries).
-    // (A post-win re-check of CURRENT was considered and rejected: a
-    // concurrent conflict-loser's repair() legitimately PROMOTES our
-    // just-created manifest and the next commit advances past it, so
-    // "CURRENT > v after our create" cannot distinguish a landed
-    // commit from a recreated-slot win — acting on it would delete
-    // real history. The pre-check plus flipCurrent's self-heal plus
-    // expire's head-frontier guard close every persistent path; the
-    // residual needs a transiently regressed CURRENT read AND an
-    // expired slot AND a win inside the same microsecond window.)
-    if (currentVersion().exists(_ >= v)) return false
-    if (!graft.util.AtomicFlip.publishExclusive(fs, manifestPath(v), content))
-      return false
-    flipCurrent(v)
-    true
+  override def publish(b: Branch, v: Int, content: Array[Byte]): Boolean = b match {
+    case Branch.Main =>
+      fs.mkdirs(manifestDir)
+      // recreated-slot guard (the Fs-mode analog of the conditional
+      // store's recreated-generation guards): a count-based expire
+      // DELETES old manifest files, freeing their names — a writer
+      // stalled past the retention window could then win
+      // create-exclusive on a freed slot and "commit" into history's
+      // past: CURRENT never points at it (flipCurrent's monotonic guard
+      // skips the flip), so the commit would be silently lost while
+      // reporting success, and the orphan file would serve WRONG rows to
+      // time travel of the expired version. Pre-check: CURRENT >= v
+      // before our create is definitive loss — CURRENT can only reach v
+      // through this slot's own manifest, which nobody has created yet —
+      // so refuse as an ordinary conflict (the caller recomputes against
+      // the new current and retries).
+      // (A post-win re-check of CURRENT was considered and rejected: a
+      // concurrent conflict-loser's repair() legitimately PROMOTES our
+      // just-created manifest and the next commit advances past it, so
+      // "CURRENT > v after our create" cannot distinguish a landed
+      // commit from a recreated-slot win — acting on it would delete
+      // real history. The pre-check plus flipCurrent's self-heal plus
+      // expire's head-frontier guard close every persistent path; the
+      // residual needs a transiently regressed CURRENT read AND an
+      // expired slot AND a win inside the same microsecond window.)
+      if (currentVersion().exists(_ >= v)) return false
+      if (!graft.util.AtomicFlip.publishExclusive(fs, manifestPath(b, v), content))
+        return false
+      flipCurrent(v)
+      true
+    case _ =>
+      // a branch's head is its newest manifest, so the publish must
+      // extend exactly that head (CAS mode's rule for every lineage):
+      // dropBranch frees the slot names, and a writer that read head
+      // v-1 before a drop — or a drop and re-create, whose head is
+      // lower — would otherwise win create-exclusive on a free slot and
+      // resurrect the old lineage plus its stale batch, shadowing the
+      // live one. Refusing surfaces it as an ordinary conflict whose
+      // retry reads the branch as it now is.
+      head(b).getOrElse(0) == v - 1 &&
+        graft.util.AtomicFlip.publishExclusive(fs, manifestPath(b, v), content)
   }
 
-  override def versions(): Seq[Int] =
-    if (!fs.exists(manifestDir)) Seq.empty
-    else fs.listStatus(manifestDir).map(_.getPath.getName)
-      .collect { case n if n.matches("v\\d+\\.txt") =>
-        n.stripPrefix("v").stripSuffix(".txt").toInt }
-      .sorted.toSeq
-
-  override def delete(v: Int): Unit = fs.delete(manifestPath(v), false)
-
-  override def rewriteAll(contents: Map[Int, Array[Byte]]): Unit =
+  override def rewriteAll(b: Branch, contents: Map[Int, Array[Byte]]): Unit =
     contents.toSeq.sortBy(_._1).foreach { case (v, content) =>
       // one atomic overwrite-rename per manifest: a reader racing the
       // rewrite sees each version's old or new manifest in full
-      graft.util.AtomicFlip.writeAtomic(fs, conf, manifestPath(v), content)
+      graft.util.AtomicFlip.writeAtomic(fs, conf, manifestPath(b, v), content)
     }
+
+  override def delete(v: Int): Unit = fs.delete(manifestPath(Branch.Main, v), false)
 
   override def promote(v: Int): Unit = flipCurrent(v)
 
   override def orphanManifests(): Seq[Path] = Seq.empty
+
+  override def dropBranch(name: String): Unit = {
+    val b = Branch.Named(name)
+    versions(b).foreach(bv => fs.delete(manifestPath(b, bv), false))
+  }
 
   // ---- refs: TAG_<name> files, the round-1..13 on-disk layout ----
 
@@ -238,15 +305,8 @@ private[write] class FsVersionPointer(fs: FileSystem,
     graft.util.AtomicFlip.publishExclusive(fs, refPath(name),
       value.getBytes("UTF-8"))
 
-  override def refGet(name: String): Option[String] = {
-    val p = refPath(name)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    }
-  }
+  override def refGet(name: String): Option[String] =
+    SnapshotTable.readTextIfExists(fs, refPath(name)).map(_.trim)
 
   override def refDrop(name: String): Unit = { fs.delete(refPath(name), false); () }
 
@@ -257,91 +317,6 @@ private[write] class FsVersionPointer(fs: FileSystem,
         "tag/" + n.stripPrefix("TAG_") }
       .sorted.toSeq
       .flatMap(n => refGet(n).map(n -> _))
-
-  // ---- branches: bv_<name>_NNNNN.txt manifests, heads from listing ----
-
-  private def branchPrefix(name: String): String = {
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"branch name must be [A-Za-z0-9_]+: '$name'")
-    s"bv_${name}_"
-  }
-
-  override def branchManifestPath(name: String, bv: Int): Path =
-    new Path(manifestDir, f"${branchPrefix(name)}$bv%05d.txt")
-
-  /** The version suffix of a branch manifest name, iff the remainder
-    * after the prefix is EXACTLY an all-digit version token of >= 5
-    * digits — branch names allow digits and underscores, so `bv_daily_`
-    * is a string-prefix of `bv_daily_v2_`'s manifests; a bare
-    * startsWith match would hand `branchVersions("daily")` the token
-    * `v2_00001` and throw from every maintenance op on the table
-    * (vacuum/expire/purge/fsck all walk every branch). The strict-shape
-    * parse makes prefix-related names coexist, and it stays unambiguous
-    * against a LONGER branch name sharing the prefix: that name's
-    * manifests carry an extra `_NNNNN` token, so their suffix contains
-    * an underscore and never parses as all digits. `>= 5` (not `== 5`)
-    * because `f"%05d"` PADS to five digits but renders six at branch
-    * version 100000 — an exact-5 parse would publish that manifest and
-    * then never see it again, wedging the branch head at 99999 with
-    * every later commit hitting the existing 100000 file. */
-  private def branchVersionOf(pre: String, fileName: String): Option[Int] =
-    if (!(fileName.startsWith(pre) && fileName.endsWith(".txt"))) None
-    else {
-      val suffix = fileName.stripPrefix(pre).stripSuffix(".txt")
-      if (suffix.length >= 5 && suffix.forall(_.isDigit)) Some(suffix.toInt)
-      else None // a longer branch name sharing this prefix — not ours
-    }
-
-  override def branchVersions(name: String): Seq[Int] = {
-    val pre = branchPrefix(name)
-    if (!fs.exists(manifestDir)) Seq.empty
-    else fs.listStatus(manifestDir).map(_.getPath.getName)
-      .flatMap(branchVersionOf(pre, _))
-      .sorted.toSeq
-  }
-
-  override def branchHead(name: String): Option[Int] =
-    branchVersions(name).maxOption
-
-  override def branchList(): Seq[String] =
-    if (!fs.exists(manifestDir)) Seq.empty
-    else fs.listStatus(manifestDir).map(_.getPath.getName)
-      .collect { case n if n.startsWith("bv_") && n.endsWith(".txt") =>
-        n.stripPrefix("bv_").stripSuffix(".txt") }
-      .flatMap { rest =>
-        // name = everything before the trailing _NNNNN version token
-        // (names may themselves contain underscores and digits);
-        // >= 5 digits for the same 100000-rollover reason as
-        // branchVersionOf
-        val i = rest.lastIndexOf('_')
-        if (i <= 0 || rest.length - i - 1 < 5 ||
-            !rest.drop(i + 1).forall(_.isDigit)) None
-        else Some(rest.substring(0, i))
-      }
-      .distinct.sorted.toSeq
-
-  override def publishBranch(name: String, bv: Int, content: Array[Byte]): Boolean = {
-    // a branch commit (bv > 1) requires the branch to EXIST: dropBranch
-    // frees the bv slot names, so a writer stalled across a concurrent
-    // drop would otherwise win create-exclusive on a freed slot and
-    // resurrect the dropped branch as a partial lineage with no fork
-    // marker (fastForward then dies on it). Same shape as the
-    // main-lineage recreated-slot guard; refusing surfaces the drop to
-    // the writer as an ordinary conflict whose retry reads "no branch".
-    if (bv > 1 && branchHead(name).isEmpty) return false
-    graft.util.AtomicFlip.publishExclusive(fs,
-      branchManifestPath(name, bv), content)
-  }
-
-  override def dropBranch(name: String): Unit =
-    branchVersions(name).foreach(bv =>
-      fs.delete(branchManifestPath(name, bv), false))
-
-  override def rewriteBranchAll(name: String, contents: Map[Int, Array[Byte]]): Unit =
-    contents.toSeq.sortBy(_._1).foreach { case (bv, content) =>
-      graft.util.AtomicFlip.writeAtomic(fs, conf,
-        branchManifestPath(name, bv), content)
-    }
 }
 
 /** The conditional-write primitive [[CasVersionPointer]] arbitrates
@@ -440,19 +415,20 @@ object GraftStores {
   *   ref=tag/<name>|<pinnedVersion>
   *   ref=branch/<name>|<branchVersion>|<branchManifestFile>
   * }}}
-  * Every mutation — commit, tag create/drop, branch commit — is one
-  * CAS of the WHOLE value, so ref mutations and commits serialize
-  * against each other; a CAS that fails only because an UNRELATED line
-  * moved retries internally against the fresh value (the caller's
-  * intent is still valid), so a tag create racing a commit costs one
-  * re-read, never a spurious conflict.
+  * A lineage's head is its line of that value: main's is the first, a
+  * branch's is its `ref=branch/<name>` line. Every mutation — a commit
+  * on any lineage, tag create/drop — is one CAS of the WHOLE value, so
+  * ref mutations and commits serialize against each other; a CAS that
+  * fails only because ANOTHER line moved retries internally against the
+  * fresh value (the caller's intent is still valid), so a tag create
+  * racing a commit costs one re-read, never a spurious conflict.
   *
   * Retention: [[SnapshotTable.expire]] keeps CAS-mode retention
   * CONTIGUOUS from the head down (a tag pinning an old version pins
   * everything newer too), so the chain walk always resolves every
   * retained version — a mid-chain gap would strand the versions below
-  * it. Chain walks are memoized per head value: one O(retained)
-  * metadata pass per head move, invalidated by expire/purge. */
+  * it. Chain walks are memoized per lineage head: one O(retained)
+  * metadata pass per head move. */
 private[write] object CasVersionPointer {
   /** Documented ceiling on named refs (tags + branch heads) per
     * CAS-mode table. Every ref is one line of the single pointer value,
@@ -493,29 +469,54 @@ private[write] class CasVersionPointer(fs: FileSystem,
     (s"${head._1}|${head._2}" +:
       refs.map { case (n, v) => s"ref=$n|$v" }).mkString("\n")
 
-  private def head(): Option[(Int, String)] = store.get().map(parseHead)
+  private def branchRef(name: String) = s"branch/$name"
 
-  override def currentVersion(): Option[Int] = head().map(_._1)
+  /** Lineage `b`'s head in pointer value `raw`, as (version,
+    * manifestFile). */
+  private def headIn(raw: Option[String], b: Branch): Option[(Int, String)] =
+    raw.flatMap { r =>
+      b match {
+        case Branch.Main => Some(parseHead(r))
+        case Branch.Named(name) => parseRefs(r).collectFirst {
+          case (n, v) if n == branchRef(name) =>
+            val bar = v.indexOf('|')
+            require(bar > 0, s"malformed branch ref value: '$v'")
+            (v.substring(0, bar).toInt, v.substring(bar + 1))
+        }
+      }
+    }
 
-  // ---- chain walks, memoized per head value ----
+  /** `raw` with lineage `b`'s head line set to `to`, every other line
+    * carried forward. A branch hangs off a committed main, and creating
+    * one adds a ref line, so it is checked against [[CasVersionPointer.MaxRefs]]
+    * here, inside the CAS loop, where racing creators cannot overshoot. */
+  private def withHead(raw: Option[String], b: Branch, to: (Int, String)): String =
+    b match {
+      case Branch.Main => renderValue(to, raw.map(parseRefs).getOrElse(Seq.empty))
+      case Branch.Named(name) =>
+        val r = raw.getOrElse(sys.error(
+          s"no committed version at $manifestDir to hang a ref on"))
+        val refs = parseRefs(r)
+        if (!refs.exists(_._1 == branchRef(name))) requireRefCapacity(refs)
+        renderValue(parseHead(r), refs.filterNot(_._1 == branchRef(name)) :+
+          (branchRef(name) -> s"${to._1}|${to._2}"))
+    }
+
+  override def head(b: Branch): Option[Int] = headIn(store.get(), b).map(_._1)
+
+  // ---- chain walks, memoized per lineage head ----
 
   /** Diagnostics: full chain walks performed (each is O(retained)
     * metadata reads) — pinned by the memoization spec. */
   private[graft] var chainWalks: Int = 0
 
-  /** Cache key = the exact raw pointer value the walk ran under; a
-    * moved head (new raw) misses and re-walks. Explicitly invalidated
-    * by [[delete]]/[[rewriteAll]], which change FILES without moving
-    * the pointer. Assumes manifests are immutable outside this
-    * protocol — the same assumption every reader of them makes. */
-  @volatile private var chainCache: Option[(String, Map[Int, String])] = None
-  @volatile private var branchChainCache: Map[String, (String, Map[Int, String])] =
+  /** Per lineage: the head the walk ran from and its version → file
+    * map; a moved head misses and re-walks. [[delete]], which removes
+    * FILES without moving a head, trims main's map itself. Assumes
+    * manifests are immutable outside this protocol — the same
+    * assumption every reader of them makes. */
+  @volatile private var chains: Map[Branch, ((Int, String), Map[Int, String])] =
     Map.empty
-
-  private def invalidateChains(): Unit = {
-    chainCache = None
-    branchChainCache = Map.empty
-  }
 
   /** Walk a parentfile chain from (v0, file0) down to its end (or the
     * first missing file — expired history), returning version → file. */
@@ -525,41 +526,64 @@ private[write] class CasVersionPointer(fs: FileSystem,
     var cur: Option[(Int, String)] = Some((v0, file0))
     while (cur.isDefined) {
       val (v, f) = cur.get
-      val p = new Path(manifestDir, f)
-      if (!fs.exists(p)) return acc.toMap // expired past here
-      acc(v) = f
-      val in = fs.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      cur = text.linesIterator.find(_.startsWith("parentfile="))
-        .map(l => (v - 1, l.stripPrefix("parentfile=")))
+      cur = SnapshotTable.readTextIfExists(fs, new Path(manifestDir, f)).flatMap { text =>
+        acc(v) = f
+        text.linesIterator.find(_.startsWith("parentfile="))
+          .map(l => (v - 1, l.stripPrefix("parentfile=")))
+      }
     }
     acc.toMap
   }
 
-  /** The main lineage's version → file map (memoized per raw value). */
-  private def chain(): Map[Int, String] = store.get() match {
-    case None => Map.empty
-    case Some(raw) =>
-      chainCache match {
-        case Some((cachedRaw, m)) if cachedRaw == raw => m
-        case _ =>
-          val (v, f) = parseHead(raw)
-          val m = chainFrom(v, f)
-          chainCache = Some((raw, m))
-          m
-      }
-  }
+  /** Lineage `b`'s version → file map from head `h`, memoized. */
+  private def chainAt(b: Branch, h: Option[(Int, String)]): Map[Int, String] =
+    h match {
+      case None => Map.empty
+      case Some(hd) =>
+        chains.get(b) match {
+          case Some((`hd`, m)) => m
+          case _ =>
+            val m = chainFrom(hd._1, hd._2)
+            chains += (b -> (hd, m))
+            m
+        }
+    }
 
-  override def manifestPath(v: Int): Path =
-    new Path(manifestDir, chain().getOrElse(v,
+  private def chain(b: Branch): Map[Int, String] = chainAt(b, headIn(store.get(), b))
+
+  override def manifestPath(b: Branch, v: Int): Path =
+    new Path(manifestDir, chain(b).getOrElse(v,
       // FileNotFoundException, matching Fs mode's missing-manifest
       // failure shape — callers with expired-history fallbacks
       // (findLatestOp) catch exactly this type
       throw new java.io.FileNotFoundException(
-        s"no retained manifest for v$v under $manifestDir " +
+        s"no retained manifest for ${b.label(v)} under $manifestDir " +
           "(expired, or never committed)")))
+
+  override def versions(b: Branch): Seq[Int] = chain(b).keys.toSeq.sorted
+
+  override def branchList(): Seq[String] =
+    refList().collect { case (n, _) if n.startsWith("branch/") =>
+      n.stripPrefix("branch/") }.sorted
+
+  // ---- the commit point: one attempt writer, one CAS loop ----
+
+  /** Write version `v` of lineage `b` under a fresh attempt-unique name:
+    * the `parentfile=` line first, then the manifest body. No two
+    * writers share a name, so a plain create is race-free even on
+    * last-writer-wins stores. Returns the file name. */
+  private def writeAttempt(b: Branch, v: Int, parentFile: Option[String],
+                           body: Array[Byte]): String = {
+    val fname = (b match {
+      case Branch.Main => f"v$v%05d"
+      case Branch.Named(name) => f"bv_${name}_$v%05d"
+    }) + "_" + java.util.UUID.randomUUID.toString.take(8) + ".txt"
+    val out = fs.create(new Path(manifestDir, fname), false)
+    try out.write(parentFile.map(pf => s"parentfile=$pf\n").getOrElse("")
+      .getBytes("UTF-8") ++ body)
+    finally out.close()
+    fname
+  }
 
   /** `putIf` with INDETERMINATE-OUTCOME handling: a real catalog can
     * APPLY the conditional write and then fail reporting it (network
@@ -567,112 +591,94 @@ private[write] class CasVersionPointer(fs: FileSystem,
     * caller's retry land the same batch TWICE — the
     * commit-state-unknown hazard Iceberg handles by reading back. On
     * any store exception this re-reads: if `attemptFile` is reachable
-    * from the fresh head's parentfile chain, OUR commit happened (the
+    * from lineage `b`'s fresh head chain, OUR commit happened (the
     * attempt name is unique to this call) and the put reports success;
     * otherwise the original failure propagates — still ambiguous, but
     * never silently doubled. */
-  private def putIfChecked(expected: Option[String], value: String,
+  private def putIfChecked(b: Branch, expected: Option[String], value: String,
                            attemptFile: String): Boolean =
     try store.putIf(expected, value)
     catch { case e: Throwable =>
       val landed =
         try {
-          store.get().map(parseHead).exists { case (hv, hf) =>
+          headIn(store.get(), b).exists { case (hv, hf) =>
             hf == attemptFile || chainFrom(hv, hf).values.exists(_ == attemptFile)
           }
         } catch { case _: Throwable => false }
       if (landed) true else throw e
     }
 
-  override def publish(v: Int, content: Array[Byte]): Boolean = {
-    val before = store.get()
-    val beforeHead = before.map(parseHead)
-    // the caller computed `content` against parent v-1; if the pointer
-    // already moved, the race is lost without touching the store
-    if (beforeHead.map(_._1).getOrElse(0) != v - 1) return false
-    val fname = f"v$v%05d" + "_" +
-      java.util.UUID.randomUUID.toString.take(8) + ".txt"
-    val p = new Path(manifestDir, fname)
-    // chain line first, then the manifest body; attempt-unique name, so
-    // a plain create is race-free even on last-writer-wins stores
-    val chained = beforeHead.map { case (_, pf) => s"parentfile=$pf\n" }
-      .getOrElse("").getBytes("UTF-8") ++ content
-    val out = fs.create(p, false)
-    try out.write(chained) finally out.close()
-    // CAS carrying the refs tail forward; a failure where the HEAD
-    // line is unchanged means only a ref moved (tag create, branch
-    // commit) — the commit is still valid against parent v-1, so
-    // retry against the fresh refs instead of surfacing a spurious
-    // conflict (and re-running the caller's whole data write)
-    var cur = before
+  /** THE CAS loop behind [[publish]] and [[rewriteAll]]: swap lineage
+    * `b`'s head line from `from` (as read in `seen`) to `to`, carrying
+    * every other line forward and retrying while only other lines moved
+    * (a tag create or another lineage's commit leaves the caller's
+    * intent valid). Returns false iff `b`'s head moved off `from` — the
+    * real race, lost. The caller's `attempts` files are deleted only on
+    * a DEFINITE loss: that lost race, or a refusal (ref capacity, no
+    * committed main) before any put. An unknown outcome — a store
+    * exception the read-back cannot resolve — propagates with them kept,
+    * since the head may already name them; [[orphanManifests]] collects
+    * them if it does not. */
+  private def swapHead(b: Branch, seen: Option[String], from: Option[(Int, String)],
+                       to: (Int, String), attempts: Seq[String]): Boolean = {
+    def discard(): Unit = attempts.foreach(f => fs.delete(new Path(manifestDir, f), false))
+    var cur = seen
     while (true) {
-      if (putIfChecked(cur, renderValue((v, fname),
-          cur.map(parseRefs).getOrElse(Seq.empty)), fname))
-        return true
-      val fresh = store.get()
-      if (fresh.map(parseHead) != beforeHead) {
-        fs.delete(p, false) // lost the real race: remove our attempt
-        return false
-      }
-      cur = fresh
+      if (headIn(cur, b) != from) { discard(); return false }
+      val next = try withHead(cur, b, to) catch { case e: Throwable => discard(); throw e }
+      if (putIfChecked(b, cur, next, to._2)) return true
+      cur = store.get()
     }
     false // unreachable
   }
 
-  override def versions(): Seq[Int] = chain().keys.toSeq.sorted
-
-  override def delete(v: Int): Unit = {
-    chain().get(v).foreach(f => fs.delete(new Path(manifestDir, f), false))
-    invalidateChains()
+  override def publish(b: Branch, v: Int, content: Array[Byte]): Boolean = {
+    val seen = store.get()
+    val from = headIn(seen, b)
+    // the caller computed `content` against head v-1; if the head
+    // already moved, the race is lost without touching the store
+    if (from.map(_._1).getOrElse(0) != v - 1) return false
+    val fname = writeAttempt(b, v, from.map(_._2), content)
+    swapHead(b, seen, from, (v, fname), Seq(fname))
   }
 
-  override def rewriteAll(contents: Map[Int, Array[Byte]]): Unit = {
-    val raw = store.get().getOrElse(return)
-    val (headV, _) = parseHead(raw)
-    val old = chain()
-    if (old.isEmpty) return
-    val ordered = old.keys.toSeq.sorted
+  override def rewriteAll(b: Branch, contents: Map[Int, Array[Byte]]): Unit = {
+    val seen = store.get()
+    val from = headIn(seen, b).getOrElse(return)
+    val old = chainAt(b, Some(from))
     // rebuild the retained chain bottom-up under fresh attempt-unique
     // names: each new manifest's parentfile points at its parent's NEW
     // name (the oldest keeps its original parent link — it points past
     // the retention edge, where the walk stops at the missing file
     // anyway). Nothing is overwritten in place: readers keep resolving
-    // the OLD chain until the single CAS below swaps the head.
-    def readFile(f: String): String = {
-      val in = fs.open(new Path(manifestDir, f))
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    val newNames = scala.collection.mutable.Map.empty[Int, String]
-    ordered.foreach { v =>
-      val oldText = readFile(old(v))
-      val body = contents.get(v).map(new String(_, "UTF-8")).getOrElse(
+    // the OLD chain until the single CAS below swaps the head; tag
+    // values are bare versions and other lineages' lines name their own
+    // files, so every other line carries forward untouched.
+    val fresh = scala.collection.mutable.Map.empty[Int, String]
+    old.keys.toSeq.sorted.foreach { v =>
+      val oldText = SnapshotTable.readText(fs, new Path(manifestDir, old(v)))
+      val body = contents.getOrElse(v,
         oldText.linesIterator.filterNot(_.startsWith("parentfile="))
-          .mkString("", "\n", "\n"))
-      val parentLine = newNames.get(v - 1) match {
-        case Some(pf) => s"parentfile=$pf\n"
-        case None => oldText.linesIterator
-          .find(_.startsWith("parentfile=")).map(_ + "\n").getOrElse("")
-      }
-      val fname = f"v$v%05d" + "_" +
-        java.util.UUID.randomUUID.toString.take(8) + ".txt"
-      val out = fs.create(new Path(manifestDir, fname), false)
-      try out.write((parentLine + body).getBytes("UTF-8")) finally out.close()
-      newNames(v) = fname
+          .mkString("", "\n", "\n").getBytes("UTF-8"))
+      val parent = fresh.get(v - 1).orElse(oldText.linesIterator.collectFirst {
+        case l if l.startsWith("parentfile=") => l.stripPrefix("parentfile=") })
+      fresh(v) = writeAttempt(b, v, parent, body)
     }
-    // one CAS moves every retained version's identity at once; refs
-    // carry forward untouched (tag values are bare versions and branch
-    // values name BRANCH files — neither references main chain files)
-    if (!putIfChecked(Some(raw), renderValue((headV, newNames(headV)),
-        parseRefs(raw)), newNames(headV))) {
-      newNames.values.foreach(f => fs.delete(new Path(manifestDir, f), false))
+    if (!swapHead(b, seen, Some(from), (from._1, fresh(from._1)), fresh.values.toSeq))
       throw new SnapshotConflictException(
-        s"manifest rewrite at $manifestDir lost a race with a concurrent " +
-          "commit — purge requires a quiesced table; retry when no " +
-          "writer is in flight")
-    }
-    invalidateChains()
-    ordered.foreach(v => fs.delete(new Path(manifestDir, old(v)), false))
+        s"manifest rewrite of ${b.label(from._1)} at $manifestDir lost a race " +
+          "with a concurrent commit — purge requires a quiesced table; retry " +
+          "when no writer is in flight")
+    old.values.foreach(f => fs.delete(new Path(manifestDir, f), false))
+  }
+
+  override def delete(v: Int): Unit = {
+    chain(Branch.Main).get(v).foreach(f => fs.delete(new Path(manifestDir, f), false))
+    // main's head did not move, and a walk from it now stops at v:
+    // drop v and everything below it from the memo instead of
+    // re-walking the chain once per expired version
+    chains.get(Branch.Main).foreach { case (h, m) =>
+      chains += (Branch.Main -> (h, m.filter(_._1 > v))) }
   }
 
   /** The CAS pointer has no created-but-unflipped window: the CAS IS
@@ -682,14 +688,22 @@ private[write] class CasVersionPointer(fs: FileSystem,
 
   override def orphanManifests(): Seq[Path] = {
     if (!fs.exists(manifestDir)) return Seq.empty
-    val live = chain().values.toSet ++
-      branchList().flatMap(n => branchChain(n).values)
+    val live = (Branch.Main +: branchList().map(Branch.Named(_)))
+      .flatMap(chain(_).values).toSet
     fs.listStatus(manifestDir).map(_.getPath)
       .filter { p =>
         val n = p.getName
         (n.matches("v\\d+_[0-9a-f]{8}\\.txt") ||
           n.matches("bv_.*_\\d{5,}_[0-9a-f]{8}\\.txt")) && !live(n)
       }.toSeq
+  }
+
+  override def dropBranch(name: String): Unit = {
+    val b = Branch.Named(name)
+    val files = chain(b).values.toSeq
+    refDrop(branchRef(name))
+    files.foreach(f => fs.delete(new Path(manifestDir, f), false))
+    chains -= b
   }
 
   // ---- refs: lines of the pointer value, every mutation one CAS ----
@@ -760,139 +774,4 @@ private[write] class CasVersionPointer(fs: FileSystem,
 
   override def refList(): Seq[(String, String)] =
     store.get().map(parseRefs).getOrElse(Seq.empty)
-
-  // ---- branches: ref `branch/<name>` = "<bv>|<file>", attempt-unique
-  // chained manifests `bv_<name>_<bv>_<uuid>.txt` ----
-
-  private def branchRef(name: String) = s"branch/$name"
-
-  private def parseBranchVal(v: String): (Int, String) = {
-    val bar = v.indexOf('|')
-    require(bar > 0, s"malformed branch ref value: '$v'")
-    (v.substring(0, bar).toInt, v.substring(bar + 1))
-  }
-
-  override def branchHead(name: String): Option[Int] =
-    refGet(branchRef(name)).map(parseBranchVal(_)._1)
-
-  override def branchList(): Seq[String] =
-    refList().collect { case (n, _) if n.startsWith("branch/") =>
-      n.stripPrefix("branch/") }.sorted
-
-  /** The branch's bv → file map (memoized per ref value, same contract
-    * as the main chain's memo). */
-  private def branchChain(name: String): Map[Int, String] =
-    refGet(branchRef(name)) match {
-      case None => Map.empty
-      case Some(v) =>
-        branchChainCache.get(name) match {
-          case Some((cachedVal, m)) if cachedVal == v => m
-          case _ =>
-            val (bv, f) = parseBranchVal(v)
-            val m = chainFrom(bv, f)
-            branchChainCache += (name -> (v, m))
-            m
-        }
-    }
-
-  override def branchManifestPath(name: String, bv: Int): Path =
-    new Path(manifestDir, branchChain(name).getOrElse(bv,
-      throw new java.io.FileNotFoundException(
-        s"no retained manifest for branch '$name'@$bv under $manifestDir")))
-
-  override def branchVersions(name: String): Seq[Int] =
-    branchChain(name).keys.toSeq.sorted
-
-  override def publishBranch(name: String, bv: Int, content: Array[Byte]): Boolean = {
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
-      s"branch name must be [A-Za-z0-9_]+: '$name'")
-    val cur = refGet(branchRef(name)).map(parseBranchVal)
-    // same shape as publish(): the caller computed against head bv-1
-    if (cur.map(_._1).getOrElse(0) != bv - 1) return false
-    val fname = f"bv_${name}_$bv%05d" + "_" +
-      java.util.UUID.randomUUID.toString.take(8) + ".txt"
-    val chained = cur.map { case (_, pf) => s"parentfile=$pf\n" }
-      .getOrElse("").getBytes("UTF-8") ++ content
-    val out = fs.create(new Path(manifestDir, fname), false)
-    try out.write(chained) finally out.close()
-    // landed-check: the attempt file name is unique to this call, so
-    // its presence in the branch's chain proves OUR publish applied
-    val won =
-      try casRefs(_.collectFirst {
-          case (n, v) if n == branchRef(name) => v
-        }.exists { v =>
-          val (hv, hf) = parseBranchVal(v)
-          hf == fname || chainFrom(hv, hf).values.exists(_ == fname)
-        }) { refs =>
-        val now = refs.collectFirst { case (n, v) if n == branchRef(name) => v }
-          .map(parseBranchVal)
-        if (now != cur) None // the branch head moved: real race, lost
-        else {
-          // creating the branch adds a ref line; extending replaces one
-          if (now.isEmpty) requireRefCapacity(refs)
-          Some(
-            refs.filterNot(_._1 == branchRef(name)) :+
-              (branchRef(name) -> s"$bv|$fname"))
-        }
-      } catch { case e: Throwable =>
-        fs.delete(new Path(manifestDir, fname), false) // refused: no debris
-        throw e
-      }
-    if (!won) fs.delete(new Path(manifestDir, fname), false)
-    won
-  }
-
-  override def dropBranch(name: String): Unit = {
-    val files = branchChain(name).values.toSeq
-    refDrop(branchRef(name))
-    files.foreach(f => fs.delete(new Path(manifestDir, f), false))
-    branchChainCache -= name
-  }
-
-  override def rewriteBranchAll(name: String, contents: Map[Int, Array[Byte]]): Unit = {
-    val curVal = refGet(branchRef(name)).getOrElse(return)
-    val (headBv, _) = parseBranchVal(curVal)
-    val old = branchChain(name)
-    if (old.isEmpty) return
-    val ordered = old.keys.toSeq.sorted
-    def readFile(f: String): String = {
-      val in = fs.open(new Path(manifestDir, f))
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    val newNames = scala.collection.mutable.Map.empty[Int, String]
-    ordered.foreach { bv =>
-      val oldText = readFile(old(bv))
-      val body = contents.get(bv).map(new String(_, "UTF-8")).getOrElse(
-        oldText.linesIterator.filterNot(_.startsWith("parentfile="))
-          .mkString("", "\n", "\n"))
-      val parentLine = newNames.get(bv - 1) match {
-        case Some(pf) => s"parentfile=$pf\n"
-        case None => oldText.linesIterator
-          .find(_.startsWith("parentfile=")).map(_ + "\n").getOrElse("")
-      }
-      val fname = f"bv_${name}_$bv%05d" + "_" +
-        java.util.UUID.randomUUID.toString.take(8) + ".txt"
-      val out = fs.create(new Path(manifestDir, fname), false)
-      try out.write((parentLine + body).getBytes("UTF-8")) finally out.close()
-      newNames(bv) = fname
-    }
-    val won = casRefs(_.collectFirst {
-        case (n, v) if n == branchRef(name) => v
-      }.contains(s"$headBv|${newNames(headBv)}")) { refs =>
-      val now = refs.collectFirst { case (n, v) if n == branchRef(name) => v }
-      if (!now.contains(curVal)) None // branch moved mid-rewrite
-      else Some(refs.map { case (n, v) =>
-        if (n == branchRef(name)) (n, s"$headBv|${newNames(headBv)}") else (n, v)
-      })
-    }
-    if (!won) {
-      newNames.values.foreach(f => fs.delete(new Path(manifestDir, f), false))
-      throw new SnapshotConflictException(
-        s"branch '$name' manifest rewrite at $manifestDir lost a race — " +
-          "purge requires a quiesced table")
-    }
-    branchChainCache -= name
-    ordered.foreach(bv => fs.delete(new Path(manifestDir, old(bv)), false))
-  }
 }

@@ -117,4 +117,21 @@ class CommitPathSpec extends AnyFunSuite {
     assert(ListingCountingFs.opens(branchHead) - branchBefore == 1)
     assert(ListingCountingFs.opens(mainHead) - mainBefore == 1)
   }
+
+  test("one expire opens each retained manifest at most once") {
+    val root = freshRoot("expire_reads")
+    val t = ListingCountingFs.installed(spark)(new SnapshotTable(spark, root))
+    t.commitOverwrite(frame((1, 2024, 1, 10.0)))
+    (2 to 5).foreach(i => t.commitAppend(frame((i, 2024, i, i * 10.0))))
+    t.createBranch("b", 5)
+    t.commitAppendToBranch("b", frame((9, 2024, 9, 90.0)))
+    val manifests = (1 to 5).map(v => f"$root/_manifests/v$v%05d.txt") ++
+      (1 to 2).map(bv => f"$root/_manifests/bv_b_$bv%05d.txt")
+    val before = manifests.map(ListingCountingFs.opens)
+    t.expire(keepLast = 2, olderThanMs = 0L)
+    val opened = manifests.zip(before).map { case (m, b) => m -> (ListingCountingFs.opens(m) - b) }
+    assert(opened.forall(_._2 <= 1), s"manifests opened more than once: $opened")
+    assert(t.history.map(_._1) == Seq(4, 5))
+    assert(ids(t.readBranch("b")) == Set(1, 2, 3, 4, 5, 9))
+  }
 }

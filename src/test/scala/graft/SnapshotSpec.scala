@@ -1333,12 +1333,22 @@ class SnapshotSpec extends AnyFunSuite {
     // produce. Without the read-back check, the caller's retry would
     // land the same batch twice.
     val failNext = new java.util.concurrent.atomic.AtomicInteger(0)
+    // ...and, when armed, whose read-back right after such a put fails
+    // once too, so the outcome cannot be resolved
+    val failReadBack = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val readBackDown = new java.util.concurrent.atomic.AtomicBoolean(false)
     val store = new ConditionalStore {
-      override def get(): Option[String] = inner.get()
+      override def get(): Option[String] = {
+        if (readBackDown.getAndSet(false))
+          throw new RuntimeException("simulated: the read-back was lost too")
+        inner.get()
+      }
       override def putIf(expected: Option[String], value: String): Boolean = {
         val applied = inner.putIf(expected, value)
-        if (applied && failNext.getAndDecrement() > 0)
+        if (applied && failNext.getAndDecrement() > 0) {
+          readBackDown.set(failReadBack.getAndSet(false))
           throw new RuntimeException("simulated: committed, then the report was lost")
+        }
         applied
       }
     }
@@ -1363,6 +1373,17 @@ class SnapshotSpec extends AnyFunSuite {
     t.commitAppendToBranch("dev", frame((3, 2024, 3, 3.0)))
     assert(t.branchHead("dev").contains(2))
     assert(state(t.readBranch("dev")).map(_._1) == Set(1, 2, 3))
+    assert(t.fsck().isEmpty, s"fsck: ${t.fsck()}")
+    // a branch commit whose report AND read-back are both lost: the
+    // outcome is unknown, so the commit surfaces the failure — and the
+    // attempt manifest, which the branch ref now names, must stay
+    failNext.set(1)
+    failReadBack.set(true)
+    intercept[RuntimeException] {
+      t.commitAppendToBranch("dev", frame((4, 2024, 4, 4.0)))
+    }
+    assert(t.branchHead("dev").contains(3))
+    assert(state(t.readBranch("dev")).map(_._1) == Set(1, 2, 3, 4))
     assert(t.fsck().isEmpty, s"fsck: ${t.fsck()}")
   }
 
@@ -1436,6 +1457,13 @@ class SnapshotSpec extends AnyFunSuite {
       assert(graft.write.SnapshotTable.storedPartCols(spark, root, Some(store))
         .contains(Seq("year")))
     } finally GraftStores.unregister("memo_store")
+    // expire removes manifests without moving the head: no re-walk per
+    // expired version
+    val beforeExpire = t.chainWalkCount
+    t.expire(keepLast = 1, olderThanMs = 0L)
+    assert(t.history.map(_._1) == Seq(6))
+    assert(t.chainWalkCount == beforeExpire, "expire re-walked the chain")
+    assert(t.read().count() == 6)
   }
 
   test("row-count sidecars materialize lazily, exact across write shapes") {
@@ -1470,19 +1498,6 @@ class SnapshotSpec extends AnyFunSuite {
     // staged-then-published dirs
     t.publishStaged(t.stageAppend(frame((9002, 2024, 10, 1.0)), "rc"))
     assert(t.countFast.contains(502L))
-    // eager mode: the commit itself records the count
-    spark.conf.set("graft.rows.sidecar", "eager")
-    try {
-      t.commitAppend(frame((9003, 2024, 11, 2.0)))
-      val dEager = t.dataDirs(t.currentVersion.get).last
-      assert(fs(root).exists(new Path(root, s"_data/$dEager/_graft_rows")),
-        "eager mode must count at commit time")
-      // off mode: fresh dirs decline rather than compute
-      spark.conf.set("graft.rows.sidecar", "off")
-      t.commitAppend(frame((9004, 2024, 12, 3.0)))
-      assert(t.countFast.isEmpty, "off mode must not lazily compute")
-    } finally spark.conf.unset("graft.rows.sidecar")
-    assert(t.countFast.contains(504L), "back in lazy mode, the fill resumes")
   }
 
   test("fast-append retry refuses when the SAME op tag landed mid-race (zombie batch dedup)") {
@@ -1723,7 +1738,7 @@ class SnapshotSpec extends AnyFunSuite {
   test("underscore-prefix branch names coexist: daily vs daily_v2") {
     // branch manifests are name-prefixed files (bv_<name>_NNNNN.txt);
     // 'daily' is a string prefix of 'daily_v2', so a loose startsWith
-    // parse would hand branchVersions("daily") the token "v2_00001" and
+    // parse would hand branch "daily" the version token "v2_00001" and
     // crash every maintenance op on the table
     val t = new SnapshotTable(spark, freshRoot("snap_bpfx"))
     val v1 = t.commitOverwrite(frame((1, 2024, 1, 1.0)))
