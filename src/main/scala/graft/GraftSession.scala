@@ -11,8 +11,24 @@ import org.apache.spark.sql.SparkSession
   * same way), and shuffle partitions sized to the local core count rather
   * than Spark's default 200 (on a real cluster this would be
   * `executors * cores * 2-3`, with AQE coalescing the excess).
+  *
+  * Spark's generated-class cache is sized to the engine's working set
+  * ([[CodegenCacheEntries]]), so a plan repeated within a session is
+  * compiled once, not once per eviction. The conf is static: Spark reads
+  * it when the JVM's first generated class is compiled, so a harness
+  * that wants it builds its session through [[configure]]; [[tune]]
+  * cannot set it on a session built elsewhere.
   */
 object GraftSession {
+
+  /** Entries in Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). Measured with
+    * an unbounded cache, in distinct classes per session (Metaspace at
+    * the end, 4 cores): a seed-1 perfbench `table_query_mix` run
+    * compiles 207 (169 MB), an `etl_refresh` run 301 (165 MB), and a
+    * `graft.tools.Profile` pass over all 273 entries at sf0.01 3,235
+    * (244 MB). This covers the largest with about a quarter to spare. */
+  val CodegenCacheEntries: Int = 4096
 
   /** Apply graft's standard confs to an existing builder. */
   def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
@@ -26,6 +42,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   /** Local session: the one place a graft main or test builds a
     * session (the mains under `graft.tools`, Bench, Verify, the tests). */

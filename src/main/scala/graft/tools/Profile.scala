@@ -2,6 +2,7 @@ package graft.tools
 
 import scala.collection.mutable
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -19,6 +20,8 @@ import graft.{Bench, SparkEntry, TransientCache}
   *    overlapping jobs (a broadcast or subquery beside the scan) are
   *    counted once and the figure is never negative;
   *  - job count, task count and executor CPU;
+  *  - classes compiled by Janino and their compile time (a cache hit in
+  *    Spark's generated-class cache compiles nothing);
   *  - one line per job: start offset, duration, tasks, CPU, and the
   *    SQL execution (or call site) that ran it.
   * With `explain`, each entry's formatted plan is printed once, outside
@@ -32,8 +35,13 @@ object Profile {
   /** One job of a profiled run; times are the listener clock (ms). */
   final case class Job(site: String, start: Long, end: Long, tasks: Long, cpuNs: Long)
 
+  /** Classes compiled by Janino: the count is exact; their summed
+    * compile time `ms` is exact unless `approx`. */
+  final case class Compiles(count: Long, ms: Long, approx: Boolean)
+
   /** One profiled run of one entry (ms, listener clock). */
-  final case class Run(start: Long, wallMs: Long, unionMs: Long, jobs: Seq[Job]) {
+  final case class Run(start: Long, wallMs: Long, unionMs: Long, jobs: Seq[Job],
+                       compiles: Compiles) {
     def driverMs: Long = wallMs - unionMs
     def tasks: Long = jobs.map(_.tasks).sum
     def cpuNs: Long = jobs.map(_.cpuNs).sum
@@ -94,29 +102,47 @@ object Profile {
     }
 
     /** The run over [t0, t1); a job still open at t1 is cut there. */
-    def result(t0: Long, t1: Long): Run = synchronized {
+    def result(t0: Long, t1: Long, compiles: Compiles): Run = synchronized {
       val jobs = started.toSeq.sortBy(_._2._2).map { case (id, (site, s)) =>
         Job(site, s, ended.getOrElse(id, t1), tasks(id), cpu(id))
       }
       val clipped = jobs.map(j => (math.max(j.start, t0), math.min(j.end, t1)))
-      Run(t0, t1 - t0, unionLength(clipped), jobs)
+      Run(t0, t1 - t0, unionLength(clipped), jobs, compiles)
     }
   }
 
+  /** JVM-wide totals of Spark's codegen histogram, one sample (ms) per
+    * class compiled. Its count is exact; its reservoir keeps 1028
+    * samples, so the summed time is exact only while it holds them all. */
+  private def compilesSoFar(): Compiles = {
+    val h = CodegenMetrics.METRIC_COMPILATION_TIME
+    val n = h.getCount
+    val snap = h.getSnapshot
+    Compiles(n, snap.getValues.sum, approx = snap.size != n)
+  }
+
   /** `body` under a job recorder: its result, and the jobs it started
-    * (its own and any other thread's) with their times, tasks and CPU.
-    * Wall time and job intervals share the listener's clock, so the
-    * union can never exceed the wall. */
+    * (its own and any other thread's) with their times, tasks and CPU,
+    * plus the classes compiled meanwhile. Wall time and job intervals
+    * share the listener's clock, so the union can never exceed the
+    * wall. */
   def record[T](sc: SparkContext)(body: => T): (T, Run) = {
     ListenerBridge.drain(sc) // earlier work's events stay out
     val rec = new Recorder
     sc.addSparkListener(rec)
     try {
+      val c0 = compilesSoFar()
       val t0 = System.currentTimeMillis
       val out = body
       val t1 = System.currentTimeMillis
+      val c1 = compilesSoFar()
       ListenerBridge.drain(sc)
-      (out, rec.result(t0, t1))
+      val n = c1.count - c0.count
+      // past the reservoir, estimate from the mean of the samples it kept
+      val ms = if (c1.approx)
+        math.round(n * CodegenMetrics.METRIC_COMPILATION_TIME.getSnapshot.getMean)
+      else c1.ms - c0.ms
+      (out, rec.result(t0, t1, Compiles(n, ms, c1.approx)))
     } finally sc.removeSparkListener(rec)
   }
 
@@ -157,7 +183,8 @@ object Profile {
           println(f"[profile] $name rep $rep: wall ${s(r.wallMs)}%.3f s, " +
             f"jobs (union) ${s(r.unionMs)}%.3f s, driver outside jobs " +
             f"${s(r.driverMs)}%.3f s, ${r.jobs.size} jobs, ${r.tasks} tasks, " +
-            f"cpu ${r.cpuNs / 1e9}%.3f s")
+            f"cpu ${r.cpuNs / 1e9}%.3f s, ${r.compiles.count} classes compiled in " +
+            f"${if (r.compiles.approx) "~" else ""}${s(r.compiles.ms)}%.3f s")
           r.jobs.foreach { j =>
             println(f"[profile]   +${s(j.start - r.start)}%7.3f s ${s(j.end - j.start)}%7.3f s " +
               f"${j.tasks}%5d tasks cpu ${j.cpuNs / 1e9}%7.3f s  ${j.site}")

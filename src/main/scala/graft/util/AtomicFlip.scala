@@ -54,11 +54,11 @@ object AtomicFlip {
   /** Replace `dest`'s contents with `bytes` in one atomic step: a
     * concurrent reader sees either the old bytes or the new bytes in
     * full — never a half-written file, never a transiently-missing one.
-    * Creates `dest` (and its parent) if absent. */
+    * Creates `dest` (and its parent: `create` makes a missing parent)
+    * if absent. */
   def writeAtomic(fs: FileSystem, conf: Configuration, dest: Path,
                   bytes: Array[Byte]): Unit = {
     val rfs = raw(fs)
-    rfs.mkdirs(dest.getParent)
     val tmp = new Path(dest.getParent,
       s".${dest.getName}.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
     val out = rfs.create(tmp, true)
@@ -88,7 +88,6 @@ object AtomicFlip {
     * operations commit metadata files with. */
   def publishExclusive(fs: FileSystem, dest: Path, bytes: Array[Byte]): Boolean = {
     val rfs = raw(fs)
-    rfs.mkdirs(dest.getParent)
     val tmp = new Path(dest.getParent,
       s".${dest.getName}.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
     val out = rfs.create(tmp, true)

@@ -228,7 +228,6 @@ private[write] class FsVersionPointer(fs: FileSystem,
 
   override def publish(b: Branch, v: Int, content: Array[Byte]): Boolean = b match {
     case Branch.Main =>
-      fs.mkdirs(manifestDir)
       // recreated-slot guard (the Fs-mode analog of the conditional
       // store's recreated-generation guards): a count-based expire
       // DELETES old manifest files, freeing their names — a writer

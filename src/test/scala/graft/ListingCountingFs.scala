@@ -2,13 +2,18 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, LocalFileSystem, Path,
+  RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
-/** Driver-side `listStatus` calls, and driver-side `open`s by path,
-  * counted; executor tasks are left out. */
-class ListingCountingFs extends LocalFileSystem {
-  private def onDriver = !Thread.currentThread.getName.startsWith("Executor task launch")
+/** Driver-side `listStatus` calls, and driver-side `open`s and
+  * `mkdirs` by path, counted; executor tasks are left out. `mkdirs` is
+  * counted on the raw filesystem underneath, which sees the calls
+  * writers make through [[graft.util.AtomicFlip.raw]] and each
+  * `create`'s own parent `mkdirs`. */
+class ListingCountingFs extends LocalFileSystem(new ListingCountingFs.Raw) {
+  import ListingCountingFs.onDriver
 
   override def listStatus(f: Path): Array[FileStatus] = {
     if (onDriver) ListingCountingFs.lists.incrementAndGet()
@@ -16,8 +21,7 @@ class ListingCountingFs extends LocalFileSystem {
   }
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
-    if (onDriver) ListingCountingFs.opened
-      .computeIfAbsent(f.toUri.getPath, _ => new AtomicLong).incrementAndGet()
+    ListingCountingFs.count(ListingCountingFs.opened, f)
     super.open(f, bufferSize)
   }
 }
@@ -25,10 +29,26 @@ class ListingCountingFs extends LocalFileSystem {
 object ListingCountingFs {
   val lists = new AtomicLong
   private val opened = new ConcurrentHashMap[String, AtomicLong]
+  private val made = new ConcurrentHashMap[String, AtomicLong]
+
+  private def onDriver = !Thread.currentThread.getName.startsWith("Executor task launch")
+
+  private def count(byPath: ConcurrentHashMap[String, AtomicLong], f: Path): Unit =
+    if (onDriver) byPath.computeIfAbsent(f.toUri.getPath, _ => new AtomicLong).incrementAndGet()
+
+  private def countOf(byPath: ConcurrentHashMap[String, AtomicLong], path: String): Long =
+    Option(byPath.get(new Path(path).toUri.getPath)).fold(0L)(_.get)
+
+  class Raw extends RawLocalFileSystem {
+    override def mkdirs(f: Path): Boolean = { count(made, f); super.mkdirs(f) }
+    override def mkdirs(f: Path, p: FsPermission): Boolean = { count(made, f); super.mkdirs(f, p) }
+  }
 
   /** Driver-side opens of the file at `path` so far. */
-  def opens(path: String): Long =
-    Option(opened.get(new Path(path).toUri.getPath)).fold(0L)(_.get)
+  def opens(path: String): Long = countOf(opened, path)
+
+  /** Driver-side `mkdirs` of the directory at `path` so far. */
+  def mkdirs(path: String): Long = countOf(made, path)
 
   /** `body` run while every `file:` filesystem the session's Hadoop
     * configuration hands out is a fresh counting one (the FileSystem

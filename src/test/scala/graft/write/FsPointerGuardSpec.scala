@@ -169,4 +169,17 @@ class FsPointerGuardSpec extends AnyFunSuite {
     assert(vp.publish(dev, 1, bytes("b1-again")))
     assert(vp.head(dev).contains(1))
   }
+
+  test("an Fs commit makes _manifests only through the creates of its two temp files") {
+    val spark = graft.TestSpark.spark
+    import spark.implicits._
+    val root = s"${java.nio.file.Files.createTempDirectory("graft_mkdirs")}/tbl"
+    // the table's filesystem handle is made while counting is installed
+    val t = graft.ListingCountingFs.installed(spark)(new SnapshotTable(spark, root))
+    t.commitOverwrite(Seq((1, 2024, 1)).toDF("id", "year", "month"))
+    val before = graft.ListingCountingFs.mkdirs(s"$root/_manifests")
+    assert(t.commitAppend(Seq((2, 2024, 2)).toDF("id", "year", "month")) == 2)
+    // one per temp-file create, the manifest's and CURRENT's: `create` makes its parent
+    assert(graft.ListingCountingFs.mkdirs(s"$root/_manifests") - before == 2)
+  }
 }
